@@ -180,20 +180,4 @@ object Fs {
       buf.result()
     }
   }
-
-  def delete(path: String, recursive: Boolean = false): Boolean = {
-    val (fs, p) = apply(path)
-    fs.delete(p, recursive)
-  }
-
-  def rename(src: String, dst: String): Boolean = {
-    val (fs, s) = apply(src)
-    fs.rename(s, new Path(dst))
-  }
-
-  def mkdirs(path: String): Unit = {
-    val (fs, p) = apply(path)
-    fs.mkdirs(p)
-    ()
-  }
 }

@@ -1814,6 +1814,49 @@ object CdcTable {
     else gens.reduce(_ unionByName _)
   }
 
+  /** Z-ORDER clustering transform (reference `research.md:208`
+    * recommendation; Delta `OPTIMIZE … ZORDER BY`): returns `df`
+    * range-partitioned and sorted on the interleaved bits of the
+    * quantile-bucketed `cols`, so parquet min/max stats become
+    * selective on EVERY clustered column. Quantile bucketing
+    * (approxQuantile boundaries, computed distributively — NOT a
+    * global-window rank, which would funnel the table through one
+    * task) makes interleaving robust to skewed value distributions.
+    * `leading` columns (the Hive partition columns) range ahead of
+    * the z-value, so each task holds one partition range in z order
+    * before a partitioned write. Callers commit the result through a
+    * manifest: [[compactToCurrentState]], [[optimizeWhere]] and
+    * `GRAFT OPTIMIZE … ZORDER`. */
+  private[graft] def zorderFrame(df: DataFrame, cols: Seq[String],
+      nFiles: Int, leading: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions._
+    require(cols.nonEmpty && cols.size <= 4, "1..4 z-order columns")
+    val bits = 5 // 32 quantile buckets per column
+    val nb = 1 << bits
+    val probs = (1 until nb).map(_.toDouble / nb).toArray
+    // distributed quantile sketch per column → bucket boundaries
+    val ranked = cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
+      val bounds = df.stat.approxQuantile(c, probs, 0.001)
+      val boundsArr = bounds.map(b => s"CAST($b AS DOUBLE)")
+        .mkString("array(", ", ", ")")
+      // bucket = #boundaries ≤ value (linear scan over 31 boundaries).
+      // Lambda variable name must not collide with any data column —
+      // lambda vars shadow columns even when the column is backticked.
+      d.withColumn(s"_rank$i", expr(
+        s"aggregate($boundsArr, 0L, (__zacc, __zb) -> " +
+          s"__zacc + IF(CAST(`$c` AS DOUBLE) >= __zb, 1L, 0L))"))
+    }
+    // interleave bits: z = Σ_b Σ_i rank_i[b] << (b*n + i)
+    val n = cols.size
+    val zExpr = (0 until bits).flatMap(b => cols.indices.map(i =>
+      s"(((_rank$i >> $b) & 1) << ${b * n + i})")).mkString(" + ")
+    val order = leading.map(col) :+ col("_z")
+    ranked.withColumn("_z", expr(zExpr))
+      .repartitionByRange(nFiles, order: _*)
+      .sortWithinPartitions(order: _*)
+      .drop((cols.indices.map(i => s"_rank$i") :+ "_z"): _*)
+  }
+
   /** Upsert-mode compaction (the reference's declared `upsert` write
     * mode, `config.py:47`, which it never implements; SURVEY.md §7
     * step 5): collapse the append-only event log to its current state
@@ -1839,7 +1882,7 @@ object CdcTable {
       if (zorderCols.isEmpty) state
       // cluster WITHIN partitions so the partitioned write keeps files
       // contiguous in z within each partition (OPTIMIZE ZORDER shape)
-      else graft.maintain.Maintenance.zorderFrame(state, zorderCols,
+      else zorderFrame(state, zorderCols,
         if (numFiles > 0) numFiles
         else math.max(1, spark.sparkContext.defaultParallelism / 2),
         leading = partCols)
@@ -2633,8 +2676,7 @@ object CdcTable {
       math.max(1, spark.sparkContext.defaultParallelism / 4))
     val out =
       if (zorderCols.nonEmpty)
-        graft.maintain.Maintenance.zorderFrame(rewriteRows, zorderCols,
-          target)
+        zorderFrame(rewriteRows, zorderCols, target)
       else rewriteRows.coalesce(target)
     val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
     val writer = out.write.mode("overwrite")

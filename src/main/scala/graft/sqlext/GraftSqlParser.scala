@@ -509,7 +509,7 @@ case class OptimizeGraftTable(dir: String, zorderCols: Seq[String],
     val target = nFiles.getOrElse(spark.sparkContext.defaultParallelism)
     val df =
       if (zorderCols.nonEmpty)
-        graft.maintain.Maintenance.zorderFrame(df0, zorderCols, target)
+        CdcTable.zorderFrame(df0, zorderCols, target)
       else df0.coalesce(target)
     CdcTable.replaceWith(spark, dir, df, expectedLastCommit = Some(snap))
     val last = CdcTable.log(dir).last

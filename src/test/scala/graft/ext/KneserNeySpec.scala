@@ -146,7 +146,12 @@ class KneserNeySpec extends SparkSpec {
     }.toMap
   }
 
-  test("trigram KN: randomized cross-check against the BigInt reference") {
+  /** Trigram KN scores of a seeded random corpus (training docs plus
+    * held-out text with unseen tokens), with the BigInt reference's
+    * expectation for the same docs. */
+  private def trigramCrossCheck()
+      : (Map[Long, (Long, Long, Long, Long)],
+         Map[Long, (Long, Long, Long, Long)]) = {
     val rnd = new scala.util.Random(71)
     val vocab = Vector("a", "b", "c", "d", "e")
     def doc() = Seq.fill(rnd.nextInt(25) + 3)(
@@ -163,9 +168,33 @@ class KneserNeySpec extends SparkSpec {
       .select("id", "n_pos", "seen_tri", "bits_fp", "bpt_fp")
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-    val expect = bruteTri(train, scored)
+    (got, bruteTri(train, scored))
+  }
+
+  test("trigram KN: randomized cross-check against the BigInt reference") {
+    val (got, expect) = trigramCrossCheck()
     assert(got == expect,
       s"\n got=${got.toSeq.sortBy(_._1)}\n exp=${expect.toSeq.sortBy(_._1)}")
+  }
+
+  test("trigram KN: the pinned (localCheckpoint) branch scores identically") {
+    val key = "spark.graft.pin.minInputBytes"
+    val probe = df((1L, "a b c"))
+    assert(!TextAnalysis.pinWorthIt(probe), "default gate stays shut")
+    val (unpinned, _) = trigramCrossCheck()
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
+    try {
+      // the gate is open at 0 bytes, so the pinned branch runs
+      assert(TextAnalysis.pinWorthIt(probe))
+      val (got, expect) = trigramCrossCheck()
+      assert(got == expect,
+        s"\n got=${got.toSeq.sortBy(_._1)}\n exp=${expect.toSeq.sortBy(_._1)}")
+      assert(got == unpinned)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("incrementally-maintained counts serve KN identically") {

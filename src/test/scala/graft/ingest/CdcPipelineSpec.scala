@@ -182,6 +182,34 @@ class CdcPipelineSpec extends SparkSpec {
       s"z-ordered current state should bound per-file spans: $spans")
   }
 
+  test("z-ordered upsert compaction keeps a Hive-partitioned layout") {
+    val dir = tmpDir("cdczpart")
+    // three small appends over three partitions p=0,1,2
+    (0 until 3).foreach { k =>
+      CdcTable.append((0 until 200).map { j =>
+        val i = k * 200 + j
+        (s"r$i", i.toLong, (i * 2654435761L) % 600, i % 3, t0 + i, "insert")
+      }.toDF("_id", "a", "b", "p", "_cdc_timestamp", "_cdc_operation")
+        .repartition(4), dir, partitionBy = Seq("p"))
+    }
+    def perP() = CdcTable.read(spark, dir).groupBy("p").count()
+      .as[(Int, Long)].collect().toMap
+    val before = perP()
+    assert(before == Map(0 -> 200L, 1 -> 200L, 2 -> 200L))
+    CdcTable.compactToCurrentState(spark, dir,
+      zorderCols = Seq("a", "b"), numFiles = 4, partitionBy = Seq("p"))
+    val live = CdcTable.log(dir).last.files
+    live.foreach { f =>
+      val parts = f.split('/').filter(_.startsWith("p="))
+      assert(parts.length == 1, s"$f must sit under exactly one p= dir")
+    }
+    // the z-order ranges lead with p, so a range spans a partition
+    // boundary at most once per boundary: ≤ 4 + (3 - 1) files, where
+    // ranging on z alone would give every range all three (12 files)
+    assert(live.nonEmpty && live.size <= 6, live.toString)
+    assert(perP() == before)
+  }
+
   test("batch replay with same txn id is idempotent (T2)") {
     val base = tmpDir("cdctxn")
     val cfg = CdcIngest.Config(base, checkpointDir = tmpDir("ckpttxn"))

@@ -103,7 +103,7 @@ class FileStatsSpec extends SparkSpec {
     assert(rawScanned == 3, s"overlapping ranges can't skip: $rawScanned")
     // OPTIMIZE-style rewrite clustered on x → disjoint per-file ranges
     CdcTable.replaceWith(spark, dir,
-      graft.maintain.Maintenance.zorderFrame(
+      CdcTable.zorderFrame(
         CdcTable.read(spark, dir), Seq("x"), nFiles = 3),
       partitionBy = Nil)
     val zScanned = spark.read.format("graft").load(dir)
