@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions._
 
 /** Session extension registering graft's native Catalyst expressions.
-  * Activate with .config("spark.sql.extensions", "graft.GraftExtensions");
-  * queries fall back to equivalent built-in compositions when absent.
+  * Required: activate with
+  * .config("spark.sql.extensions", "graft.GraftExtensions"). Without it
+  * the text, LSH, top-k and digest paths fail at analysis with Spark's
+  * unresolved-routine error naming the missing function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

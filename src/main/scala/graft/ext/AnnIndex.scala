@@ -50,7 +50,7 @@ object AnnIndex {
       .filter(if (qbs.size == 1) col("bucket") === lit(qbs.head)
               else col("bucket").isin(qbs: _*))
       .select(col(idCol), col("bucket"),
-        (expr(Similarity.dotSql(spark, embCol, qe)) / lit(1e12))
+        (expr(Similarity.dotSql(embCol, qe)) / lit(1e12))
           .as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
@@ -95,7 +95,7 @@ object AnnIndex {
       })
     val scored = index.join(q, col("bucket") === col("qb"))
       .select(col("q_id"), col(idCol).cast("long").as("c_id"),
-        expr(Similarity.dotSql(index.sparkSession, embCol, "qe")).as("s"))
+        expr(Similarity.dotSql(embCol, "qe")).as("s"))
     Similarity.topkReduce(scored, k)
   }
 
@@ -132,7 +132,7 @@ object AnnIndex {
       centroids: Seq[(Long, Array[Float])],
       embCol: String = "embedding"): Unit =
     df.withColumn("cid",
-        Similarity.ivfAssignLit(df.sparkSession, embCol, centroids))
+        Similarity.ivfAssignLit(embCol, centroids))
       .write.mode("overwrite").partitionBy("cid").parquet(dir)
 
   /** Train-then-write IVF: Lloyd's k-means ([[Similarity.kmeansFit]])
@@ -157,7 +157,7 @@ object AnnIndex {
       centroids: Seq[(Long, Array[Float])],
       embCol: String = "embedding"): Unit =
     df.withColumn("cid",
-        Similarity.ivfAssignLit(df.sparkSession, embCol, centroids))
+        Similarity.ivfAssignLit(embCol, centroids))
       .write.mode("append").partitionBy("cid").parquet(dir)
 
   /** Top-k probe of the query's own cluster only (literal cluster id →
@@ -173,9 +173,8 @@ object AnnIndex {
       centroids: Seq[(Long, Array[Float])],
       books: IndexedSeq[IndexedSeq[Array[Float]]],
       idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    val s = df.sparkSession
-    df.withColumn("cid", Similarity.ivfAssignLit(s, embCol, centroids))
-      .withColumn("codes", Similarity.pqEncodeLit(s, embCol, books))
+    df.withColumn("cid", Similarity.ivfAssignLit(embCol, centroids))
+      .withColumn("codes", Similarity.pqEncodeLit(embCol, books))
       .select(col(idCol), col("codes"), col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(dir)
   }
@@ -211,7 +210,7 @@ object AnnIndex {
       .filter(if (qcids.size == 1) col("cid") === lit(qcids.head)
               else col("cid").isin(qcids: _*))
       .select(col(idCol), col("cid"),
-        (expr(Similarity.dotSql(spark, embCol, qe)) / lit(1e12))
+        (expr(Similarity.dotSql(embCol, qe)) / lit(1e12))
           .as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)

@@ -61,19 +61,8 @@ object Classifier {
     // bias feature to the same array replaces the former
     // `.union(base)` second scan — one scan, zero shuffles, the same
     // (id, fid) set.
-    val fids =
-      if (df.sparkSession.catalog.functionExists("lm_feature_ids"))
-        expr(s"array_distinct(transform(" +
-          s"lm_feature_ids(__text, $buckets), p -> p.bfid))")
-      else expr(
-        s"""array_distinct(transform(
-           |  CASE WHEN size(split(trim(__text), '\\\\s+')) >= 2 THEN
-           |    sequence(0, size(split(trim(__text), '\\\\s+')) - 2)
-           |  ELSE CAST(array() AS ARRAY<INT>) END,
-           |  i -> CAST(conv(substring(md5(concat(
-           |      split(trim(__text), '\\\\s+')[i], ' ',
-           |      split(trim(__text), '\\\\s+')[i+1])), 1, 7), 16, 10)
-           |    AS BIGINT) % $buckets))""".stripMargin)
+    val fids = expr(s"array_distinct(transform(" +
+      s"lm_feature_ids(__text, $buckets), p -> p.bfid))")
     base.select(col("id"),
       explode(concat(
         coalesce(fids, expr("CAST(array() AS ARRAY<BIGINT>)")),

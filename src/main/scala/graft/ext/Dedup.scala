@@ -1810,12 +1810,6 @@ object Dedup {
       .select(col("id"), col("blk"),
         expr("array_distinct(transform(pfs, x -> x.fp))").as("sids"))
 
-  /** (id, pfs: array<struct<pos,fp>>) — the codegen'd `winnow_fps`
-    * native when GraftExtensions is active (hashing + the monotonic-
-    * deque window argmin in ONE JVM pass, O(ng) per doc), else the
-    * staged HOF composition (bit-identical selection; correctness
-    * fallback only — optimizer re-inlining re-evaluates the hash
-    * array per element reference, quadratic per document). */
   /** INCREMENTAL MOSS overlap — [[winnowFingerprints]]' winnowed
     * fingerprints as a living graft-table index (the freshness story
     * the exact/band/vector/lexical indexes already have): each batch
@@ -2025,37 +2019,18 @@ object Dedup {
       }
       .start()
 
+  /** (id, pfs: array<struct<pos,fp>>) — the codegen'd `winnow_fps`
+    * native (hashing + the monotonic-deque window argmin in ONE JVM
+    * pass, O(ng) per doc). */
   private def winnowStage(df: DataFrame, idCol: String,
       textCol: String, k: Int, w: Int,
       blockCol: Option[String] = None): DataFrame = {
     require(k >= 1, s"k-gram width must be >= 1: $k")
     require(w >= 1, s"window must be >= 1: $w")
     val blk = blockCol.map(c => col(c)).getOrElse(lit(0)).as("blk")
-    if (df.sparkSession.catalog.functionExists("winnow_fps"))
-      df.select(col(idCol).as("id"), blk,
-          expr(s"winnow_fps(`$textCol`, $k, $w)").as("pfs"))
-        .filter(size(col("pfs")) >= 1)
-    else df.select(col(idCol).as("id"), blk,
-        split(trim(coalesce(col(textCol), lit(""))), "\\s+")
-          .as("toks"))
-      .withColumn("ng", expr(s"size(toks) - ${k - 1}"))
-      .filter(col("ng") >= 1)
-      .withColumn("hs", expr(
-        s"""transform(sequence(1, ng), i ->
-           |  CAST(conv(substring(md5(concat_ws(' ',
-           |    slice(toks, i, $k))), 1, 14), 16, 10) AS BIGINT))"""
-          .stripMargin))
-      .withColumn("ww", least(lit(w), col("ng")))
-      // rightmost minimum per window: position from the right via
-      // array_position over the reversed window, then j + ww - r
-      .withColumn("sel", expr(
-        """array_distinct(transform(sequence(1, ng - ww + 1), j ->
-          |  CAST(j + ww - array_position(reverse(slice(hs, j, ww)),
-          |    array_min(slice(hs, j, ww))) AS INT)))""".stripMargin))
-      .withColumn("pfs", expr(
-        "transform(sel, p -> named_struct('pos', p, 'fp', " +
-          "element_at(hs, p)))"))
-      .select(col("id"), col("blk"), col("pfs"))
+    df.select(col(idCol).as("id"), blk,
+        expr(s"winnow_fps(`$textCol`, $k, $w)").as("pfs"))
+      .filter(size(col("pfs")) >= 1)
   }
 
   /** Embedding-space near-dup dedup: cosine pairs above threshold

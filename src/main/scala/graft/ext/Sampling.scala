@@ -277,23 +277,14 @@ object Sampling {
   def sampleExactK(df: DataFrame, stratumCol: String, keyCol: String,
       k: Int): DataFrame = {
     require(k > 0, s"k must be > 0: $k")
-    val spark = df.sparkSession
-    val keyed = df.select(col(stratumCol).as("stratum"),
-      col(keyCol).cast("long").as("id"),
-      stableBucket(keyCol, 1000000).as("bucket"))
-    if (spark.catalog.functionExists("topk_by"))
-      keyed.groupBy("stratum")
-        .agg(expr(s"topk_by(bucket, id, $k)").as("tk"))
-        .select(col("stratum"), explode(col("tk")).as("e"))
-        .select(col("stratum"), col("e.id").as("id"),
-          col("e.score").as("bucket"))
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("stratum").orderBy(col("bucket").desc, col("id").asc)
-      keyed.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k)
-        .select(col("stratum"), col("id"), col("bucket"))
-    }
+    df.select(col(stratumCol).as("stratum"),
+        col(keyCol).cast("long").as("id"),
+        stableBucket(keyCol, 1000000).as("bucket"))
+      .groupBy("stratum")
+      .agg(expr(s"topk_by(bucket, id, $k)").as("tk"))
+      .select(col("stratum"), explode(col("tk")).as("e"))
+      .select(col("stratum"), col("e.id").as("id"),
+        col("e.score").as("bucket"))
   }
 
   /** Per-stratum score CALIBRATION — rank-normalize an integral
@@ -536,12 +527,6 @@ object Sampling {
   def weightedSampleK(df: DataFrame, keyCol: String, weightCol: String,
       k: Int): DataFrame = {
     require(k > 0, s"sample size must be positive: $k")
-    def lg(c: Column): Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     val maxLg = 28L << 16 // fixed_log2(2^28), the u28 domain top
     // µ-scaled fixed-point weight: filter on the POST-ROUND value the
     // div below actually uses — a weight that rounds to 0 must be
@@ -552,7 +537,7 @@ object Sampling {
       .withColumn("__u28", expr(
         "CAST(conv(substring(md5(CAST(`" + keyCol +
           "` AS STRING)), 1, 7), 16, 10) AS BIGINT) + 1"))
-      .withColumn("__lg", lg(col("__u28")))
+      .withColumn("__lg", TextAnalysis.fixedLog2(col("__u28")))
       .withColumn("ares_fp", expr(
         s"($maxLg - __lg) * 1000000 * 1000000 div ($wFp)"))
       .orderBy(col("ares_fp").asc,

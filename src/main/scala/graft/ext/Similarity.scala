@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** Similarity-search library over an `Array[Float]` embedding column —
   * the reusable faces of the oracle-checked q36–q39: exact cosine
   * top-k, near-dup pairs, hyperplane-LSH bucketing and IVF
-  * assignment/search. Uses the codegen'd `fixed_dot` / `lsh_bucket`
-  * expressions when GraftExtensions is active, else the built-in
-  * compositions.
+  * assignment/search. Built on the codegen'd `fixed_dot` /
+  * `lsh_bucket` / `topk_by` expressions (requires GraftExtensions).
   *
   * Scale: top-k is a broadcast + single scan (TakeOrdered); the
   * default near-dup pair path is LSH-band-blocked (candidates share at
@@ -20,18 +19,11 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Fixed-point dot SQL over two array-typed SQL fragments (column
-    * names or literals): native codegen'd expression when
-    * GraftExtensions is active, else the bit-identical composition. */
-  private[graft] def dotSql(spark: org.apache.spark.sql.SparkSession,
-      a: String, b: String): String =
-    if (spark.catalog.functionExists("fixed_dot")) s"fixed_dot($a, $b)"
-    else
-      s"""aggregate(zip_with($a, $b, (x, y) ->
-         |  CAST(ROUND(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * 1e12)
-         |    AS BIGINT)), 0L, (acc, v) -> acc + v)""".stripMargin
+    * names or literals): the native codegen'd `fixed_dot`. */
+  private[graft] def dotSql(a: String, b: String): String =
+    s"fixed_dot($a, $b)"
 
-  private def dotExpr(df: DataFrame, a: String, b: String): Column =
-    expr(dotSql(df.sparkSession, a, b))
+  private def dotExpr(a: String, b: String): Column = expr(dotSql(a, b))
 
   /** SQL literal for a float array. String-cast per element: Java's
     * shortest-repr Float.toString round-trips exactly through
@@ -45,7 +37,7 @@ object Similarity {
   def withCosine(df: DataFrame, queryDf: DataFrame,
       embCol: String = "embedding"): DataFrame =
     df.crossJoin(broadcast(queryDf))
-      .withColumn("cos_sim", dotExpr(df, embCol, "qe") / lit(1e12))
+      .withColumn("cos_sim", dotExpr(embCol, "qe") / lit(1e12))
 
   /** Exact top-k by cosine against the embedding of `queryId`. */
   def cosineTopK(df: DataFrame, idCol: String, queryId: Long, k: Int,
@@ -72,7 +64,7 @@ object Similarity {
     * is the correctness baseline and the eval-set shape (|Q| small),
     * not the 100 TB-to-100 TB path — that is [[knnJoinLsh]].
     * Output: (q_id, c_id, rnk 1..k, cos_sim), deterministic (ties by
-    * c_id ASC). Falls back to a window rank without GraftExtensions. */
+    * c_id ASC). */
   def knnJoinBrute(queries: DataFrame, corpus: DataFrame,
       qIdCol: String, cIdCol: String, k: Int,
       embCol: String = "embedding", excludeSelf: Boolean = false): DataFrame = {
@@ -87,7 +79,7 @@ object Similarity {
     val kept = if (excludeSelf) pairs.filter(col("c_id") =!= col("q_id"))
       else pairs
     topkReduce(kept.select(col("q_id"), col("c_id"),
-      dotExpr(corpus, "ce", "qe").as("s")), k)
+      dotExpr("ce", "qe").as("s")), k)
   }
 
   /** Hard-negative mining — the contrastive-training companion of
@@ -109,7 +101,7 @@ object Similarity {
     topkReduce(c.crossJoin(q)
       .filter(col("c_lab") =!= col("q_lab"))
       .select(col("q_id"), col("c_id"),
-        dotExpr(corpus, "ce", "qe").as("s")), k)
+        dotExpr("ce", "qe").as("s")), k)
   }
 
   /** k-NN label propagation — the weak-labeling / label-transfer op
@@ -221,11 +213,10 @@ object Similarity {
       qIdCol: String, cIdCol: String, k: Int,
       books: IndexedSeq[IndexedSeq[Array[Float]]],
       embCol: String = "embedding"): DataFrame = {
-    val spark = queries.sparkSession
     val q0 = queries.select(col(qIdCol).cast("long").as("q_id"),
       col(embCol).as("qe"))
     val q = broadcast(q0
-      .withColumn("luts", pqLutLit(spark, "qe", books)).drop("qe"))
+      .withColumn("luts", pqLutLit("qe", books)).drop("qe"))
     // materialize the encoded corpus (m longs + id per row — this IS
     // the PQ index; [[graft.ext.AnnIndex.writeIvfPq]] is its
     // persistent form). Structural, not just a cache: the encode's
@@ -236,7 +227,7 @@ object Similarity {
     // vs 1 s for a 481k-pair join at sf0.1). The stage cut keeps the
     // hot loop in its own small, JIT-compiled method.
     val c = corpus.select(col(cIdCol).cast("long").as("c_id"),
-      pqEncodeLit(spark, embCol, books).as("codes"))
+      pqEncodeLit(embCol, books).as("codes"))
       .localCheckpoint()
     topkReduce(c.crossJoin(q).select(col("q_id"), col("c_id"),
       pqAdcCols("codes", "luts", books.length).as("s")), k)
@@ -261,16 +252,16 @@ object Similarity {
     val p = if (planes > 0) planes else autoPlanes(corpus.count())
     val q0 = queries.select(col(qIdCol).cast("long").as("q_id"),
       col(embCol).as("qe"))
-    val q = broadcast(q0.withColumn("qb", bucketFor(q0, "qe", p, 0)))
+    val q = broadcast(q0.withColumn("qb", bucketFor("qe", p, 0)))
     val c0 = corpus.select(col(cIdCol).cast("long").as("c_id"),
       col(embCol).as("ce"))
-    val c = c0.withColumn("cb", bucketFor(c0, "ce", p, 0))
+    val c = c0.withColumn("cb", bucketFor("ce", p, 0))
     val cond =
       if (excludeSelf) col("cb") === col("qb") && col("c_id") =!= col("q_id")
       else col("cb") === col("qb")
     topkReduce(c.join(q, cond)
       .select(col("q_id"), col("c_id"),
-        dotExpr(corpus, "ce", "qe").as("s")), k)
+        dotExpr("ce", "qe").as("s")), k)
   }
 
   /** LSH-blocked [[hardNegatives]] — the 100 TB configuration: both
@@ -287,14 +278,14 @@ object Similarity {
     val p = if (planes > 0) planes else autoPlanes(corpus.count())
     val q0 = queries.select(col(qIdCol).cast("long").as("q_id"),
       col(labelCol).as("q_lab"), col(embCol).as("qe"))
-    val q = broadcast(q0.withColumn("qb", bucketFor(q0, "qe", p, 0)))
+    val q = broadcast(q0.withColumn("qb", bucketFor("qe", p, 0)))
     val c0 = corpus.select(col(cIdCol).cast("long").as("c_id"),
       col(labelCol).as("c_lab"), col(embCol).as("ce"))
-    val c = c0.withColumn("cb", bucketFor(c0, "ce", p, 0))
+    val c = c0.withColumn("cb", bucketFor("ce", p, 0))
     topkReduce(c.join(q, col("cb") === col("qb") &&
         col("c_lab") =!= col("q_lab"))
       .select(col("q_id"), col("c_id"),
-        dotExpr(corpus, "ce", "qe").as("s")), k)
+        dotExpr("ce", "qe").as("s")), k)
   }
 
   /** IVF-blocked k-NN join — cluster-partitioned retrieval: both
@@ -312,7 +303,6 @@ object Similarity {
       qIdCol: String, cIdCol: String, k: Int,
       centroids: IndexedSeq[(Long, Array[Float])],
       embCol: String = "embedding", nprobe: Int = 1): DataFrame = {
-    val s = corpus.sparkSession
     val q0 = queries.select(col(qIdCol).cast("long").as("q_id"),
       col(embCol).as("qe"))
     // nprobe > 1: each query probes its n nearest clusters (FAISS's
@@ -320,57 +310,42 @@ object Similarity {
     // corpus side is untouched
     val q = broadcast(
       if (nprobe == 1)
-        q0.withColumn("qc", ivfAssignLit(s, "qe", centroids))
+        q0.withColumn("qc", ivfAssignLit("qe", centroids))
       else
         q0.withColumn("qc",
-          explode(ivfAssignTopNLit(s, "qe", centroids, nprobe))))
+          explode(ivfAssignTopNLit("qe", centroids, nprobe))))
     val c0 = corpus.select(col(cIdCol).cast("long").as("c_id"),
       col(embCol).as("ce"))
-    val c = c0.withColumn("cc", ivfAssignLit(s, "ce", centroids))
+    val c = c0.withColumn("cc", ivfAssignLit("ce", centroids))
     topkReduce(c.join(q, col("cc") === col("qc"))
       .select(col("q_id"), col("c_id"),
-        dotExpr(corpus, "ce", "qe").as("s")), k)
+        dotExpr("ce", "qe").as("s")), k)
   }
 
   /** (q_id, c_id, s fixed-point) → (q_id, c_id, rnk, cos_sim,
     * score_fp): native k-bounded `topk_by` aggregate + posexplode
-    * when GraftExtensions is active, else the equivalent (but
-    * full-shuffle) window rank. `score_fp` carries the EXACT
+    * (no full-shuffle window rank). `score_fp` carries the EXACT
     * fixed-point score (cos_sim is its /1e12 double view) — exact
     * consumers (e.g. similarity-weighted PageRank) must use it, not
     * a round-trip through the double.
     * (`private[graft]`: [[AnnIndex.knnJoinBucketed]] shares it.) */
   private[graft] def topkReduce(scored: DataFrame, k: Int): DataFrame =
-    if (scored.sparkSession.catalog.functionExists("topk_by"))
-      scored.groupBy("q_id")
-        .agg(expr(s"topk_by(s, c_id, $k)").as("tk"))
-        .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "e")))
-        .select(col("q_id"), col("e.id").as("c_id"),
-          (col("p") + 1).cast("long").as("rnk"),
-          (col("e.score") / lit(1e12)).as("cos_sim"),
-          col("e.score").as("score_fp"))
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("s").desc, col("c_id"))
-      scored.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= k)
-        .select(col("q_id"), col("c_id"), col("rnk"),
-          (col("s") / lit(1e12)).as("cos_sim"),
-          col("s").as("score_fp"))
-    }
+    scored.groupBy("q_id")
+      .agg(expr(s"topk_by(s, c_id, $k)").as("tk"))
+      .select(col("q_id"), posexplode(col("tk")).as(Seq("p", "e")))
+      .select(col("q_id"), col("e.id").as("c_id"),
+        (col("p") + 1).cast("long").as("rnk"),
+        (col("e.score") / lit(1e12)).as("cos_sim"),
+        col("e.score").as("score_fp"))
 
   /** Deterministic hyperplane-LSH bucket id over `planes` integer
-    * hyperplanes starting at plane family `offset` (2^planes buckets).
-    * Codegen'd native expression under GraftExtensions; interpreted
-    * HOF composition otherwise (bit-identical results). Bands of
+    * hyperplanes starting at plane family `offset` (2^planes buckets),
+    * via the codegen'd native `lsh_bucket` expression. Bands of
     * independent planes come from the same function:
     * band b of width w = `lshBucket(emb, w, b*w)`. */
   def lshBucket(embCol: String = "embedding", planes: Int = 4,
-      offset: Int = 0): Column = {
-    val native = org.apache.spark.sql.SparkSession.active
-      .catalog.functionExists("lsh_bucket")
-    expr(lshBucketSql(embCol, planes, offset, native))
-  }
+      offset: Int = 0): Column =
+    expr(lshBucketSql(embCol, planes, offset))
 
   /** Per-plane SIGNED margins of the bucket arithmetic — the raw
     * fixed-point dot of `vec` with each hyperplane. The bucket is the
@@ -463,23 +438,12 @@ object Similarity {
   }
 
   private[graft] def lshBucketSql(embCol: String, planes: Int,
-      offset: Int, native: Boolean): String =
-    if (native) s"lsh_bucket($embCol, $planes, $offset)"
-    else
-      s"""aggregate(sequence(0, ${planes - 1}), 0L, (acc, j) -> acc +
-         |  IF(aggregate(zip_with($embCol,
-         |       sequence(0, size($embCol) - 1),
-         |       (x, i) -> CAST(ROUND(CAST(x AS DOUBLE) * 1e7) AS BIGINT)
-         |         * (pmod(i * 31 + (j + $offset) * 17,
-         |              ${graft.functions.LshBucket.PlaneMod}) -
-         |            ${graft.functions.LshBucket.PlaneMod / 2})),
-         |       0L, (a2, v) -> a2 + v) > 0,
-         |     shiftleft(1L, CAST(j AS INT)), 0L))""".stripMargin
+      offset: Int): String =
+    s"lsh_bucket($embCol, $planes, $offset)"
 
-  private def bucketFor(df: DataFrame, embCol: String, planes: Int,
+  private def bucketFor(embCol: String, planes: Int,
       offset: Int): Column =
-    expr(lshBucketSql(embCol, planes, offset,
-      native = df.sparkSession.catalog.functionExists("lsh_bucket")))
+    expr(lshBucketSql(embCol, planes, offset))
 
   /** Near-dup pairs with cosine ≥ threshold — LSH-bucket-blocked (the
     * default, scale-safe path): rows hash into 2^planes buckets and
@@ -519,13 +483,13 @@ object Similarity {
     val verified =
       if (bands == 1) {
         // single bucket family: each pair appears at most once
-        val bk = hashed.withColumn("bval", bucketFor(hashed, "e", p, 0))
+        val bk = hashed.withColumn("bval", bucketFor("e", p, 0))
         val a = bk.select(col("id").as("a_id"), col("e").as("ea"),
           col("bval"))
         val b = bk.select(col("id").as("b_id"), col("e").as("eb"),
           col("bval").as("bbval"))
         a.join(b, col("bval") === col("bbval") && col("a_id") < col("b_id"))
-          .withColumn("cos_sim", dotExpr(df, "ea", "eb") / lit(1e12))
+          .withColumn("cos_sim", dotExpr("ea", "eb") / lit(1e12))
           .filter(col("cos_sim") >= threshold)
       } else {
         // OR over bands: explode the band index, join on (band, bval),
@@ -533,14 +497,14 @@ object Similarity {
         // not the embedding arrays)
         val banded = hashed
           .withColumn("band", explode(expr(s"sequence(0, ${bands - 1})")))
-          .withColumn("bval", bucketsByBand(hashed, "e", bands, p))
+          .withColumn("bval", bucketsByBand("e", bands, p))
         val a = banded.select(col("id").as("a_id"), col("e").as("ea"),
           col("band"), col("bval"))
         val b = banded.select(col("id").as("b_id"), col("e").as("eb"),
           col("band").as("bband"), col("bval").as("bbval"))
         a.join(b, col("band") === col("bband") &&
             col("bval") === col("bbval") && col("a_id") < col("b_id"))
-          .withColumn("cos_sim", dotExpr(df, "ea", "eb") / lit(1e12))
+          .withColumn("cos_sim", dotExpr("ea", "eb") / lit(1e12))
           .filter(col("cos_sim") >= threshold)
           .select(col("a_id"), col("b_id"), col("cos_sim"))
           .distinct() // a pair may collide in several bands
@@ -548,13 +512,12 @@ object Similarity {
     verified.select(col("a_id"), col("b_id"), col("cos_sim"))
   }
 
-  private def bucketsByBand(df: DataFrame, embCol: String, bands: Int,
+  private def bucketsByBand(embCol: String, bands: Int,
       rowsPerBand: Int): Column = {
-    val native = df.sparkSession.catalog.functionExists("lsh_bucket")
     // band is a column, so fold the per-band expressions into a CASE
     val cases = (0 until bands).map { b =>
       s"WHEN band = $b THEN (${
-        lshBucketSql(embCol, rowsPerBand, b * rowsPerBand, native)})"
+        lshBucketSql(embCol, rowsPerBand, b * rowsPerBand)})"
     }.mkString(" ")
     expr(s"CASE $cases END")
   }
@@ -742,7 +705,7 @@ object Similarity {
     // records that width per row (observability + legacy adoption)
     val batchRows = BandOffsets.zipWithIndex
       .foldLeft(hashed) { case (df, (off, i)) =>
-        df.withColumn(bandCol(i), bucketFor(hashed, "e",
+        df.withColumn(bandCol(i), bucketFor("e",
           StoredPlanes, off))
       }
       .withColumn("planes", lit(StoredPlanes))
@@ -827,7 +790,7 @@ object Similarity {
           col("bkey")),
         Seq("band", "bkey"))
       .filter(col("l_id") =!= col("r_id"))
-      .withColumn("cos_sim", dotExpr(batch, "le", "re") / lit(1e12))
+      .withColumn("cos_sim", dotExpr("le", "re") / lit(1e12))
       .filter(col("cos_sim") >= threshold)
       .select(least(col("l_id"), col("r_id")).as("a_id"),
         greatest(col("l_id"), col("r_id")).as("b_id"), col("cos_sim"))
@@ -926,11 +889,10 @@ object Similarity {
   def semDedup(df: DataFrame, idCol: String, threshold: Double,
       cents: Seq[(Long, Array[Float])], embCol: String = "embedding")
   : DataFrame = {
-    val spark = df.sparkSession
     val assigned = df.filter(col(embCol).isNotNull)
       .select(col(idCol).as("id"), col(embCol).as("e"))
-      .withColumn("cid", ivfAssignLit(spark, "e", cents))
-      .withColumn("cdot", ivfAssignDotLit(spark, "e", cents))
+      .withColumn("cid", ivfAssignLit("e", cents))
+      .withColumn("cdot", ivfAssignDotLit("e", cents))
     semResolve(assigned, threshold)
   }
 
@@ -951,7 +913,7 @@ object Similarity {
     val assigned = df.filter(col(embCol).isNotNull)
       .select(col(idCol).as("id"), col(embCol).as("e"))
       .crossJoin(broadcast(centsDf.select(col("cid"), col("ce"))))
-      .withColumn("d", dotExpr(df, "e", "ce"))
+      .withColumn("d", dotExpr("e", "ce"))
       .groupBy(col("id"))
       .agg(max(struct(col("d").as("d"), (-col("cid")).as("nc")))
           .as("best"),
@@ -973,7 +935,7 @@ object Similarity {
       col("cid").as("bcid"))
     val pairs = a
       .join(b, col("cid") === col("bcid") && col("a_id") < col("b_id"))
-      .filter(dotExpr(assigned, "ea", "eb") / lit(1e12) >= threshold)
+      .filter(dotExpr("ea", "eb") / lit(1e12) >= threshold)
       .select(col("a_id"), col("b_id"))
     val comps = Dedup.connectedComponents(spark, pairs)
     val w = org.apache.spark.sql.expressions.Window
@@ -1031,7 +993,7 @@ object Similarity {
     require(cents.nonEmpty, "need at least one centroid")
     val r = semDedupIncrementalCore(batch, idCol, threshold,
       df => df.withColumn("cid",
-        ivfAssignLit(batch.sparkSession, "e", cents)),
+        ivfAssignLit("e", cents)),
       indexDir, embCol, txn, maxBatchRows)
     appendKept(r, indexDir, txn)
     r.pairs
@@ -1057,7 +1019,7 @@ object Similarity {
     val r = semDedupIncrementalCore(batch, idCol, threshold,
       df => df
         .crossJoin(broadcast(centsDf.select(col("cid"), col("ce"))))
-        .withColumn("d", dotExpr(df, "e", "ce"))
+        .withColumn("d", dotExpr("e", "ce"))
         .groupBy(col("id"))
         .agg(max(struct(col("d").as("d"), (-col("cid")).as("nc")))
             .as("best"),
@@ -1117,7 +1079,7 @@ object Similarity {
       .select(col("id").as("b_id"), col("e").as("eb"), col("cid"))
       .join(hist.unionByName(earlier), Seq("cid"))
       .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", dotExpr(batch, "ea", "eb") / lit(1e12))
+      .withColumn("cos_sim", dotExpr("ea", "eb") / lit(1e12))
       .filter(col("cos_sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
       .distinct() // a replayed batch's kept rows sit in BOTH legs
@@ -1143,7 +1105,7 @@ object Similarity {
     require(cents.nonEmpty, "need at least one centroid")
     semDedupStreamGlue(stream, idCol,
       df => df.withColumn("cid",
-        ivfAssignLit(stream.sparkSession, "e", cents)),
+        ivfAssignLit("e", cents)),
       indexDir, outDir, checkpointDir, threshold, embCol, appId,
       maxBatchRows)
   }
@@ -1165,7 +1127,7 @@ object Similarity {
     semDedupStreamGlue(stream, idCol,
       df => df
         .crossJoin(broadcast(centsDf.select(col("cid"), col("ce"))))
-        .withColumn("d", dotExpr(df, "e", "ce"))
+        .withColumn("d", dotExpr("e", "ce"))
         .groupBy(col("id"))
         .agg(max(struct(col("d").as("d"), (-col("cid")).as("nc")))
             .as("best"),
@@ -1211,7 +1173,7 @@ object Similarity {
       .repartition(n)
     val b = df.select(col(idCol).as("b_id"), col(embCol).as("eb"))
     a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cos_sim", dotExpr(df, "ea", "eb") / lit(1e12))
+      .withColumn("cos_sim", dotExpr("ea", "eb") / lit(1e12))
       .filter(col("cos_sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
   }
@@ -1221,11 +1183,11 @@ object Similarity {
     * and the argmax is `greatest(struct(dot, -cid))` — one projection
     * per row, no centroid fan-out join, no shuffle. Ties break to the
     * smallest cid. */
-  def ivfAssignLit(spark: org.apache.spark.sql.SparkSession,
-      embCol: String, cents: Seq[(Long, Array[Float])]): Column = {
+  def ivfAssignLit(embCol: String,
+      cents: Seq[(Long, Array[Float])]): Column = {
     require(cents.nonEmpty, "need at least one centroid")
     val best = greatest(cents.map { case (cid, vec) =>
-      struct(expr(dotSql(spark, embCol, litFloatArraySql(vec))).as("d"),
+      struct(expr(dotSql(embCol, litFloatArraySql(vec))).as("d"),
         lit(-cid).as("nc"))
     }.toIndexedSeq: _*)
     -best.getField("nc")
@@ -1235,11 +1197,11 @@ object Similarity {
     * assigned (nearest) centroid — same single codegen'd projection;
     * callers needing both columns pay the argmax once per column (the
     * optimizer CSEs the shared struct list within one projection). */
-  def ivfAssignDotLit(spark: org.apache.spark.sql.SparkSession,
-      embCol: String, cents: Seq[(Long, Array[Float])]): Column = {
+  def ivfAssignDotLit(embCol: String,
+      cents: Seq[(Long, Array[Float])]): Column = {
     require(cents.nonEmpty, "need at least one centroid")
     greatest(cents.map { case (cid, vec) =>
-      struct(expr(dotSql(spark, embCol, litFloatArraySql(vec))).as("d"),
+      struct(expr(dotSql(embCol, litFloatArraySql(vec))).as("d"),
         lit(-cid).as("nc"))
     }.toIndexedSeq: _*).getField("d")
   }
@@ -1265,7 +1227,6 @@ object Similarity {
   def kmeansFit(df: DataFrame, idCol: String, embCol: String, k: Int,
       iters: Int = 5): Seq[(Long, Array[Float])] = {
     require(k >= 1 && iters >= 1, s"need k/iters >= 1, got $k/$iters")
-    val spark = df.sparkSession
     var cents: Seq[(Long, Array[Float])] = df
       .select(col(idCol), col(embCol))
       .orderBy(col(idCol)).limit(k)
@@ -1281,7 +1242,7 @@ object Similarity {
     val dims = cents.head._2.length
     for (_ <- 0 until iters) {
       val sums = df
-        .withColumn("cid", ivfAssignLit(spark, embCol, cents))
+        .withColumn("cid", ivfAssignLit(embCol, cents))
         .select(col("cid"), posexplode(col(embCol)).as(Seq("dim", "v")))
         // exact fixed-point sum: order-independent across partial
         // aggregation, so the fit is deterministic run-to-run
@@ -1345,14 +1306,13 @@ object Similarity {
     * centroids inlined as literals, no fan-out join, no shuffle. The
     * ascending struct sort over (dot, −cid) reversed yields exactly
     * the (dot desc, cid asc) order the driver mirror uses. */
-  def ivfAssignTopNLit(spark: org.apache.spark.sql.SparkSession,
-      embCol: String, cents: Seq[(Long, Array[Float])],
+  def ivfAssignTopNLit(embCol: String, cents: Seq[(Long, Array[Float])],
       nprobe: Int): Column = {
     require(cents.nonEmpty, "need at least one centroid")
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe must be in [1, ${cents.size}]: $nprobe")
     val structs = cents.map { case (cid, vec) =>
-      struct(expr(dotSql(spark, embCol, litFloatArraySql(vec))).as("d"),
+      struct(expr(dotSql(embCol, litFloatArraySql(vec))).as("d"),
         lit(-cid).as("nc"))
     }.toIndexedSeq
     transform(
@@ -1421,14 +1381,13 @@ object Similarity {
     * projection with the codebook entries inlined as literals — no
     * join, no shuffle, the same literal-argmax shape as
     * [[ivfAssignLit]]. */
-  def pqEncodeLit(spark: org.apache.spark.sql.SparkSession,
-      embCol: String, books: IndexedSeq[IndexedSeq[Array[Float]]])
-  : Column = {
+  def pqEncodeLit(embCol: String,
+      books: IndexedSeq[IndexedSeq[Array[Float]]]): Column = {
     val w = books.head.head.length
     array(books.zipWithIndex.map { case (book, s) =>
       val sub = s"slice($embCol, ${s * w + 1}, $w)"
       -greatest(book.zipWithIndex.map { case (cv, c) =>
-        struct(expr(dotSql(spark, sub, litFloatArraySql(cv))).as("d"),
+        struct(expr(dotSql(sub, litFloatArraySql(cv))).as("d"),
           lit(-c.toLong).as("nc"))
       }: _*).getField("nc")
     }: _*)
@@ -1463,14 +1422,13 @@ object Similarity {
     * s-th subvector with codebook entry c (the codebook inlined as
     * literals — the distributed form of [[pqLut]], bit-identical by
     * construction). m·codes dot projections, codegen'd, no join. */
-  def pqLutLit(spark: org.apache.spark.sql.SparkSession,
-      embCol: String, books: IndexedSeq[IndexedSeq[Array[Float]]])
-  : Column = {
+  def pqLutLit(embCol: String,
+      books: IndexedSeq[IndexedSeq[Array[Float]]]): Column = {
     val w = books.head.head.length
     array(books.zipWithIndex.map { case (book, s) =>
       val sub = s"slice($embCol, ${s * w + 1}, $w)"
       array(book.map(cv =>
-        expr(dotSql(spark, sub, litFloatArraySql(cv))).cast("long")): _*)
+        expr(dotSql(sub, litFloatArraySql(cv))).cast("long")): _*)
     }: _*)
   }
 
@@ -1522,7 +1480,7 @@ object Similarity {
       embCol: String = "embedding"): DataFrame = {
     df.withColumn("__rid", monotonically_increasing_id())
       .crossJoin(broadcast(centroids))
-      .withColumn("cdot", dotExpr(df, embCol, "ce"))
+      .withColumn("cdot", dotExpr(embCol, "ce"))
       .groupBy(col("__rid"))
       .agg(max_by(
         struct(df.columns.map(col).toIndexedSeq :+ col("cid"): _*),
@@ -1615,7 +1573,7 @@ object Similarity {
     val simRows = c2.as("a").crossJoin(c2.as("b"))
       .filter(col("a.id") =!= col("b.id"))
       .select(col("a.id").as("ai"), col("b.id").as("bi"),
-        expr(dotSql(spark, "a.e", "b.e")).as("s"))
+        expr(dotSql("a.e", "b.e")).as("s"))
       .collect()
     val sim = new java.util.HashMap[(Long, Long), Long]()
     simRows.foreach(r => sim.put((r.getLong(0), r.getLong(1)),
@@ -1708,7 +1666,7 @@ object Similarity {
         .select(col("id").as("cid"), col("e").as("ce"))
       val pick = base.filter(!col("id").isInCollection(chosenIds))
         .crossJoin(broadcast(chosenDf))
-        .select(col("id"), expr(dotSql(spark, "e", "ce")).as("s"))
+        .select(col("id"), expr(dotSql("e", "ce")).as("s"))
         .groupBy("id").agg(max(col("s")).as("cov"))
         .orderBy(col("cov").asc, col("id").asc).limit(1).collect()
       if (pick.isEmpty) exhausted = true

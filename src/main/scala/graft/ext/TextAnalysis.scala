@@ -113,6 +113,15 @@ object TextAnalysis {
   def normalizeText(text: Column): Column =
     nfcNormalize(lower(trim(regexp_replace(text, "\\s+", " "))))
 
+  /** Deterministic fixed-point log2 as a Column —
+    * [[graft.functions.FixedLog2]], the integer recurrence the DuckDB
+    * oracle replays bit for bit. Needs no function registration: the
+    * Column wraps the expression directly. */
+  private[graft] def fixedLog2(c: Column): Column =
+    org.apache.spark.sql.graftshim.ColumnShim.column(
+      graft.functions.FixedLog2(
+        org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
+
   /** Misra–Gries heavy-hitters aggregate as a Column (usable in
     * `.agg(...)` without session-function registration) — see
     * [[graft.functions.HeavyHitters]] for semantics and bounds. */
@@ -335,12 +344,6 @@ object TextAnalysis {
   def pmiCollocations(df: org.apache.spark.sql.DataFrame,
       textCol: String = "text", window: Int = 2, minCount: Long = 5,
       k: Int = 20): org.apache.spark.sql.DataFrame = {
-    def lg(c: Column): Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     // vocabulary²-bounded — pin once: it feeds marginals, the total
     // AND the scored frame
     val pairs = skipgramPairs(df, textCol, window).localCheckpoint()
@@ -357,7 +360,7 @@ object TextAnalysis {
       .withColumn("pa", expr("cnt * n"))
       .withColumn("pb", expr("m_a * m_b"))
       .select(col("center"), col("context"), col("cnt"),
-        (lg(col("pa")) - lg(col("pb"))).as("pmi_fp"))
+        (fixedLog2(col("pa")) - fixedLog2(col("pb"))).as("pmi_fp"))
       .orderBy(col("pmi_fp").desc, col("center"), col("context"))
       .limit(k)
   }
@@ -763,27 +766,14 @@ object TextAnalysis {
 
   /** One row per word-bigram POSITION with its hashed feature id;
     * every non-text column of `df` is carried through. Native
-    * `lm_feature_ids` (bigram half) when available — one tokenize +
-    * hash pass per row instead of the re-inlined per-element regex
-    * splits of the staged composition. */
+    * `lm_feature_ids` (bigram half) — one tokenize + hash pass per
+    * row. */
   private[ext] def hashedBigrams(df: org.apache.spark.sql.DataFrame,
       textCol: String, buckets: Int): org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.catalog.functionExists("lm_feature_ids"))
-      df.withColumn("p",
-          explode(expr(s"lm_feature_ids($textCol, $buckets)")))
-        .withColumn("fid", col("p.bfid"))
-        .drop("p", textCol)
-    else
-      df.withColumn("toks", split(trim(col(textCol)), "\\s+"))
-        .withColumn("bg", explode(expr(
-          """CASE WHEN size(toks) >= 2 THEN
-            |  transform(sequence(0, size(toks) - 2),
-            |    i -> concat(toks[i], ' ', toks[i+1]))
-            |ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin)))
-        .withColumn("fid", expr(
-          s"CAST(conv(substring(md5(bg), 1, 7), 16, 10) AS BIGINT)" +
-            s" % $buckets"))
-        .drop("toks", "bg", textCol)
+    df.withColumn("p",
+        explode(expr(s"lm_feature_ids($textCol, $buckets)")))
+      .withColumn("fid", col("p.bfid"))
+      .drop("p", textCol)
 
   /** Streaming DSIR curation: every micro-batch is scored against a
     * pre-trained weight table ([[importanceWeightTable]] — a STATIC
@@ -843,22 +833,16 @@ object TextAnalysis {
     * Output: (id, n_tokens, n_types, ttr_fp, entropy_fp). */
   def tokenEntropy(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    def lg(c: Column): Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     df.select(col(idCol).as("id"),
         explode(split(trim(col(textCol)), "\\s+")).as("tok"))
       .groupBy("id", "tok").agg(count(lit(1)).as("c"))
-      .withColumn("clg", col("c") * lg(col("c")))
+      .withColumn("clg", col("c") * fixedLog2(col("c")))
       .groupBy("id")
       .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_types"),
         sum(col("clg")).as("num"))
       .select(col("id"), col("n_tokens"), col("n_types"),
         expr("(65536L * n_types) div n_tokens").as("ttr_fp"),
-        (lg(col("n_tokens")) - expr("num div n_tokens"))
+        (fixedLog2(col("n_tokens")) - expr("num div n_tokens"))
           .as("entropy_fp"))
   }
 
@@ -986,12 +970,6 @@ object TextAnalysis {
       pcTable: org.apache.spark.sql.DataFrame,
       textCol: String = "text", buckets: Int = 65536)
   : org.apache.spark.sql.DataFrame = {
-    val lg: Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr("fixed_log2(p_fp)")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(col("p_fp"))))
     lmPositions(df.select(col(idCol).as("id"), col(textCol)),
         textCol, buckets)
       .join(broadcast(bcTable), Seq("bfid"), "left")
@@ -999,7 +977,7 @@ object TextAnalysis {
       .withColumn("p_fp", expr(
         s"greatest(1L, least(1073741823L, (1073741824L * " +
           s"(coalesce(bc, 0L) + 1)) div (coalesce(pc, 0L) + $buckets)))"))
-      .withColumn("bits", lit(30L << 16) - lg)
+      .withColumn("bits", lit(30L << 16) - fixedLog2(col("p_fp")))
       .groupBy("id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("bits")).as("bits_fp"))
       .withColumn("bpt_fp", expr("bits_fp div n_bigrams"))
@@ -1081,37 +1059,16 @@ object TextAnalysis {
 
   /** One row per word-bigram POSITION with the hashed ids of its
     * PREFIX token (`pfid`) and of the bigram itself (`bfid`) — the
-    * conditional-probability lookup keys. Native `lm_feature_ids`
-    * when GraftExtensions is active (ONE pass per row: each token
-    * hashes once — the staged composition re-evaluates the regex
-    * split per element reference after optimizer re-inlining,
-    * quadratic per document); else the equivalent built-in staging.
-    * Tokens contain no whitespace by construction, so the fallback
-    * recovers the prefix from the space-joined bigram string (the
-    * DuckDB oracle does the same). Non-text columns of `df` are
-    * carried through. */
+    * conditional-probability lookup keys. Native `lm_feature_ids`:
+    * ONE pass per row, each token hashes once. Non-text columns of
+    * `df` are carried through. */
   private def lmPositions(df: org.apache.spark.sql.DataFrame,
       textCol: String, buckets: Int): org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.catalog.functionExists("lm_feature_ids"))
-      df.withColumn("p",
-          explode(expr(s"lm_feature_ids($textCol, $buckets)")))
-        .withColumn("pfid", col("p.pfid"))
-        .withColumn("bfid", col("p.bfid"))
-        .drop("p", textCol)
-    else
-      df.withColumn("toks", split(trim(col(textCol)), "\\s+"))
-        .withColumn("bg", explode(expr(
-          """CASE WHEN size(toks) >= 2 THEN
-            |  transform(sequence(0, size(toks) - 2),
-            |    i -> concat(toks[i], ' ', toks[i+1]))
-            |ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin)))
-        .withColumn("pfid", expr(
-          s"CAST(conv(substring(md5(split(bg, ' ')[0]), 1, 7), 16, 10)" +
-            s" AS BIGINT) % $buckets"))
-        .withColumn("bfid", expr(
-          s"CAST(conv(substring(md5(bg), 1, 7), 16, 10) AS BIGINT)" +
-            s" % $buckets"))
-        .drop("toks", "bg", textCol)
+    df.withColumn("p",
+        explode(expr(s"lm_feature_ids($textCol, $buckets)")))
+      .withColumn("pfid", col("p.pfid"))
+      .withColumn("bfid", col("p.bfid"))
+      .drop("p", textCol)
 
   /** Default PII patterns: (name, regex, replacement token). The
     * regexes are deliberately restricted to the Java ∩ RE2 dialect
@@ -1197,12 +1154,6 @@ object TextAnalysis {
   def langIdTrained(df: org.apache.spark.sql.DataFrame, idCol: String,
       model: org.apache.spark.sql.DataFrame, textCol: String = "text")
   : org.apache.spark.sql.DataFrame = {
-    def lg(c: Column): Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     val v = model.select(col("tri")).distinct().count()
     require(v > 0, "langIdTrained: empty model")
     val totals = model.groupBy("lang").agg(sum(col("c")).as("tl"))
@@ -1224,7 +1175,8 @@ object TextAnalysis {
       .join(broadcast(model), Seq("tri", "lang"), "left")
       .withColumn("den0", col("tl") + lit(v))
       .withColumn("num0", coalesce(col("c"), lit(0L)) + lit(1L))
-      .withColumn("bits", lg(col("den0")) - lg(col("num0")))
+      .withColumn("bits",
+        fixedLog2(col("den0")) - fixedLog2(col("num0")))
       .groupBy("id", "lang")
       .agg(count(lit(1)).as("n_tris"), sum(col("bits")).as("bits"))
       .groupBy("id")
@@ -1255,10 +1207,6 @@ object TextAnalysis {
       idCol: String, model: org.apache.spark.sql.DataFrame,
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.unsafe.types.UTF8String
-    def lg(c: Column): Column =
-      org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     // the model frame may be an unmaterialized aggregation over the
     // whole corpus (q154 trains in-query); the size check, totals and
     // cost grid below would each recompute it — pin it once (measured
@@ -1294,8 +1242,9 @@ object TextAnalysis {
       // from grouping m), so the per-row miss column covers all langs.
       val grid = m.join(totals, Seq("lang"))
         .select(col("tri"), col("lang"),
-          (lg(col("tl") + lit(v)) - lg(col("c") + lit(1L))).as("bits"),
-          (lg(col("tl") + lit(v)) - lg(lit(1L))).as("miss"))
+          (fixedLog2(col("tl") + lit(v)) -
+            fixedLog2(col("c") + lit(1L))).as("bits"),
+          (fixedLog2(col("tl") + lit(v)) - fixedLog2(lit(1L))).as("miss"))
         .collect()
       val langs = grid.map(_.getString(1)).distinct.sorted
       val missByLang = grid.iterator
@@ -1388,12 +1337,6 @@ object TextAnalysis {
       bi: org.apache.spark.sql.DataFrame,
       tri: org.apache.spark.sql.DataFrame, textCol: String = "text")
   : org.apache.spark.sql.DataFrame = {
-    def lg(c: Column): Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     val n = uni.agg(sum(col("c"))).head.getLong(0)
     require(n > 0, "stupidBackoffScore: empty model (N = 0)")
     val pen = graft.functions.FixedPointMath.flog2(5L) - 65536L
@@ -1427,12 +1370,13 @@ object TextAnalysis {
       .withColumn("lvl", when(col("tc").isNotNull, 0)
         .when(col("bnc").isNotNull, 1).otherwise(2))
       .withColumn("bits",
-        when(col("lvl") === 0, lg(col("bdc")) - lg(col("tc")))
+        when(col("lvl") === 0,
+            fixedLog2(col("bdc")) - fixedLog2(col("tc")))
           .when(col("lvl") === 1,
-            lit(pen) + lg(col("udc")) - lg(col("bnc")))
+            lit(pen) + fixedLog2(col("udc")) - fixedLog2(col("bnc")))
           .otherwise(lit(2 * pen) + lit(
               graft.functions.FixedPointMath.flog2(n)) -
-            lg(greatest(coalesce(col("unc"), lit(1L)), lit(1L)))))
+            fixedLog2(greatest(coalesce(col("unc"), lit(1L)), lit(1L)))))
       .groupBy("id")
       .agg(count(lit(1)).as("n_pos"),
         sum(when(col("lvl") === 0, 1L).otherwise(0L)).as("tri_hits"),
@@ -1675,13 +1619,6 @@ object TextAnalysis {
       pos: org.apache.spark.sql.DataFrame,
       bi: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame = {
-    val spark = bi.sparkSession
-    def lg(c: Column): Column =
-      if (spark.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     val biP = bi.localCheckpoint()
     val t = biP.count()
     require(t > 0, "kneserNeyScore: empty model (no bigrams)")
@@ -1705,7 +1642,7 @@ object TextAnalysis {
            |    COALESCE(bwd, CAST(0 AS BIGINT)))
            |  div CAST($t AS DECIMAL(38,0)) AS BIGINT)
            |END, CAST(1 AS BIGINT))""".stripMargin))
-      .withColumn("bits", lit(20L * 65536L) - lg(col("p_fp")))
+      .withColumn("bits", lit(20L * 65536L) - fixedLog2(col("p_fp")))
       .groupBy("id")
       .agg(count(lit(1)).as("n_pos"),
         sum(when(col("c12").isNotNull, 1L).otherwise(0L)).as("seen_bi"),
@@ -1755,12 +1692,6 @@ object TextAnalysis {
   def kneserNeyTrigramScore(df: org.apache.spark.sql.DataFrame,
       idCol: String, tri: org.apache.spark.sql.DataFrame,
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    def lg(c: Column): Column =
-      if (df.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     // model-sized statistic frames, all from the trigram table —
     // pinned CONDITIONALLY on input size (r17, the r16-verdict #3
     // fix): `tri` is referenced three times and `cc23` four times, so
@@ -1818,7 +1749,7 @@ object TextAnalysis {
           |  CAST(75 AS DECIMAL(38,0)) * fwd3 * p2_fp
           |) div (CAST(100 AS DECIMAL(38,0)) * c3) AS BIGINT)
           |ELSE p2_fp END, CAST(1 AS BIGINT))""".stripMargin))
-      .withColumn("bits", lit(20L * 65536L) - lg(col("p_fp")))
+      .withColumn("bits", lit(20L * 65536L) - fixedLog2(col("p_fp")))
       .groupBy("id")
       .agg(count(lit(1)).as("n_pos"),
         sum(when(col("c123").isNotNull, 1L).otherwise(0L))
@@ -2509,12 +2440,6 @@ object TextAnalysis {
       textCol: String = "text", maxN: Int = 4)
   : org.apache.spark.sql.DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"maxN must be in [1, 8]: $maxN")
-    def lg(c: Column): Column =
-      if (docs.sparkSession.catalog.functionExists("fixed_log2"))
-        expr(s"fixed_log2(${c.toString})")
-      else org.apache.spark.sql.graftshim.ColumnShim.column(
-        graft.functions.FixedLog2(
-          org.apache.spark.sql.graftshim.ColumnShim.expression(c)))
     val pinned = pairs.select(col("a_id"), col("b_id"))
       .localCheckpoint()
     val p = broadcast(pinned)
@@ -2577,8 +2502,8 @@ object TextAnalysis {
     // monotone non-strict and tot ≥ clip); a zero clip makes its
     // flog2 NULL, which propagates through + to a NULL log-BLEU
     val negSum = (1 to maxN)
-      .map(n => lg(greatest(col(s"tot$n"), lit(1L))) -
-        lg(col(s"clip$n")))
+      .map(n => fixedLog2(greatest(col(s"tot$n"), lit(1L))) -
+        fixedLog2(col(s"clip$n")))
       .reduce(_ + _)
     val perN = (1 to maxN).flatMap { n =>
       Seq(col(s"clip$n"), col(s"tot$n"),

@@ -41,7 +41,7 @@ case class FixedDot(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    // match the zip_with fallback exactly: unequal lengths pad with
+    // match the zip_with composition exactly: unequal lengths pad with
     // null, and a null ELEMENT poisons the sum → null result
     if (x.numElements() != y.numElements()) return null
     val n = x.numElements()

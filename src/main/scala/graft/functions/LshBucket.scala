@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * partition column: the 100 TB ANN probe is then partition pruning +
   * one bucket scan (see [[graft.ext.AnnIndex]]).
   *
-  * Semantically identical to the built-in composition used as the
-  * no-extensions fallback (`Similarity.lshBucket`) — including its
+  * Semantically identical to the built-in HOF composition it
+  * replaced (kept as the reference in `LshBucketSpec`) — including its
   * null-element behavior (a null element nulls every plane sum, so
   * `IF(null > 0, …)` leaves every bit unset → bucket 0) — but compiled
   * by whole-stage codegen instead of three nested interpreted HOF

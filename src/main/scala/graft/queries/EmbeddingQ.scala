@@ -25,8 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object EmbeddingQ {
 
-  private def dot(s: SparkSession, a: String, b: String): String =
-    Similarity.dotSql(s, a, b)
+  private def dot(a: String, b: String): String = Similarity.dotSql(a, b)
 
   /** Same in DuckDB (1-based indexing). */
   private[queries] def dotD(a: String, b: String) =
@@ -43,7 +42,7 @@ object EmbeddingQ {
     emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        (expr(dot(s, "embedding", "qe")) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", "qe")) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -84,11 +83,8 @@ object EmbeddingQ {
        |ORDER BY a_id, b_id""".stripMargin
 
   /** Read-time LSH bucket (4 hyperplanes → 16 buckets): codegen'd
-    * native `lsh_bucket` under GraftExtensions, portable HOF
-    * composition otherwise. */
-  private def bucketE(s: SparkSession): String =
-    Similarity.lshBucketSql("embedding", 4, 0,
-      native = s.catalog.functionExists("lsh_bucket"))
+    * native `lsh_bucket`. */
+  private def bucketE = Similarity.lshBucketSql("embedding", 4, 0)
   private def bucketD = bucketDN("4")
 
   /** Same with a parametric plane count (a SQL expression — q83 feeds
@@ -111,13 +107,13 @@ object EmbeddingQ {
     * write-time variant of the same search is q58. */
   def q38(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
-      .withColumn("bucket", expr(bucketE(s)))
+      .withColumn("bucket", expr(bucketE))
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"), col("bucket").as("qbucket"))
     emb.crossJoin(broadcast(q))
       .filter(col("bucket") === col("qbucket") && col("vec_id") =!= 0)
       .select(col("vec_id"), col("bucket"),
-        (expr(dot(s, "embedding", "qe")) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", "qe")) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(5)
   }
@@ -149,14 +145,14 @@ object EmbeddingQ {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toIndexedSeq
     val assigned = emb
-      .withColumn("cid", Similarity.ivfAssignLit(s, "embedding", cents))
+      .withColumn("cid", Similarity.ivfAssignLit("embedding", cents))
       .select(col("vec_id"), col("embedding"), col("cid"))
     val q = assigned.filter(col("vec_id") === 42)
       .select(col("embedding").as("qe"), col("cid").as("qcid"))
     assigned.crossJoin(broadcast(q))
       .filter(col("cid") === col("qcid") && col("vec_id") =!= 42)
       .select(col("vec_id"), col("cid"),
-        (expr(dot(s, "embedding", "qe")) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", "qe")) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(5)
   }
@@ -196,10 +192,10 @@ object EmbeddingQ {
       .select(col("embedding")).collect().head.getSeq[Float](0).toArray
     val qcids = Similarity.assignTopN(qvec, cents, nprobe = 2)
     val qe = Similarity.litFloatArraySql(qvec)
-    emb.withColumn("cid", Similarity.ivfAssignLit(s, "embedding", cents))
+    emb.withColumn("cid", Similarity.ivfAssignLit("embedding", cents))
       .filter(col("cid").isin(qcids: _*) && col("vec_id") =!= 42)
       .select(col("vec_id"), col("cid"),
-        (expr(dot(s, "embedding", qe)) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", qe)) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(5)
   }
@@ -241,7 +237,7 @@ object EmbeddingQ {
       .select(col("embedding")).collect().head.getSeq[Float](0).toArray
     val lut = Similarity.pqLut(qvec, books)
     emb.filter(col("vec_id") >= 16 && col("vec_id") =!= 42)
-      .withColumn("codes", Similarity.pqEncodeLit(s, "embedding", books))
+      .withColumn("codes", Similarity.pqEncodeLit("embedding", books))
       .withColumn("adc_fp", Similarity.pqAdcLit("codes", lut))
       .select(col("vec_id"), col("adc_fp"),
         (col("adc_fp").cast("double") / lit(1e12)).as("adc_sim"))
@@ -291,12 +287,12 @@ object EmbeddingQ {
     val lut = Similarity.pqLut(qvec, books)
     val qe = Similarity.litFloatArraySql(qvec)
     emb.filter(col("vec_id") >= 16 && col("vec_id") =!= 42)
-      .withColumn("codes", Similarity.pqEncodeLit(s, "embedding", books))
+      .withColumn("codes", Similarity.pqEncodeLit("embedding", books))
       .withColumn("adc_fp", Similarity.pqAdcLit("codes", lut))
       .orderBy(col("adc_fp").desc, col("vec_id"))
       .limit(40)
       .select(col("vec_id"), col("adc_fp"),
-        (expr(dot(s, "embedding", qe)) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", qe)) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -353,9 +349,9 @@ object EmbeddingQ {
     val qcids = Similarity.assignTopN(qvec, cents, nprobe = 2)
     val lut = Similarity.pqLut(qvec, books)
     emb.filter(col("vec_id") >= 16 && col("vec_id") =!= 42)
-      .withColumn("cid", Similarity.ivfAssignLit(s, "embedding", cents))
+      .withColumn("cid", Similarity.ivfAssignLit("embedding", cents))
       .filter(col("cid").isin(qcids: _*))
-      .withColumn("codes", Similarity.pqEncodeLit(s, "embedding", books))
+      .withColumn("codes", Similarity.pqEncodeLit("embedding", books))
       .withColumn("adc_fp", Similarity.pqAdcLit("codes", lut))
       .select(col("vec_id"), col("cid"), col("adc_fp"),
         (col("adc_fp").cast("double") / lit(1e12)).as("adc_sim"))
@@ -460,7 +456,7 @@ object EmbeddingQ {
     s.read.parquet(idx)
       .filter(col("bucket") === lit(qb) && col("vec_id") =!= 0)
       .select(col("vec_id"), col("bucket"),
-        (expr(dot(s, "embedding", qe)) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", qe)) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(5)
   }
@@ -490,7 +486,7 @@ object EmbeddingQ {
     s.read.parquet(idx)
       .filter(col("bucket").isin(qbs: _*) && col("vec_id") =!= 0)
       .select(col("vec_id"), col("bucket"),
-        (expr(dot(s, "embedding", qe)) / lit(1e12)).as("cos_sim"))
+        (expr(dot("embedding", qe)) / lit(1e12)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -708,7 +704,7 @@ object EmbeddingQ {
     val thr = 350000000000L // 0.35 in 1e12 fixed point
     emb.filter(col("vec_id") >= 25)
       .crossJoin(broadcast(ev))
-      .withColumn("dfx", expr(dot(s, "embedding", "ee")))
+      .withColumn("dfx", expr(dot("embedding", "ee")))
       .groupBy(col("vec_id"))
       .agg(max(col("dfx")).as("max_dot_fx"),
         count(when(col("dfx") >= thr, 1)).as("n_close"))
@@ -777,7 +773,7 @@ object EmbeddingQ {
     val alt = Similarity
       .ivfAssign(emb.select(col("vec_id"), col("embedding")), centDf)
       .withColumn("lit_cid",
-        Similarity.ivfAssignLit(s, "embedding", cents))
+        Similarity.ivfAssignLit("embedding", cents))
     alt.agg(count(lit(1)).as("n_points"),
         countDistinct(col("lit_cid")).as("ncl"),
         max(when(col("cid") =!= col("lit_cid"), 1)
@@ -811,7 +807,7 @@ object EmbeddingQ {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toIndexedSeq
     emb
-      .withColumn("cid", Similarity.ivfAssignLit(s, "embedding", cents))
+      .withColumn("cid", Similarity.ivfAssignLit("embedding", cents))
       .filter(expr("CAST(conv(substring(md5(CAST(vec_id AS STRING)), " +
         "1, 7), 16, 10) AS BIGINT) % 100 < 25"))
       .groupBy(col("cid"))
@@ -858,8 +854,8 @@ object EmbeddingQ {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toIndexedSeq
     val assigned = emb.select(col("vec_id"),
-      Similarity.ivfAssignLit(s, "embedding", cents).as("cid"),
-      Similarity.ivfAssignDotLit(s, "embedding", cents).as("dot_fx"))
+      Similarity.ivfAssignLit("embedding", cents).as("cid"),
+      Similarity.ivfAssignDotLit("embedding", cents).as("dot_fx"))
     Similarity.clusterMeanOutliers(assigned)
       .select(col("vec_id"), col("cid"), col("dot_fx"))
       .orderBy(col("vec_id"))
@@ -1627,7 +1623,7 @@ object EmbeddingQ {
     val cand = emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("id"), col("embedding"),
-        expr(dot(s, "embedding", "qe")).as("rel_fp"))
+        expr(dot("embedding", "qe")).as("rel_fp"))
       .orderBy(col("rel_fp").desc, col("id")).limit(20)
     Similarity.mmrRerank(cand, k = 10, lambdaTenths = 7)
       .orderBy(col("step"))
@@ -1799,8 +1795,8 @@ object EmbeddingQ {
     val scored = emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        expr(dot(s, "embedding", "qe")).as("s_full"),
-        expr(dot(s, "slice(embedding, 1, 16)", "slice(qe, 1, 16)"))
+        expr(dot("embedding", "qe")).as("s_full"),
+        expr(dot("slice(embedding, 1, 16)", "slice(qe, 1, 16)"))
           .as("s_pre"))
     val full10 = scored
       .orderBy(col("s_full").desc, col("vec_id")).limit(10)

@@ -21,8 +21,9 @@ object StreamQ {
     * deterministic stand-in for three CDC micro-batches), the table is
     * tailed with `readStream.format("graft")`, and a complete-mode
     * groupBy over the live change feed runs to exhaustion under
-    * `Trigger.AvailableNow` (the V1 source executes it as
-    * single-batch semantics — same exhaustive pass). Each trigger's
+    * `Trigger.AvailableNow` (the source drains the log up to its head
+    * at query start; with no per-trigger cap that is one batch over
+    * all three commits, then the query stops). Each trigger's
     * full recomputed aggregate replaces the result table; the final
     * table is the stream's answer over ALL commits, which the oracle
     * grades as a plain GROUP BY over `orders`. The fixed-point sum

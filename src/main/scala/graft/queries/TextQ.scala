@@ -11,7 +11,9 @@ import QueryDef._
   * fingerprinting, n-gram Jaccard near-dup, MinHash+LSH and SimHash.
   *
   * Everything is expressed with built-ins (split / transform /
-  * aggregate / array_min / md5 …) — no UDFs. Intermediate arrays
+  * aggregate / array_min / md5 …) and graft's native Catalyst
+  * expressions (`shingle_ids`, `minhash_sig`, … — requires
+  * GraftExtensions) — no UDFs. Intermediate arrays
   * (tokens → shingles → token-ids → signatures) are staged as columns
   * so each is computed once per row: Catalyst's CollapseProject leaves
   * non-cheap multi-referenced aliases in their own projection, whereas
@@ -42,9 +44,8 @@ object TextQ {
     s"""list_distinct(list_transform(range(1, greatest(len($toksD) - 1, 1)),
        |  i -> $toksD[i] || ' ' || $toksD[i+1] || ' ' || $toksD[i+2]))""".stripMargin
 
-  /** Portable 28-bit token id from md5 hex. */
-  private def tokE(t: String) =
-    s"CAST(conv(substring(md5($t), 1, 7), 16, 10) AS BIGINT)"
+  /** Portable 28-bit token id from md5 hex (the DuckDB mirror of the
+    * native `token_ids`/`shingle_ids` hash). */
   private def tokD(t: String) =
     s"CAST(('0x' || substr(md5($t), 1, 7)) AS BIGINT)"
 
@@ -54,9 +55,6 @@ object TextQ {
   private def withShingles(s: SparkSession, dir: String): DataFrame =
     withToks(s, dir).withColumn("shs", expr(shsFromToks))
 
-  /** documents with the md5-prefix shingle-id array: native expression
-    * when GraftExtensions is active (one pass per row, cheap under
-    * optimizer re-inlining), else the staged built-in composition. */
   /** documents spread across cores: the test parquet is one row group
     * (unsplittable scan), so per-row md5 hashing must be repartitioned
     * off the single scan task before the heavy expression runs. */
@@ -64,22 +62,15 @@ object TextQ {
     Tables(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
 
+  /** documents with the md5-prefix shingle-id array (native
+    * `shingle_ids`: one pass per row). */
   private def withShingleIds(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("shingle_ids"))
-      spreadDocs(s, dir).withColumn("sids", expr("shingle_ids(text)"))
-    else
-      withShingles(s, dir)
-        .withColumn("sids", expr(s"transform(shs, t -> ${tokE("t")})"))
-        .drop("toks", "shs")
+    spreadDocs(s, dir).withColumn("sids", expr("shingle_ids(text)"))
 
+  /** documents with the distinct md5-prefix token-id array (native
+    * `token_ids`). */
   private def withTokenIds(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("token_ids"))
-      spreadDocs(s, dir).withColumn("tids", expr("token_ids(text)"))
-    else
-      withToks(s, dir)
-        .withColumn("tids",
-          expr(s"transform(array_distinct(toks), t -> ${tokE("t")})"))
-        .drop("toks")
+    spreadDocs(s, dir).withColumn("tids", expr("token_ids(text)"))
 
   /** Occurrences of word w in text (padded, non-overlapping replace
     * trick — identical semantics in both engines). */
@@ -272,14 +263,8 @@ object TextQ {
     * Token ids (md5-derived) are staged once; the 16 hash functions
     * are cheap modular arithmetic over the staged ids. */
   def q34(s: SparkSession, dir: String): DataFrame = {
-    val sigExpr =
-      if (s.catalog.functionExists("minhash_sig")) "minhash_sig(sids)"
-      else
-        """transform(sequence(0, 15), k -> array_min(transform(sids,
-          |  x -> ((1103515245 + 12345 * k) * x + 748191 * k)
-          |       % 1000000007)))""".stripMargin
     val sigs = withShingleIds(s, dir)
-      .withColumn("sig", expr(sigExpr))
+      .withColumn("sig", expr("minhash_sig(sids)"))
       .select(col("doc_id"), col("sig"))
     val bands = sigs.select(col("doc_id"),
         explode(expr("sequence(0, 3)")).as("band"), col("sig"))
@@ -330,16 +315,8 @@ object TextQ {
     * bucket occupancy — a single large `source` no longer degenerates
     * to the O(n²) all-pairs join the exhaustive oracle spells out. */
   def q35(s: SparkSession, dir: String): DataFrame = {
-    val simExpr =
-      if (s.catalog.functionExists("simhash16")) "simhash16(tids)"
-      else
-        """aggregate(sequence(0, 15), 0L, (acc, j) -> acc +
-          |  IF(aggregate(tids, 0L,
-          |       (a2, x) -> a2 + (shiftright(x, CAST(j AS INT)) % 2)
-          |         * 2 - 1) > 0,
-          |     shiftleft(1L, CAST(j AS INT)), 0L))""".stripMargin
     val sh = withTokenIds(s, dir)
-      .withColumn("simhash", expr(simExpr))
+      .withColumn("simhash", expr("simhash16(tids)"))
       .select(col("doc_id"), col("source"), col("simhash"))
     val banded = sh.select(col("doc_id"), col("source"), col("simhash"),
         explode(expr("sequence(0, 3)")).as("band"))
@@ -741,18 +718,13 @@ object TextQ {
     * shuffle, merges are the mergeable-summaries rule. Counts are
     * exact whenever the vocabulary fits the capacity (31 ≤ 256 here),
     * which is what the exact-count oracle checks; at 100 TB the same
-    * plan sketches a billion-token vocabulary in bounded memory.
-    * Falls back to the exact aggregation without the extension. */
-  def q71(s: SparkSession, dir: String): DataFrame = {
-    val toks = withToks(s, dir).select(explode(col("toks")).as("tok"))
-    val counted =
-      if (s.catalog.functionExists("heavy_hitters"))
-        toks.agg(expr("heavy_hitters(tok, 256)").as("hh"))
-          .select(explode(col("hh")).as("h"))
-          .select(col("h.tok").as("tok"), col("h.cnt").as("cnt"))
-      else toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-    counted.orderBy(col("cnt").desc, col("tok")).limit(10)
-  }
+    * plan sketches a billion-token vocabulary in bounded memory. */
+  def q71(s: SparkSession, dir: String): DataFrame =
+    withToks(s, dir).select(explode(col("toks")).as("tok"))
+      .agg(expr("heavy_hitters(tok, 256)").as("hh"))
+      .select(explode(col("hh")).as("h"))
+      .select(col("h.tok").as("tok"), col("h.cnt").as("cnt"))
+      .orderBy(col("cnt").desc, col("tok")).limit(10)
 
   val q71Sql: String =
     s"""WITH w AS (SELECT unnest($toksD) AS tok FROM documents)
@@ -1099,7 +1071,7 @@ object TextQ {
     val vec = rank10(
       emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
         .select(col("vec_id").as("id"),
-          expr(graft.ext.Similarity.dotSql(s, "embedding", "qe"))
+          expr(graft.ext.Similarity.dotSql("embedding", "qe"))
             .as("s")),
       Seq(col("s").desc, col("id")))
     graft.ext.TextAnalysis.rrfFuse(Seq(lex, vec), "id", "rnk", k = 10)

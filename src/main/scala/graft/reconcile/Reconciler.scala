@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * specified there, implemented here as distributed joins).
   *
   * Two-phase at scale: (1) `bucketDigests` hashes every row once into
-  * `nBuckets` partitions with an order-insensitive SUM digest — a
+  * `nBuckets` partitions with an order-insensitive multiset digest — a
   * single narrow aggregation per side, comparing 100 TB with one
   * small-result shuffle; (2) `diff` drills into rows (anti + inner
   * joins) — run it on everything at small scale, or filter both sides
@@ -31,15 +31,11 @@ object Reconciler {
   /** Per-bucket counts + order-insensitive digests for one side. Uses
     * the native multiset_digest aggregate (count/sum/xor of
     * avalanche-mixed row hashes — collision-resistant and commutative,
-    * so partial aggregation order is irrelevant) when GraftExtensions
-    * is active; falls back to a plain SUM digest otherwise. */
+    * so partial aggregation order is irrelevant). */
   def bucketDigests(df: DataFrame, keyCol: String, nBuckets: Int,
       compareCols: Seq[String]): DataFrame = {
-    val digest =
-      if (df.sparkSession.catalog.functionExists("multiset_digest"))
-        expr(s"multiset_digest(xxhash64(" +
-          (keyCol +: compareCols).map(c => s"`$c`").mkString(", ") + "))")
-      else sum(rowDigest(keyCol +: compareCols))
+    val digest = expr(s"multiset_digest(xxhash64(" +
+      (keyCol +: compareCols).map(c => s"`$c`").mkString(", ") + "))")
     df.groupBy(pmod(xxhash64(col(keyCol)), lit(nBuckets)).as("bucket"))
       .agg(count(lit(1)).as("cnt"), digest.as("digest"))
   }

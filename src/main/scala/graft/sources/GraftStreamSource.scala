@@ -3,6 +3,9 @@ package graft.sources
 import graft.core.SchemaMerge
 import graft.sink.CdcTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.read.streaming
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit,
+  SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
 import org.apache.spark.sql.types.StructType
@@ -34,11 +37,15 @@ import org.apache.spark.sql.types.StructType
   * restart. V1-source note: getBatch results must be streaming-tagged
   * plans, which is what `internalCreateDataFrame(_, _, isStreaming =
   * true)` is for (the same construction Spark's own file source uses).
+  *
+  * `Trigger.AvailableNow` drains the log up to its head at query start
+  * in the usual capped steps, then stops; commits made after the start
+  * wait for the next run.
   */
 class GraftStreamSource(spark: SparkSession, dir: String,
     startingCommit: String, maxCommitsPerTrigger: Option[Long] = None,
     maxFilesPerTrigger: Option[Long] = None)
-    extends Source {
+    extends Source with SupportsTriggerAvailableNow {
 
   require(maxCommitsPerTrigger.forall(_ > 0),
     s"maxCommitsPerTrigger must be positive: $maxCommitsPerTrigger")
@@ -64,6 +71,19 @@ class GraftStreamSource(spark: SparkSession, dir: String,
     * checkpointed position and re-emit commits. */
   @volatile private var cursor: Long = initialAfter
 
+  /** Under `Trigger.AvailableNow`: the log head recorded at query
+    * start, the highest commit this run may hand out. */
+  @volatile private var availableNowHead: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowHead =
+      Some(CdcTable.log(dir).lastOption.map(_.commit).getOrElse(0L))
+
+  /** Admission control is this source's own caps (the options above),
+    * so Spark's read limit adds nothing to [[getOffset]]. */
+  override def latestOffset(start: streaming.Offset,
+      limit: ReadLimit): streaming.Offset = getOffset.orNull
+
   private def commitId(o: Offset): Long = o match {
     case LongOffset(n) => n
     case so: SerializedOffset => LongOffset(so).offset
@@ -72,7 +92,8 @@ class GraftStreamSource(spark: SparkSession, dir: String,
 
   override def getOffset: Option[Offset] = {
     val log = CdcTable.log(dir)
-    val latest = log.lastOption.map(_.commit).getOrElse(0L)
+    val head = log.lastOption.map(_.commit).getOrElse(0L)
+    val latest = availableNowHead.fold(head)(math.min(head, _))
     // one capped step past the cursor, never backward (re-reporting
     // the furthest offset already handed out is a no-op trigger)
     val commitCapped = maxCommitsPerTrigger

@@ -195,7 +195,7 @@ class KnnJoinSpec extends SparkSpec {
     // driver mirror vs the distributed literal-argmax expression
     val got = emb
       .withColumn("cs",
-        Similarity.ivfAssignTopNLit(spark, "embedding", cents, 3))
+        Similarity.ivfAssignTopNLit("embedding", cents, 3))
       .select($"vec_id", $"cs").as[(Long, Seq[Long])].collect().toMap
     rows.foreach { case (id, v) =>
       assert(got(id) == Similarity.assignTopN(v, cents, 3), s"vec $id")

@@ -106,7 +106,7 @@ class SimilaritySpec extends SparkSpec {
     val q = vecs(39)._2
     val lut = Similarity.pqLut(q, books)
     val got = df
-      .withColumn("codes", Similarity.pqEncodeLit(spark, "embedding", books))
+      .withColumn("codes", Similarity.pqEncodeLit("embedding", books))
       .withColumn("adc", Similarity.pqAdcLit("codes", lut))
       .select($"vec_id", $"codes", $"adc")
       .as[(Long, Seq[Long], Long)].collect()
@@ -383,7 +383,7 @@ class SimilaritySpec extends SparkSpec {
     assert(cents.size == 3)
     // every point lands with its blob-mates; 3 non-empty clusters
     val assigned = pts.withColumn("cid",
-        Similarity.ivfAssignLit(spark, "embedding", cents))
+        Similarity.ivfAssignLit("embedding", cents))
       .select("vec_id", "cid").as[(Long, Long)].collect()
     val byBlob = assigned.groupBy(_._1 % 3).view.mapValues(
       _.map(_._2).toSet).toMap

@@ -104,6 +104,36 @@ class GraftStreamSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("Trigger.AvailableNow drains the capped backlog up to the start head") {
+    val dir = tmpDir("gavail")
+    val ckpt = tmpDir("gavailck")
+    (1 to 3).foreach { i =>
+      CdcTable.append(Seq((i.toLong, s"r$i")).toDF("x", "_id"), dir)
+    }
+    val batches =
+      scala.collection.mutable.ArrayBuffer[Seq[(String, Long)]]()
+    val q = spark.readStream.format("graft")
+      .option("maxCommitsPerTrigger", "1").load(dir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val rows = b.select("_id", "_commit").as[(String, Long)]
+          .collect().toSeq
+        val first = batches.synchronized { batches += rows; batches.size == 1 }
+        // a commit made after the run started: past its recorded head
+        if (first) CdcTable.append(Seq((4L, "r4")).toDF("x", "_id"), dir)
+        ()
+      }.start()
+    try {
+      assert(q.awaitTermination(120000L), "AvailableNow must terminate")
+      val seen = batches.flatten.sorted.toSeq
+      assert(seen == Seq(("r1", 1L), ("r2", 2L), ("r3", 3L)),
+        s"every start-time row exactly once, nothing later: $seen")
+      assert(batches.count(_.nonEmpty) >= 3,
+        s"cap 1 over 3 commits needs >= 3 batches: $batches")
+    } finally q.stop()
+  }
+
   test("maxFilesPerTrigger adapts pacing to commit SIZE, not count") {
     val dir = tmpDir("gfpaced")
     val ckpt = tmpDir("gfpacedck")
