@@ -198,7 +198,7 @@ object SchemaMerge {
   }
 
   private def mergeStructs(a: StructType, b: StructType, mode: MergeMode,
-      path: String, maxStructFields: Int = Int.MaxValue): StructType = {
+      path: String, maxStructFields: Int): StructType = {
     val bByName = b.fields.map(f => f.name -> f).toMap
     val merged = a.fields.map { fa =>
       bByName.get(fa.name) match {

@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Corpus deduplication pipeline (the north-star training-data op):
   *
@@ -70,7 +72,6 @@ object Dedup {
       maxBatchRows: Long = Similarity.MaxIncrementalBatchRows)
       : DataFrame = {
     import graft.sink.CdcTable
-    val spark = batch.sparkSession
     require(!Seq("fingerprint", "keep_id", "is_duplicate")
         .exists(batch.columns.map(_.toLowerCase).contains),
       "batch already carries a fingerprint/keep_id/is_duplicate " +
@@ -86,40 +87,23 @@ object Dedup {
       .localCheckpoint()
     // counting the pinned batch is free; a corpus-sized "batch" must
     // fail loudly BEFORE its fingerprint set broadcasts
-    val nBatch = fp.count()
-    require(nBatch <= maxBatchRows,
-      s"incremental batch has $nBatch rows (> maxBatchRows=" +
-        s"$maxBatchRows): this API broadcasts the batch's fingerprint " +
-        "set and assumes bounded micro-batches — use Dedup.exact for " +
-        "a corpus-sized input, or raise maxBatchRows if the broadcast " +
-        "genuinely fits")
+    IndexMeta.requireBoundedBatch(fp.count(), maxBatchRows, "rows",
+      "Dedup.exact")
     // in-batch winner per fingerprint (same min-id rule as [[exact]])
     val batchKeep = fp.groupBy(col("fingerprint"))
       .agg(min(col(idCol)).as("batch_keep"))
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty)
-        // THE INDEX NEVER SHUFFLES: the batch's (small, bounded)
-        // fingerprint set broadcasts and the index streams through a
-        // scan + hash probe — a groupBy over the raw index would
-        // exchange the ENTIRE index every batch, the cost that grows
-        // with the corpus instead of the batch. The min-per-
-        // fingerprint after the probe keeps the annotation 1:1 under
-        // racing appenders (commutative appends can land the same
-        // novel fingerprint twice; the min-id rule — the same winner
-        // rule [[exact]] uses — resolves deterministically), and
-        // min-over-matched-rows equals min-before-join exactly.
-        CdcTable.read(spark, indexDir)
-          .join(broadcast(batchKeep.select(col("fingerprint"))),
-            Seq("fingerprint"))
-          .groupBy(col("fingerprint"))
-          .agg(min(col("keep_id")).as("hist_keep"))
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("fingerprint",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("hist_keep",
-            batch.schema(idCol).dataType))))
+    // the min-per-fingerprint after the probe keeps the annotation 1:1
+    // under racing appenders (commutative appends can land the same
+    // novel fingerprint twice; the min-id rule — the same winner rule
+    // [[exact]] uses — resolves deterministically), and
+    // min-over-matched-rows equals min-before-join exactly
+    val hist = IndexMeta.touched(indexDir, txn,
+        batchKeep.select(col("fingerprint")),
+        StructType(Seq(StructField("fingerprint", StringType),
+          StructField("keep_id", batch.schema(idCol).dataType))),
+        pin = false)(_.select(col("fingerprint"), col("keep_id")))
+      .groupBy(col("fingerprint"))
+      .agg(min(col("keep_id")).as("hist_keep"))
     val resolved = batchKeep.join(hist, Seq("fingerprint"), "left")
       .withColumn("keep_id",
         coalesce(col("hist_keep"), col("batch_keep")))
@@ -431,26 +415,19 @@ object Dedup {
 
   /** Streaming NEAR-dup-to-table: the fuzzy analog of
     * [[dedupStreamToTable]] — every micro-batch LSH-matches against
-    * the signature index of everything already ingested
-    * ([[nearIncremental]]); batch docs whose signature-estimated
-    * jaccard against ANY earlier doc (historical, or a lower-id doc
-    * in the same batch) reaches `threshold` are dropped, the rest
-    * append to `outDir`. Exactly-once across restarts via per-role
-    * txn markers.
+    * the signature index ([[nearIncremental]]); batch docs whose
+    * signature-estimated jaccard against ANY earlier doc reaches
+    * `threshold` are dropped. The kept-only, first-seen-wins,
+    * exactly-once contract is [[IndexMeta.keptOnlyStream]]'s; the
+    * first-seen winner is the same rule [[near]]'s
+    * connected-components resolution applies per cluster.
     *
-    * Assumes ids are non-decreasing across batches (the natural
-    * ingest-sequence property): a pair's higher id loses, so the kept
-    * doc is always the FIRST-seen one — the same winner rule
-    * [[near]]'s connected-components resolution applies per cluster.
-    *
-    * Only KEPT docs enter the signature index, so the index is
-    * bounded by the DEDUPED corpus size, not the raw stream: a
-    * boilerplate page duplicated millions of times costs one index
-    * entry, and each new copy joins one band bucket — the mass-dup
-    * k² blowup cannot happen. (Tradeoff: a doc similar only to a
-    * DROPPED near-dup, not to its kept survivor, is missed — chain
-    * transitivity degrades one hop, exactly as [[near]]'s per-cluster
-    * single-survivor resolution.)
+    * Kept-only indexing means a boilerplate page duplicated millions
+    * of times costs one index entry, and each new copy joins one band
+    * bucket — the mass-dup k² blowup cannot happen. (Tradeoff: a doc
+    * similar only to a DROPPED near-dup, not to its kept survivor, is
+    * missed — chain transitivity degrades one hop, exactly as
+    * [[near]]'s per-cluster single-survivor resolution.)
     *
     * This path runs UNCAPPED (`maxBandDocFreq = Some(Int.MaxValue)`):
     * the auto √n hot-bucket cap exists for [[nearIncremental]], whose
@@ -471,28 +448,14 @@ object Dedup {
       appId: String = "graft-neardedup",
       maxBatchRows: Long = Similarity.MaxIncrementalBatchRows)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val r = nearIncrementalCore(batch, textCol, idCol, indexDir,
-          bands, maxBandDocFreq = Some(Int.MaxValue),
-          maxBatchRows = maxBatchRows, txn = Some((s"$appId-idx", id)))
-        // one evaluation: feeds the index filter AND the out anti-join
-        val dupIds = r.pairs.filter(col("est_jaccard") >= threshold)
-          .select(col("b_id").as("__dup_id")).distinct()
-          .localCheckpoint()
-        graft.sink.CdcTable.append(
-          r.batchBands.join(dupIds,
-            col("doc_id") === col("__dup_id"), "left_anti"),
-          indexDir, txn = Some((s"$appId-idx", id)))
-        graft.sink.CdcTable.append(
-          batch.join(dupIds, batch(idCol) === col("__dup_id"),
-            "left_anti"),
-          outDir, txn = Some((s"$appId-out", id)))
-        ()
-      }
-      .start()
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "doc_id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = nearIncrementalCore(batch, textCol, idCol, indexDir,
+        bands, maxBandDocFreq = Some(Int.MaxValue),
+        maxBatchRows = maxBatchRows, txn = txn)
+      (r.pairs.filter(col("est_jaccard") >= threshold).select(col("b_id")),
+        r.batchBands)
+    }
 
   /** INCREMENTAL near-dup — MinHash+LSH against a SIGNATURE index of
     * everything already ingested, the near-dup analog of
@@ -559,6 +522,22 @@ object Dedup {
     math.min(cap, Int.MaxValue.toLong).toInt
   }
 
+  /** Hot-bucket exclusion for a banded probe: the `band_key` buckets
+    * whose occupancy over `all` (probed index ∪ batch; one row per doc
+    * per band, so rows = docs) exceeds `cap` leave both candidate legs.
+    * Combinable count, tiny broadcast anti-joins; `Int.MaxValue` skips
+    * the pass outright. */
+  private[graft] def excludeHotBuckets(batchBands: DataFrame,
+      all: DataFrame, cap: Int): (DataFrame, DataFrame) =
+    if (cap == Int.MaxValue) (batchBands, all)
+    else {
+      val hot = all.groupBy(col("band_key"))
+        .agg(count(lit(1)).as("n")).filter(col("n") > cap)
+        .select(col("band_key"))
+      (batchBands.join(broadcast(hot), Seq("band_key"), "left_anti"),
+        all.join(broadcast(hot), Seq("band_key"), "left_anti"))
+    }
+
   private[graft] final case class NearIncr(pairs: DataFrame,
       batchBands: DataFrame)
 
@@ -581,19 +560,8 @@ object Dedup {
     // built it — a caller re-banding an existing index would silently
     // block near-nothing. The race-free sidecar pins the layout at
     // creation (two racing first writers cannot seed different band
-    // counts); the `bands` column on each row stays for observability
-    // and pre-sidecar index adoption.
-    val storedBands = IndexMeta.ensureInt(indexDir, "bands", bands,
-      legacy = () =>
-        if (CdcTable.log(indexDir).isEmpty) None
-        else {
-          val vs = CdcTable.read(spark, indexDir)
-            .select(col("bands")).distinct().collect().map(_.getInt(0))
-          require(vs.length == 1,
-            s"index at $indexDir stores mixed band counts " +
-              s"(${vs.sorted.mkString(", ")}) — rebuild it")
-          Some(vs.head)
-        })
+    // counts); the `bands` column on each row stays for observability.
+    val storedBands = IndexMeta.ensureInt(indexDir, "bands", bands)
     require(storedBands == bands,
       s"index at $indexDir was built with bands=$storedBands but this " +
         s"call uses bands=$bands — stored band keys would never " +
@@ -613,46 +581,23 @@ object Dedup {
     // frame counts the batch for free; a corpus-sized "batch" must
     // fail loudly BEFORE its band keys broadcast
     val nDocs = batchBands.count() / bands
-    require(nDocs <= maxBatchRows,
-      s"incremental batch has $nDocs bandable documents (> " +
-        s"maxBatchRows=$maxBatchRows): this API broadcasts the " +
-        "batch's band keys and assumes bounded micro-batches — use " +
-        "Dedup.near for a corpus-sized input, or raise maxBatchRows " +
-        "if the broadcast genuinely fits")
-    // CdcTable.read snapshots the log NOW — a later append cannot
-    // leak this batch into its own "historical" side. On a CRASH
-    // REPLAY (index append committed, caller's downstream append not)
-    // the batch's own rows ARE in the log — excluding this txn's
-    // commit keeps the snapshot identical to the fresh run's, so the
-    // exact bucket-occupancy counts (and thus a finite/auto
-    // maxBandDocFreq cap) replay bit-identically instead of
-    // double-counting the batch on the historical side.
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty) {
-        val h = CdcTable.readExcludingTxn(spark, indexDir, txn)
-          .select(col("doc_id"), col("band_key"), col("sig"),
-            col("bands"))
-        // THE INDEX NEVER SHUFFLES: only rows in buckets the batch
-        // touches survive (the batch's distinct band keys broadcast;
-        // the index streams through a scan + semi-join probe). The
-        // semi-join keeps EVERY index row of a touched bucket, so
-        // downstream candidate generation, the maxBandDocFreq
-        // occupancy counts, and the sig lookups (every pair member
-        // shares a bucket with the batch by construction) are all
-        // complete — and all become bounded by touched-bucket volume
-        // instead of index size.
-        h.join(broadcast(batchBands.select(col("band_key")).distinct()),
-          Seq("band_key"), "left_semi")
-          // pin the probed subset: it feeds the hot-bucket occupancy
-          // count, the candidate join AND the sig lookup — unpinned,
-          // the index scan + semi-probe (and its generation-grouped
-          // read plan) would run up to three times per batch. The pin
-          // is bounded by touched-bucket volume, the same working set
-          // the probe already holds.
-          .localCheckpoint()
-      } else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        batchBands.schema)
+    IndexMeta.requireBoundedBatch(nDocs, maxBatchRows,
+      "bandable documents", "Dedup.near")
+    // THE INDEX NEVER SHUFFLES: only rows in buckets the batch touches
+    // survive, and EVERY index row of a touched bucket does, so
+    // downstream candidate generation, the maxBandDocFreq occupancy
+    // counts, and the sig lookups (every pair member shares a bucket
+    // with the batch by construction) are all complete — and all
+    // bounded by touched-bucket volume instead of index size. Own-txn
+    // exclusion keeps a crash replay's exact bucket-occupancy counts
+    // (and thus a finite/auto cap) bit-identical to the fresh run's.
+    // Pinned: the probed subset feeds the hot-bucket occupancy count,
+    // the candidate join AND the sig lookup — unpinned, the index scan
+    // + semi-probe (and its generation-grouped read plan) would run up
+    // to three times per batch.
+    val hist = IndexMeta.touched(indexDir, txn,
+        batchBands.select(col("band_key")), batchBands.schema, pin = true)(
+      _.select(col("doc_id"), col("band_key"), col("sig"), col("bands")))
     val all = hist.unionByName(batchBands)
     // hot-bucket exclusion: combinable count, tiny broadcast anti-join
     // on both join legs (candidate generation only — sigs unaffected).
@@ -662,17 +607,9 @@ object Dedup {
     // probe already holds). Occupancy counts band ROWS per bucket =
     // docs per bucket (one row per doc per band).
     val cap = maxBandDocFreq.getOrElse(autoBandDocFreq(
-      graft.sink.CdcTable.rowCountEstimate(indexDir, txn) / bands
+      CdcTable.rowCountEstimate(indexDir, txn) / bands
         + nDocs))
-    val (lSide, rSide) =
-      if (cap == Int.MaxValue) (batchBands, all)
-      else {
-        val hot = all.groupBy(col("band_key"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > cap)
-          .select(col("band_key"))
-        (batchBands.join(broadcast(hot), Seq("band_key"), "left_anti"),
-          all.join(broadcast(hot), Seq("band_key"), "left_anti"))
-      }
+    val (lSide, rSide) = excludeHotBuckets(batchBands, all, cap)
     val cand = lSide.select(col("doc_id").as("l_id"), col("band_key"))
       .join(rSide.select(col("doc_id").as("r_id"), col("band_key")),
         Seq("band_key"))
@@ -1169,9 +1106,8 @@ object Dedup {
       textCol: String, idCol: String, indexDir: String, l: Int,
       txn: Option[(String, Long)], maxBatchRows: Long,
       firstSeenWins: Boolean): DupSubIncr = {
-    import graft.sink.CdcTable
     require(l >= 2, s"minimum run length must be >= 2 tokens: $l")
-    val storedL = IndexMeta.ensureInt(indexDir, "dup_l", l, () => None)
+    val storedL = IndexMeta.ensureInt(indexDir, "dup_l", l)
     require(storedL == l,
       s"index at $indexDir was built with l=$storedL but this call " +
         s"uses l=$l — stored window ids would never match; rebuild " +
@@ -1183,13 +1119,8 @@ object Dedup {
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .localCheckpoint() // pin: feeds windows AND the final join; its
                          // row count is the batch-size guard for free
-    val nDocs = base.count()
-    require(nDocs <= maxBatchRows,
-      s"incremental batch has $nDocs documents (> maxBatchRows=" +
-        s"$maxBatchRows): this API broadcasts the batch's window-id " +
-        "set and assumes bounded micro-batches — use " +
-        "dupSubstringStats for a corpus-sized input, or raise " +
-        "maxBatchRows if the broadcast genuinely fits")
+    IndexMeta.requireBoundedBatch(base.count(), maxBatchRows,
+      "documents", "dupSubstringStats")
     val ex = base
       .select(col("id"), col("toks"), explode(expr(
         s"""CASE WHEN size(toks) >= $l
@@ -1201,22 +1132,10 @@ object Dedup {
           ", 1, 14), 16, 10) AS BIGINT)"))
       .select(col("id"), col("s"), col("wid"))
       .localCheckpoint() // shared by the probe, coverage, and append
-    // snapshot NOW; own-txn exclusion keeps crash replays on the
-    // pre-batch view (the r12-advisor contract)
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty)
-        CdcTable.readExcludingTxn(spark = batch.sparkSession,
-            dir = indexDir, excludeTxn = txn)
-          .select(col("doc_id"), col("wid"))
-          .join(broadcast(ex.select(col("wid")).distinct()), Seq("wid"),
-            "left_semi")
-      else batch.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            batch.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("wid",
-            org.apache.spark.sql.types.LongType))))
+    val hist = IndexMeta.touched(indexDir, txn, ex.select(col("wid")),
+        StructType(Seq(StructField("doc_id", batch.schema(idCol).dataType),
+          StructField("wid", LongType))), pin = false)(
+      _.select(col("doc_id"), col("wid")))
     val batchDocWids = ex.select(col("id").as("doc_id"), col("wid"))
       .distinct()
       .localCheckpoint() // shared by the dup count and the caller's
@@ -1272,17 +1191,12 @@ object Dedup {
     * criterion as an ingest gate, completing the dedup-stream family
     * (exact / near / winnow / dup-substring): every micro-batch
     * computes its docs' duplicated-position coverage against the
-    * KEPT-ONLY window index under the first-seen-wins rule (history,
-    * or a lower-id doc in the same batch); docs at or above
-    * `maxDupRatio` drop, the rest append to `outDir` and their
-    * window rows to the index. Exactly-once across restarts via
-    * per-role txn markers; assumes non-decreasing ids.
+    * window index under the first-seen-wins rule; docs at or above
+    * `maxDupRatio` drop. Gate contract: [[IndexMeta.keptOnlyStream]].
     *
-    * Kept-only indexing bounds the index by the DEDUPED corpus's
-    * window volume, and because no candidate pairs exist anywhere in
-    * this family, there is no mass-duplicate blowup to cap — a page
-    * duplicated millions of times costs one set of index rows and
-    * each new copy one probe. */
+    * No candidate pairs exist anywhere in this family, so there is no
+    * mass-duplicate blowup to cap — a page duplicated millions of
+    * times costs one set of index rows and each new copy one probe. */
   def dupSubstringDedupStreamToTable(stream: DataFrame,
       textCol: String, idCol: String, indexDir: String, outDir: String,
       checkpointDir: String, maxDupRatio: Double = 0.5, l: Int = 8,
@@ -1291,29 +1205,14 @@ object Dedup {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(maxDupRatio > 0 && maxDupRatio <= 1,
       s"maxDupRatio must be in (0,1]: $maxDupRatio")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val r = dupSubstringIncrementalCore(batch, textCol, idCol,
-          indexDir, l, txn = Some((s"$appId-idx", id)),
-          maxBatchRows = maxBatchRows, firstSeenWins = true)
-        // one evaluation feeds the index filter AND the out anti-join
-        val dupIds = r.stats
-          .filter(col("dup_ratio") >= maxDupRatio)
-          .select(col("id").as("__dup_id")).distinct()
-          .localCheckpoint()
-        graft.sink.CdcTable.append(
-          r.batchDocWids.join(dupIds,
-            col("doc_id") === col("__dup_id"), "left_anti"),
-          indexDir, partitionBy = Nil, txn = Some((s"$appId-idx", id)))
-        graft.sink.CdcTable.append(
-          batch.join(dupIds, batch(idCol) === col("__dup_id"),
-            "left_anti"),
-          outDir, txn = Some((s"$appId-out", id)))
-        ()
-      }
-      .start()
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "doc_id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = dupSubstringIncrementalCore(batch, textCol, idCol,
+        indexDir, l, txn, maxBatchRows = maxBatchRows,
+        firstSeenWins = true)
+      (r.stats.filter(col("dup_ratio") >= maxDupRatio).select(col("id")),
+        r.batchDocWids)
+    }
   }
 
   /** The DESTRUCTIVE half of [[dupSubstringStats]] — Lee et al.'s
@@ -1863,11 +1762,10 @@ object Dedup {
       threshold: Double, k: Int, w: Int, txn: Option[(String, Long)],
       maxFpDocFreq: Option[Int], maxBatchRows: Long): WinnowIncr = {
     import graft.sink.CdcTable
-    val spark = batch.sparkSession
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1]: $threshold")
     val meta = IndexMeta.ensure(indexDir,
-      Map("winnow_k" -> k, "winnow_w" -> w), () => None)
+      Map("winnow_k" -> k, "winnow_w" -> w))
     val storedK = meta.getOrElse("winnow_k", k)
     val storedW = meta.getOrElse("winnow_w", w)
     require(storedK == k && storedW == w,
@@ -1883,45 +1781,23 @@ object Dedup {
     // index append
     val staged = winnowSids(batch, idCol, textCol, k, w)
       .localCheckpoint()
-    val nDocs = staged.count()
-    require(nDocs <= maxBatchRows,
-      s"incremental batch has $nDocs documents (> " +
-        s"maxBatchRows=$maxBatchRows): this API broadcasts the " +
-        "batch's fingerprint set and assumes bounded micro-batches — " +
-        "use winnowSids + the batch pair core for a corpus-sized " +
-        "input, or raise maxBatchRows if the broadcast genuinely fits")
+    IndexMeta.requireBoundedBatch(staged.count(), maxBatchRows,
+      "documents", "winnowSids + the batch pair core")
     val batchFps = staged
       .select(col("id").as("doc_id"), size(col("sids")).as("nfp"),
         explode(col("sids")).as("fp"))
     val cap = maxFpDocFreq.getOrElse(autoBandDocFreq(
       CdcTable.rowCountEstimate(indexDir, excludeTxn = txn)))
-    // snapshot NOW: the append below cannot leak this batch into its
-    // own "historical" side. Only rows whose fingerprint the batch
-    // carries survive the probe (broadcast semi-probe — the index is
-    // never exchanged). Own-txn exclusion mirrors the band index: a
-    // crash replay whose index append already committed must probe
-    // the same pre-batch snapshot (hot-fp df counts included) its
-    // original run saw.
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty)
-        CdcTable.readExcludingTxn(spark, indexDir, txn)
-          .select(col("doc_id"), col("nfp"), col("fp"))
-          .join(broadcast(batchFps.select(col("fp")).distinct()),
-            Seq("fp"))
-          .select(col("doc_id"), col("nfp"), col("fp"))
-          // pin the probed subset: it feeds the hot-fp df count, the
-          // size lookup AND the pair join — unpinned, the index scan
-          // + semi-probe would run up to three times per batch
-          .localCheckpoint()
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            batch.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("nfp",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("fp",
-            org.apache.spark.sql.types.LongType))))
+    // own-txn exclusion mirrors the band index: a crash replay whose
+    // index append already committed probes the same pre-batch
+    // snapshot (hot-fp df counts included) its original run saw.
+    // Pinned: the probed subset feeds the hot-fp df count, the size
+    // lookup AND the pair join — unpinned, the index scan + semi-probe
+    // would run up to three times per batch.
+    val hist = IndexMeta.touched(indexDir, txn, batchFps.select(col("fp")),
+        StructType(Seq(StructField("doc_id", batch.schema(idCol).dataType),
+          StructField("nfp", IntegerType), StructField("fp", LongType))),
+        pin = true)(_.select(col("doc_id"), col("nfp"), col("fp")))
     // hot-fingerprint exclusion: df counted over the PROBED subset
     // (probe is keyed on fp, so the subset holds a hot fp's full
     // history); the hot list is tiny by construction → broadcast
@@ -1975,49 +1851,27 @@ object Dedup {
 
   /** Streaming MOSS-dedup-to-table — the excerpt/verbatim-run analog
     * of [[nearDedupStreamToTable]]: every micro-batch winnows and
-    * probes the KEPT-ONLY fingerprint index; batch docs whose
-    * winnowed containment against any earlier kept doc (historical,
-    * or a lower-id doc in the same batch) reaches `threshold` are
-    * dropped, the rest append to `outDir` and their fingerprints to
-    * the index. Exactly-once across restarts via per-role txn
-    * markers; assumes non-decreasing ids (a pair's higher id loses —
-    * first-seen wins, the only online-consistent rule).
+    * probes the fingerprint index; batch docs whose winnowed
+    * containment against any earlier kept doc reaches `threshold` are
+    * dropped. Gate contract: [[IndexMeta.keptOnlyStream]].
     *
-    * Kept-only indexing bounds per-fingerprint document frequency
-    * structurally (a million-copy boilerplate page costs ONE index
-    * entry), so this path runs UNCAPPED — inheriting the √n cap
-    * would keep and index every copy of a page arriving in an
-    * over-cap batch, permanently disabling its dedup (the
-    * [[nearDedupStreamToTable]] analysis verbatim). */
+    * Runs UNCAPPED: kept-only indexing bounds per-fingerprint document
+    * frequency structurally, and the √n cap would keep and index every
+    * copy of a page arriving in an over-cap batch, permanently
+    * disabling its dedup (see [[nearDedupStreamToTable]]). */
   def winnowDedupStreamToTable(stream: DataFrame, textCol: String,
       idCol: String, indexDir: String, outDir: String,
       checkpointDir: String, threshold: Double = 0.5, k: Int = 3,
       w: Int = 4, appId: String = "graft-winnowdedup",
       maxBatchRows: Long = Similarity.MaxIncrementalBatchRows)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val r = winnowIncrementalCore(batch, textCol, idCol, indexDir,
-          threshold, k, w, txn = Some((s"$appId-idx", id)),
-          maxFpDocFreq = Some(Int.MaxValue),
-          maxBatchRows = maxBatchRows)
-        // one evaluation feeds the index filter AND the out anti-join
-        val dupIds = r.pairs.select(col("b_id").as("__dup_id"))
-          .distinct().localCheckpoint()
-        graft.sink.CdcTable.append(
-          r.batchFps.join(dupIds,
-            col("doc_id") === col("__dup_id"), "left_anti")
-            .select(col("doc_id"), col("nfp"), col("fp")),
-          indexDir, txn = Some((s"$appId-idx", id)))
-        graft.sink.CdcTable.append(
-          batch.join(dupIds, batch(idCol) === col("__dup_id"),
-            "left_anti"),
-          outDir, txn = Some((s"$appId-out", id)))
-        ()
-      }
-      .start()
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "doc_id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = winnowIncrementalCore(batch, textCol, idCol, indexDir,
+        threshold, k, w, txn, maxFpDocFreq = Some(Int.MaxValue),
+        maxBatchRows = maxBatchRows)
+      (r.pairs.select(col("b_id")), r.batchFps)
+    }
 
   /** (id, pfs: array<struct<pos,fp>>) — the codegen'd `winnow_fps`
     * native (hashing + the monotonic-deque window argmin in ONE JVM

@@ -713,7 +713,6 @@ object Multimodal {
       maxBandDocFreq: Option[Int], maxBatchRows: Long,
       txn: Option[(String, Long)] = None): DHashIncr = {
     import graft.sink.CdcTable
-    val spark = batch.sparkSession
     // 4 bands over 63 bits: a pair within Hamming `radius` shares at
     // least one untouched band only while radius < bands — past 3 the
     // pigeonhole guarantee (and the "exact recall" contract) is gone
@@ -727,33 +726,19 @@ object Multimodal {
     // the batch for free; a corpus-sized "batch" must fail loudly
     // BEFORE its band keys broadcast
     val nDocs = batchBands.count() / 4
-    require(nDocs <= maxBatchRows,
-      s"incremental batch has $nDocs hashed documents (> " +
-        s"maxBatchRows=$maxBatchRows): this API broadcasts the " +
-        "batch's band keys and assumes bounded micro-batches — use " +
-        "the batch-global banded join for a corpus-sized input, or " +
-        "raise maxBatchRows if the broadcast genuinely fits")
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty) {
-        val stored = CdcTable.log(indexDir).last.schema.fieldNames.toSet
-        require(stored == Set("doc_id", "band_key", "dhash"),
+    IndexMeta.requireBoundedBatch(nDocs, maxBatchRows, "hashed documents",
+      "the batch-global banded join")
+    // pinned: the probed subset feeds the hot-bucket occupancy count,
+    // the candidate join AND the hash lookup — unpinned, the index scan
+    // + semi-probe would run up to three times per batch
+    val hist = IndexMeta.touched(indexDir, txn,
+        batchBands.select(col("band_key")), batchBands.schema, pin = true) {
+      h =>
+        require(h.columns.toSet == Set("doc_id", "band_key", "dhash"),
           s"index at $indexDir is not a dHash index (columns: " +
-            s"${stored.mkString(", ")})")
-        // THE INDEX NEVER SHUFFLES: the batch's bounded band-key set
-        // broadcasts; the index streams through a scan + semi-join
-        // probe (crash replays excluded via the txn marker, so the
-        // snapshot — and the occupancy counts below — replay
-        // bit-identically)
-        CdcTable.readExcludingTxn(spark, indexDir, txn)
-          .join(broadcast(batchBands.select(col("band_key")).distinct()),
-            Seq("band_key"), "left_semi")
-          // pin the probed subset: it feeds the hot-bucket occupancy
-          // count, the candidate join AND the hash lookup — unpinned,
-          // the index scan + semi-probe would run up to three times
-          // per batch (bounded by touched-bucket volume)
-          .localCheckpoint()
-      } else spark.createDataFrame(
-        new java.util.ArrayList[Row](), batchBands.schema)
+            s"${h.columns.mkString(", ")})")
+        h
+    }
     val all = hist.unionByName(batchBands)
     // hot-bucket exclusion, the Dedup.nearIncremental shape: cap
     // explicit or manifest-derived (√n over indexed docs + batch —
@@ -761,15 +746,7 @@ object Multimodal {
     // the touched buckets the probe already holds
     val cap = maxBandDocFreq.getOrElse(Dedup.autoBandDocFreq(
       CdcTable.rowCountEstimate(indexDir, txn) / 4 + nDocs))
-    val (lSide, rSide) =
-      if (cap == Int.MaxValue) (batchBands, all)
-      else {
-        val hot = all.groupBy(col("band_key"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > cap)
-          .select(col("band_key"))
-        (batchBands.join(broadcast(hot), Seq("band_key"), "left_anti"),
-          all.join(broadcast(hot), Seq("band_key"), "left_anti"))
-      }
+    val (lSide, rSide) = Dedup.excludeHotBuckets(batchBands, all, cap)
     val cand = lSide.select(col("doc_id").as("l_id"), col("band_key"))
       .join(rSide.select(col("doc_id").as("r_id"), col("band_key")),
         Seq("band_key"))
@@ -829,43 +806,26 @@ object Multimodal {
     * the deterministic byte-fold stub otherwise), blocks against the
     * dHash index of everything KEPT so far, drops batch docs within
     * `radius` Hamming of ANY earlier doc (historical, or a lower-id
-    * doc in the same batch), and appends the rest to `outDir`.
-    * Exactly-once across restarts via per-role txn markers (the
-    * [[graft.ext.Dedup.nearDedupStreamToTable]] contract, including
-    * the non-decreasing-id assumption: a pair's higher id loses).
+    * doc in the same batch), and appends the rest to `outDir`. Gate
+    * contract: [[IndexMeta.keptOnlyStream]].
     *
-    * Kept-only indexing bounds bucket occupancy structurally (one
-    * entry per distinct image), so this path runs UNCAPPED — the √n
-    * cap would suppress the very pairs that keep a mass-duplicated
-    * image from re-entering (see the nearDedupStreamToTable
-    * analysis, which applies verbatim). */
+    * Runs UNCAPPED: kept-only indexing bounds bucket occupancy
+    * structurally (one entry per distinct image), and the √n cap
+    * would suppress the very pairs that keep a mass-duplicated image
+    * from re-entering (see
+    * [[graft.ext.Dedup.nearDedupStreamToTable]]). */
   def dHashDedupStreamToTable(stream: DataFrame, contentCol: String,
       idCol: String, indexDir: String, outDir: String,
       checkpointDir: String, radius: Int = 3,
       appId: String = "graft-dhashdedup",
       maxBatchRows: Long = Similarity.MaxIncrementalBatchRows)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val r = dHashIncrementalCore(dHashOf(batch, contentCol),
-          idCol, "dhash", indexDir, radius,
-          maxBandDocFreq = Some(Int.MaxValue),
-          maxBatchRows = maxBatchRows, txn = Some((s"$appId-idx", id)))
-        // pairs are already Hamming-verified: every b_id is a dup.
-        // one evaluation feeds the index filter AND the out anti-join
-        val dupIds = r.pairs.select(col("b_id").as("__dup_id"))
-          .distinct().localCheckpoint()
-        graft.sink.CdcTable.append(
-          r.batchBands.join(dupIds,
-            col("doc_id") === col("__dup_id"), "left_anti"),
-          indexDir, txn = Some((s"$appId-idx", id)))
-        graft.sink.CdcTable.append(
-          batch.join(dupIds, batch(idCol) === col("__dup_id"),
-            "left_anti"),
-          outDir, txn = Some((s"$appId-out", id)))
-        ()
-      }
-      .start()
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "doc_id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = dHashIncrementalCore(dHashOf(batch, contentCol), idCol,
+        "dhash", indexDir, radius, maxBandDocFreq = Some(Int.MaxValue),
+        maxBatchRows = maxBatchRows, txn = txn)
+      // pairs are already Hamming-verified: every b_id is a dup
+      (r.pairs.select(col("b_id")), r.batchBands)
+    }
 }

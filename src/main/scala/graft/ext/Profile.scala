@@ -134,12 +134,9 @@ object Profile {
     // (merge width) AND the column set — an append with a different
     // cols list would silently skew per-column n_rows/n_null in the
     // merged profile (each column's counts must cover every batch).
-    // Sidecars created before profile_cols existed lack the key and
-    // adopt this call's set implicitly (profileSync's stored-column
-    // check still guards those).
     val meta = IndexMeta.ensureRaw(tableDir,
       Map("profile_k" -> k.toString,
-        "profile_cols" -> cols.sorted.mkString(",")), () => None)
+        "profile_cols" -> cols.sorted.mkString(",")))
     val won = meta.get("profile_k").map(_.trim.toInt).getOrElse(
       sys.error(s"index meta at $tableDir has no key 'profile_k'"))
     require(won == k,
@@ -148,13 +145,12 @@ object Profile {
       s"index at $tableDir is FILE-keyed (profileSyncFiles) — a " +
         "batch-keyed append would corrupt its manifest join; sync it " +
         "with profileSyncFiles instead")
-    meta.get("profile_cols").foreach { stored =>
-      require(stored == cols.sorted.mkString(","),
-        s"profile index at $tableDir pins columns [$stored] but this " +
-          s"append carries [${cols.sorted.mkString(",")}] — a " +
-          "partial-column append would undercount the merged profile; " +
-          "recreate the index to change its column set")
-    }
+    val stored = meta.getOrElse("profile_cols", "")
+    require(stored == cols.sorted.mkString(","),
+      s"profile index at $tableDir pins columns [$stored] but this " +
+        s"append carries [${cols.sorted.mkString(",")}] — a " +
+        "partial-column append would undercount the merged profile; " +
+        "recreate the index to change its column set")
     val perCol: Seq[Column] = cols.flatMap { c =>
       val (minL, maxL, minD, maxD, _, _, minS, maxS) =
         typedSlots(batch.schema(c).dataType, c)
@@ -226,16 +222,11 @@ object Profile {
     val hw = idxLog.flatMap(_.txn)
       .filter(_._1 == appId).map(_._2).maxOption.getOrElse(0L)
     if (idxLog.nonEmpty) {
-      // the creation-time pinned set lives in the sidecar (zero IO);
-      // only pre-pin indexes fall back to scanning stored rows
-      val stored = graft.core.Fs.readString(s"$indexDir/_graft_index_meta")
-        .flatMap(_.linesIterator.collectFirst {
-          case l if l.startsWith("profile_cols=") =>
-            l.substring(13).split(',').toSet
-        })
-        .getOrElse(CdcTable.read(spark, indexDir)
-          .select(col("column")).distinct()
-          .collect().map(_.getString(0)).toSet)
+      // the creation-time pinned set lives in the sidecar (zero IO)
+      val stored = IndexMeta.stored(indexDir).flatMap(_.get("profile_cols"))
+        .map(_.split(',').toSet)
+        .getOrElse(sys.error(
+          s"profile index at $indexDir pins no column set — recreate it"))
       require(stored == cols.toSet,
         s"profile index at $indexDir covers ${stored.mkString(",")} " +
           s"but sync asked for ${cols.mkString(",")} — partial-column " +
@@ -267,11 +258,8 @@ object Profile {
 
   /** The table's k, pinned at creation in the sidecar. */
   private[graft] def storedProfileK(tableDir: String): Int =
-    graft.core.Fs.readString(s"$tableDir/_graft_index_meta")
-      .flatMap(_.linesIterator.collectFirst {
-        case l if l.startsWith("profile_k=") =>
-          l.substring(10).trim.toInt
-      })
+    IndexMeta.stored(tableDir).flatMap(_.get("profile_k"))
+      .map(_.trim.toInt)
       .getOrElse(sys.error(
         s"no profile_k sidecar at $tableDir — not a profile index"))
 
@@ -319,7 +307,7 @@ object Profile {
       Map("profile_k" -> k.getOrElse(256).toString,
         "profile_cols" -> cols.sorted.mkString(","),
         "profile_by" -> "file",
-        "profile_table" -> canon), () => None)
+        "profile_table" -> canon))
     require(meta.get("profile_by").contains("file"),
       s"index at $indexDir is a batch-keyed profile index — use " +
         "profileAppend/profileSync with it, or recreate it BY FILE")
@@ -439,11 +427,7 @@ object Profile {
       indexDir: String, commitAsOf: Option[Long] = None,
       timestampAsOf: Option[Long] = None): DataFrame = {
     import graft.sink.CdcTable
-    val meta = graft.core.Fs.readString(s"$indexDir/_graft_index_meta")
-      .map(_.linesIterator.flatMap { l =>
-        val i = l.indexOf('=')
-        if (i < 0) None else Some(l.substring(0, i) -> l.substring(i + 1))
-      }.toMap)
+    val meta = IndexMeta.stored(indexDir)
       .getOrElse(sys.error(s"no profile sidecar at $indexDir"))
     require(meta.get("profile_by").contains("file"),
       s"index at $indexDir is not a file-keyed profile index")

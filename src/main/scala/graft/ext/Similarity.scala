@@ -692,7 +692,6 @@ object Similarity {
       planes: Int, txn: Option[(String, Long)],
       maxBatchRows: Long, bands: Int): VecIncr = {
     import graft.sink.CdcTable
-    val spark = batch.sparkSession
     require(planes >= 0 && planes <= StoredPlanes,
       s"planes must be in [0 (auto), $StoredPlanes], got $planes")
     require(bands >= 0 && bands <= BandOffsets.length,
@@ -702,7 +701,7 @@ object Similarity {
     val hashed = batch.filter(col(embCol).isNotNull)
       .select(col(idCol).as("id"), col(embCol).as("e"))
     // every band family's bucket is stored at full width; `planes`
-    // records that width per row (observability + legacy adoption)
+    // records that width per row (observability)
     val batchRows = BandOffsets.zipWithIndex
       .foldLeft(hashed) { case (df, (off, i)) =>
         df.withColumn(bandCol(i), bucketFor("e",
@@ -713,32 +712,13 @@ object Similarity {
     // the checkpointed batch counts for free; a corpus-sized "batch"
     // must fail loudly BEFORE its bucket keys broadcast
     val nBatch = batchRows.count()
-    require(nBatch <= maxBatchRows,
-      s"incremental batch has $nBatch rows (> maxBatchRows=" +
-        s"$maxBatchRows): this API broadcasts the batch's bucket keys " +
-        "and assumes bounded micro-batches — use nearDupPairs for a " +
-        "corpus-sized input, or raise maxBatchRows if the broadcast " +
-        "genuinely fits")
-    // stored layout is pinned by the race-free sidecar; indexes from
-    // before the sidecar stored one narrower bval — adopt their width
-    // (the probe clamps to it; prefixes stay valid) and band count 1
+    IndexMeta.requireBoundedBatch(nBatch, maxBatchRows, "rows",
+      "nearDupPairs")
+    // stored layout is pinned by the race-free sidecar
     val meta = IndexMeta.ensure(indexDir,
-      Map("bvalBits" -> StoredPlanes,
-        "bvalBands" -> BandOffsets.length),
-      legacy = () =>
-        if (CdcTable.log(indexDir).isEmpty) None
-        else {
-          val vs = CdcTable.read(spark, indexDir)
-            .select(col("planes")).distinct().collect().map(_.getInt(0))
-          require(vs.length == 1,
-            s"index at $indexDir stores mixed plane widths " +
-              s"(${vs.sorted.mkString(", ")}) — rebuild it")
-          Some(Map("bvalBits" -> vs.head, "bvalBands" -> 1))
-        })
-    val storedBits = meta.getOrElse("bvalBits", StoredPlanes)
-    // sidecars written before banding existed carry no bvalBands key:
-    // those indexes stored exactly one bucket column
-    val storedBands = meta.getOrElse("bvalBands", 1)
+      Map("bvalBits" -> StoredPlanes, "bvalBands" -> BandOffsets.length))
+    val storedBits = meta("bvalBits")
+    val storedBands = meta("bvalBands")
     require(bands <= storedBands,
       s"index at $indexDir stores $storedBands band " +
         s"famil${if (storedBands == 1) "y" else "ies"} but this probe " +
@@ -763,25 +743,13 @@ object Similarity {
           col(bandCol(i)).bitwiseAND(lit(mask)).as("bkey"))
       }.reduce(_ unionByName _)
     val probe = banded(batchRows)
-    // snapshot the log NOW: a later append must not leak this batch
-    // into its own "historical" side
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty) {
-        val h = banded(CdcTable.read(spark, indexDir)
-          .select(col("id") +: col("e") +:
-            (0 until nb).map(i => col(bandCol(i))): _*))
-        // THE INDEX NEVER SHUFFLES: only touched buckets survive the
-        // scan (the batch's ≤ bands·2^p distinct (band, key) pairs
-        // broadcast; the index streams through a semi-join probe), so
-        // the candidate join is bounded by touched-bucket volume, not
-        // index size
-        h.join(broadcast(probe.select(col("band"), col("bkey"))
-            .distinct()),
-          Seq("band", "bkey"), "left_semi")
-      } else
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          probe.schema)
+    // THE INDEX NEVER SHUFFLES: only touched buckets survive the scan
+    // (the batch's ≤ bands·2^p distinct (band, key) pairs broadcast),
+    // so the candidate join is bounded by touched-bucket volume
+    val hist = IndexMeta.touched(indexDir, txn,
+        probe.select(col("band"), col("bkey")), probe.schema, pin = false)(
+      h => banded(h.select(col("id") +: col("e") +:
+        (0 until nb).map(i => col(bandCol(i))): _*)))
     val pairs = probe
       .select(col("id").as("l_id"), col("e").as("le"), col("band"),
         col("bkey"))
@@ -803,12 +771,8 @@ object Similarity {
   /** Streaming vector dedup-to-table: the embedding analog of
     * [[graft.ext.Dedup.nearDedupStreamToTable]] — every micro-batch
     * LSH-matches against the vector index, batch vectors whose EXACT
-    * cosine against any earlier vector (historical, or a lower-id
-    * vector in the same batch) reaches `threshold` are dropped, the
-    * rest append to `outDir`. Only KEPT vectors enter the index
-    * (bounded by the deduped corpus; copies are caught via the kept
-    * survivor). Assumes non-decreasing ids across batches; exactly-
-    * once across restarts via per-role txn markers.
+    * cosine against any earlier vector reaches `threshold` are
+    * dropped. Gate contract: [[IndexMeta.keptOnlyStream]].
     *
     * NULL-embedding rows cannot hash or compare: they pass through to
     * `outDir` unexamined and never enter the index — so identical
@@ -823,27 +787,12 @@ object Similarity {
       maxBatchRows: Long = MaxIncrementalBatchRows,
       bands: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val r = nearDupIncrementalCore(batch, idCol, threshold,
-          indexDir, embCol, planes, txn = Some((s"$appId-idx", id)),
-          maxBatchRows = maxBatchRows, bands = bands)
-        // one evaluation feeds the index filter AND the out anti-join
-        val dupIds = r.pairs.select(col("b_id").as("__dup_id"))
-          .distinct().localCheckpoint()
-        graft.sink.CdcTable.append(
-          r.batchRows.join(dupIds,
-            col("id") === col("__dup_id"), "left_anti"),
-          indexDir, txn = Some((s"$appId-idx", id)))
-        graft.sink.CdcTable.append(
-          batch.join(dupIds, batch(idCol) === col("__dup_id"),
-            "left_anti"),
-          outDir, txn = Some((s"$appId-out", id)))
-        ()
-      }
-      .start()
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = nearDupIncrementalCore(batch, idCol, threshold, indexDir,
+        embCol, planes, txn, maxBatchRows = maxBatchRows, bands = bands)
+      (r.pairs.select(col("b_id")), r.batchRows)
+    }
 
   /** Fold the incremental vector index's per-batch append commits
     * into one compact file set — the vector analog of
@@ -990,12 +939,10 @@ object Similarity {
       indexDir: String, embCol: String = "embedding",
       txn: Option[(String, Long)] = None,
       maxBatchRows: Long = MaxIncrementalBatchRows): DataFrame = {
-    require(cents.nonEmpty, "need at least one centroid")
     val r = semDedupIncrementalCore(batch, idCol, threshold,
-      df => df.withColumn("cid",
-        ivfAssignLit("e", cents)),
-      indexDir, embCol, txn, maxBatchRows)
-    appendKept(r, indexDir, txn)
+      litAssign(cents), indexDir, embCol, txn, maxBatchRows)
+    IndexMeta.appendKept(r.assigned, "id",
+      r.pairs.select(col("b_id")).distinct(), indexDir, txn)
     r.pairs
   }
 
@@ -1017,64 +964,49 @@ object Similarity {
       txn: Option[(String, Long)] = None,
       maxBatchRows: Long = MaxIncrementalBatchRows): DataFrame = {
     val r = semDedupIncrementalCore(batch, idCol, threshold,
-      df => df
-        .crossJoin(broadcast(centsDf.select(col("cid"), col("ce"))))
-        .withColumn("d", dotExpr("e", "ce"))
-        .groupBy(col("id"))
-        .agg(max(struct(col("d").as("d"), (-col("cid")).as("nc")))
-            .as("best"),
-          first(col("e")).as("e"))
-        .select(col("id"), col("e"), (-col("best.nc")).as("cid")),
-      indexDir, embCol, txn, maxBatchRows)
-    appendKept(r, indexDir, txn)
+      joinAssign(centsDf), indexDir, embCol, txn, maxBatchRows)
+    IndexMeta.appendKept(r.assigned, "id",
+      r.pairs.select(col("b_id")).distinct(), indexDir, txn)
     r.pairs
   }
 
-  private def appendKept(r: SemIncr, indexDir: String,
-      txn: Option[(String, Long)]): Unit = {
-    val dup = r.pairs.select(col("b_id")).distinct()
-    graft.sink.CdcTable.append(
-      r.assigned.join(dup, r.assigned("id") === dup("b_id"),
-        "left_anti"),
-      indexDir, txn = txn)
+  /** Literal-centroid cell assignment ([[ivfAssignLit]]). */
+  private def litAssign(cents: Seq[(Long, Array[Float])])
+      : DataFrame => DataFrame = {
+    require(cents.nonEmpty, "need at least one centroid")
+    _.withColumn("cid", ivfAssignLit("e", cents))
   }
+
+  /** Broadcast-join cell assignment — [[semDedupJoin]]'s argmax. */
+  private def joinAssign(centsDf: DataFrame): DataFrame => DataFrame =
+    _.crossJoin(broadcast(centsDf.select(col("cid"), col("ce"))))
+      .withColumn("d", dotExpr("e", "ce"))
+      .groupBy(col("id"))
+      .agg(max(struct(col("d").as("d"), (-col("cid")).as("nc")))
+          .as("best"),
+        first(col("e")).as("e"))
+      .select(col("id"), col("e"), (-col("best.nc")).as("cid"))
 
   private final case class SemIncr(pairs: DataFrame, assigned: DataFrame)
 
-  /** Pair computation without the index append — `pairs` pins the
-    * pre-call index snapshot ([[graft.sink.CdcTable.read]] fixes the
-    * file list at construction). */
+  /** Pair computation without the index append — `pairs` reads the
+    * pre-call index snapshot (the probe fixes its file list at
+    * construction, minus this txn's own commit). */
   private def semDedupIncrementalCore(batch: DataFrame, idCol: String,
       threshold: Double, assign: DataFrame => DataFrame,
       indexDir: String, embCol: String, txn: Option[(String, Long)],
       maxBatchRows: Long): SemIncr = {
-    import graft.sink.CdcTable
-    val spark = batch.sparkSession
     val assigned = assign(batch.filter(col(embCol).isNotNull)
         .select(col(idCol).as("id"), col(embCol).as("e")))
       .select(col("id"), col("e"), col("cid"))
       .localCheckpoint() // pin: feeds the join AND the index append
-    val nBatch = assigned.count()
-    require(nBatch <= maxBatchRows,
-      s"incremental batch has $nBatch rows (> maxBatchRows=" +
-        s"$maxBatchRows): this API broadcasts the batch's cell keys " +
-        "and assumes bounded micro-batches — use semDedup for a " +
-        "corpus-sized input, or raise maxBatchRows if the broadcast " +
-        "genuinely fits")
+    IndexMeta.requireBoundedBatch(assigned.count(), maxBatchRows, "rows",
+      "semDedup")
     val earlier = assigned
       .select(col("id").as("a_id"), col("e").as("ea"), col("cid"))
-    val hist =
-      if (CdcTable.log(indexDir).nonEmpty)
-        // THE INDEX NEVER SHUFFLES: the batch's distinct cell ids
-        // broadcast; only touched cells survive the scan
-        CdcTable.read(spark, indexDir)
-          .select(col("id").as("a_id"), col("e").as("ea"), col("cid"))
-          .join(broadcast(assigned.select(col("cid")).distinct()),
-            Seq("cid"), "left_semi")
-      else
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          earlier.schema)
+    val hist = IndexMeta.touched(indexDir, txn, assigned.select(col("cid")),
+        earlier.schema, pin = false)(
+      _.select(col("id").as("a_id"), col("e").as("ea"), col("cid")))
     val pairs = assigned
       .select(col("id").as("b_id"), col("e").as("eb"), col("cid"))
       .join(hist.unionByName(earlier), Seq("cid"))
@@ -1088,11 +1020,9 @@ object Similarity {
 
   /** Streaming SemDeDup-to-table — the semantic analog of
     * [[vecDedupStreamToTable]]: every micro-batch runs
-    * [[semDedupIncremental]] against the kept-exemplar index; dropped
-    * rows vanish, survivors append (with ALL their original columns)
-    * to `outDir` and (as (id, e, cid)) to the index. Exactly-once
-    * across restarts via per-role txn markers; the centroid model is
-    * passed in and must stay fixed for the life of the index (see
+    * [[semDedupIncremental]]'s probe against the kept-exemplar index
+    * (gate contract: [[IndexMeta.keptOnlyStream]]). The centroid model
+    * is passed in and must stay fixed for the life of the index (see
     * [[semDedupIncremental]]). NULL-embedding rows cannot assign or
     * compare: they pass through to `outDir` unexamined and never
     * enter the index. */
@@ -1102,17 +1032,18 @@ object Similarity {
       embCol: String = "embedding", appId: String = "graft-semdedup",
       maxBatchRows: Long = MaxIncrementalBatchRows)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(cents.nonEmpty, "need at least one centroid")
-    semDedupStreamGlue(stream, idCol,
-      df => df.withColumn("cid",
-        ivfAssignLit("e", cents)),
-      indexDir, outDir, checkpointDir, threshold, embCol, appId,
-      maxBatchRows)
+    val assign = litAssign(cents)
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = semDedupIncrementalCore(batch, idCol, threshold, assign,
+        indexDir, embCol, txn, maxBatchRows)
+      (r.pairs.select(col("b_id")), r.assigned)
+    }
   }
 
   /** [[semDedupStreamToTable]] with a centroid DATAFRAME — the
     * LARGE-k streaming configuration ([[semDedupIncrementalJoin]]'s
-    * assignment inside the glue): at stream scale the cell model
+    * assignment inside the gate): at stream scale the cell model
     * wants thousands of cells, past the literal argmax's ~64-centroid
     * ceiling. The centroid frame is re-resolved per micro-batch
     * evaluation, but the fixed-centroid contract still holds — the
@@ -1124,44 +1055,12 @@ object Similarity {
       embCol: String = "embedding", appId: String = "graft-semdedup",
       maxBatchRows: Long = MaxIncrementalBatchRows)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    semDedupStreamGlue(stream, idCol,
-      df => df
-        .crossJoin(broadcast(centsDf.select(col("cid"), col("ce"))))
-        .withColumn("d", dotExpr("e", "ce"))
-        .groupBy(col("id"))
-        .agg(max(struct(col("d").as("d"), (-col("cid")).as("nc")))
-            .as("best"),
-          first(col("e")).as("e"))
-        .select(col("id"), col("e"), (-col("best.nc")).as("cid")),
-      indexDir, outDir, checkpointDir, threshold, embCol, appId,
-      maxBatchRows)
-
-  private def semDedupStreamGlue(stream: DataFrame, idCol: String,
-      assign: DataFrame => DataFrame, indexDir: String,
-      outDir: String, checkpointDir: String, threshold: Double,
-      embCol: String, appId: String, maxBatchRows: Long)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val r = semDedupIncrementalCore(batch, idCol, threshold,
-          assign, indexDir, embCol, txn = Some((s"$appId-idx", id)),
-          maxBatchRows = maxBatchRows)
-        // one evaluation feeds the index filter AND the out anti-join
-        val dupIds = r.pairs.select(col("b_id").as("__dup_id"))
-          .distinct().localCheckpoint()
-        graft.sink.CdcTable.append(
-          r.assigned.join(dupIds,
-            col("id") === col("__dup_id"), "left_anti"),
-          indexDir, txn = Some((s"$appId-idx", id)))
-        graft.sink.CdcTable.append(
-          batch.join(dupIds, batch(idCol) === col("__dup_id"),
-            "left_anti"),
-          outDir, txn = Some((s"$appId-out", id)))
-        ()
-      }
-      .start()
+    IndexMeta.keptOnlyStream(stream, idCol, indexDir, "id", outDir,
+        checkpointDir, appId) { (batch, txn) =>
+      val r = semDedupIncrementalCore(batch, idCol, threshold,
+        joinAssign(centsDf), indexDir, embCol, txn, maxBatchRows)
+      (r.pairs.select(col("b_id")), r.assigned)
+    }
 
   /** All pairs with cosine ≥ threshold — exact exhaustive O(n²) pair
     * join. Correctness baseline / small inputs only; the default

@@ -94,10 +94,7 @@ object Sketch {
     * one k — a batch sketched at smaller k would be missing hashes a
     * larger-k read needs. */
   private[graft] def storedK(tableDir: String): Int =
-    graft.core.Fs.readString(s"$tableDir/_graft_index_meta")
-      .flatMap(_.linesIterator.collectFirst {
-        case l if l.startsWith("kmv_k=") => l.substring(6).trim.toInt
-      })
+    IndexMeta.stored(tableDir).flatMap(_.get("kmv_k")).map(_.trim.toInt)
       .getOrElse(sys.error(
         s"no kmv_k sidecar at $tableDir — not a kmv sketch table"))
 
@@ -112,7 +109,7 @@ object Sketch {
     require(k >= 2, s"kmv k must be at least 2: $k")
     require(!groupCols.contains("kmv_h"),
       "group columns collide with the stored hash column kmv_h")
-    val won = IndexMeta.ensureInt(tableDir, "kmv_k", k, () => None)
+    val won = IndexMeta.ensureInt(tableDir, "kmv_k", k)
     require(won == k,
       s"kmv sketch table at $tableDir was created with k=$won, got k=$k")
     val rows = kmvSketch(batch, valueCol, k, groupCols)

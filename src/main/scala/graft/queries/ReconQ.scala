@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QueryDef._
 
 /** Reconciliation operators (SURVEY.md §2.5 J2/J3; reference
   * `specs/001-mongodb-cdc-delta/research.md:659-858` — specified, never

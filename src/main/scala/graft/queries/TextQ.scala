@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QueryDef._
 
 /** Text-analysis / dedup operators over the `documents` table — the
   * training-data-pipeline surface (SURVEY.md §2 north star): token

@@ -4,7 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import QueryDef._
 
 /** Frame-spec windows and order-sensitive aggregation surfaces
   * (SURVEY.md §2.7 W6 + §2.6 extensions). Doubles inside moving

@@ -1117,7 +1117,7 @@ object CdcTable {
     * staging dir this commit just wrote. The regexp sites extracting
     * rel paths from input_file_name use the same last-occurrence rule
     * (greedy `.*` prefix) — keep them in sync. */
-  private def stagedFiles(dir: String, batchDir: String): Seq[String] =
+  private def stagedFiles(batchDir: String): Seq[String] =
     Fs.walkFiles(batchDir)
       .map(_._1.toString)
       .filter(_.endsWith(".parquet"))
@@ -1217,7 +1217,7 @@ object CdcTable {
     val partCols = partitionBy.filter(merged.fieldNames.contains)
     (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
       .parquet(batchDir)
-    val files = stagedFiles(dir, batchDir)
+    val files = stagedFiles(batchDir)
     val (stats, frows, fbytes) = FileStats.collectInfo(dir, files)
     val blooms = collectBlooms(out.sparkSession, batchDir, files,
       bloomCols, merged, partCols)
@@ -1528,7 +1528,7 @@ object CdcTable {
   def readChanges(spark: SparkSession, dir: String, afterCommit: Long,
       upToCommit: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, input_file_name,
-      lit, regexp_extract, url_decode}
+      lit, regexp_extract}
     import spark.implicits._
     val commits = CdcTable.log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
@@ -2155,7 +2155,7 @@ object CdcTable {
       "mergeDV").write.mode("overwrite")
     (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
      else writer).parquet(batchDir)
-    val fresh = stagedFiles(dir, batchDir)
+    val fresh = stagedFiles(batchDir)
     val (freshStats, freshRows, freshBytes) =
       FileStats.collectInfo(dir, fresh)
     val sidecar =
@@ -2362,7 +2362,7 @@ object CdcTable {
         val writer = outRows.write.mode("overwrite")
         (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
          else writer).parquet(batchDir)
-        stagedFiles(dir, batchDir)
+        stagedFiles(batchDir)
       }, {
         // CDF change rows (Delta CDF parity): matched target rows are
         // the preimages; for MERGE the source splits into
@@ -2525,7 +2525,7 @@ object CdcTable {
           .write.mode("overwrite")
         (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
          else writer).parquet(batchDir)
-        stagedFiles(dir, batchDir)
+        stagedFiles(batchDir)
       },
       // CDF change rows (one extra matched-rows-only scan of the
       // PARTIALLY-touched files — never the carried bulk, and never
@@ -2682,7 +2682,7 @@ object CdcTable {
     val writer = out.write.mode("overwrite")
     (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
      else writer).parquet(batchDir)
-    val fresh = stagedFiles(dir, batchDir)
+    val fresh = stagedFiles(batchDir)
     val (freshStats, freshRows, freshBytes) =
       FileStats.collectInfo(dir, fresh)
     val c = commit(dir, n => Commit(n, currentSv, "replace",
@@ -2722,7 +2722,7 @@ object CdcTable {
     (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
       .parquet(batchDir)
     val nv = commits.last.schemaVersion + 1
-    val files = stagedFiles(dir, batchDir)
+    val files = stagedFiles(batchDir)
     val (stats, frows, fbytes) = FileStats.collectInfo(dir, files)
     commit(dir, n => Commit(n, nv, "replace",
       System.currentTimeMillis(), txn, schema, files,

@@ -1449,4 +1449,80 @@ class DedupSpec extends SparkSpec {
     assert(winnowRun() == wfresh,
       "replayed winnow batch must pair identically to its original run")
   }
+
+  /** Runs `probe` (which appends under `txn`) twice with the same txn
+    * — a crash replay — and checks the replay reproduces the output
+    * and no-ops the index append. */
+  private def assertReplayParity[T](idx: String)(probe: () => Set[T])
+      : Set[T] = {
+    val fresh = probe()
+    val rows = graft.sink.CdcTable.read(spark, idx).count()
+    assert(probe() == fresh, "replayed batch must reproduce its output")
+    assert(graft.sink.CdcTable.read(spark, idx).count() == rows,
+      "replayed index append must no-op")
+    fresh
+  }
+
+  test("crash-replay parity: exactIncremental") {
+    val idx = tmpDir("exreplay")
+    Dedup.exactIncremental(Seq((1L, "alpha"), (2L, "beta"))
+      .toDF("doc_id", "text"), "text", "doc_id", idx,
+      txn = Some(("ex-replay", 0L))).collect()
+    val b = Seq((3L, "alpha"), (4L, "gamma"), (5L, "Gamma "))
+      .toDF("doc_id", "text")
+    val got = assertReplayParity(idx) { () =>
+      Dedup.exactIncremental(b, "text", "doc_id", idx,
+          txn = Some(("ex-replay", 1L)))
+        .select("doc_id", "keep_id", "is_duplicate")
+        .as[(Long, Long, Boolean)].collect().toSet
+    }
+    assert(got == Set((3L, 1L, true), (4L, 4L, false), (5L, 4L, true)))
+  }
+
+  test("crash-replay parity: nearDupIncremental (vector index)") {
+    val idx = tmpDir("vecreplay")
+    val e = Array(0.6f, 0.8f, 0f)
+    Similarity.nearDupIncremental(Seq((1L, e)).toDF("vec_id", "embedding"),
+      "vec_id", 0.9, idx, txn = Some(("vec-replay", 0L))).collect()
+    val b = Seq((2L, e), (3L, Array(0.61f, 0.79f, 0f)),
+      (4L, Array(0f, 0f, 1f))).toDF("vec_id", "embedding")
+    val got = assertReplayParity(idx) { () =>
+      Similarity.nearDupIncremental(b, "vec_id", 0.9, idx,
+          txn = Some(("vec-replay", 1L)))
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    }
+    assert(got == Set((1L, 2L), (1L, 3L), (2L, 3L)), s"$got")
+  }
+
+  test("crash-replay parity: semDedupIncremental (cell index)") {
+    val idx = tmpDir("semreplay")
+    val cents = Seq(0L -> Array(1f, 0f, 0f, 0f), 1L -> Array(0f, 1f, 0f, 0f))
+    Similarity.semDedupIncremental(
+      Seq((0L, Array(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding"),
+      "vec_id", 0.85, cents, idx, txn = Some(("sem-replay", 0L))).collect()
+    val b = Seq((10L, Array(0.95f, 0.05f, 0f, 0f)),
+      (11L, Array(0.9f, 0.1f, 0f, 0f)), (12L, Array(0f, 1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val got = assertReplayParity(idx) { () =>
+      Similarity.semDedupIncremental(b, "vec_id", 0.85, cents, idx,
+          txn = Some(("sem-replay", 1L)))
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    }
+    assert(got == Set((0L, 10L), (0L, 11L), (10L, 11L)), s"$got")
+  }
+
+  test("crash-replay parity: dHashIncremental under a finite hot cap") {
+    // 4 identical images in one batch → every band bucket holds exactly
+    // 4 rows; cap 4 keeps them, and a replay that counted the batch's
+    // own committed rows would read 8 > 4 and drop every pair
+    val idx = tmpDir("dhreplay")
+    val b = (1L to 4L).map(i => (i, 0x0123456789abcdefL >>> 1))
+      .toDF("doc_id", "dhash")
+    val got = assertReplayParity(idx) { () =>
+      Multimodal.dHashIncremental(b, "doc_id", "dhash", idx,
+          txn = Some(("dh-replay", 1L)), maxBandDocFreq = Some(4))
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    }
+    assert(got.size == 6, s"occupancy 4 <= cap 4 keeps all pairs: $got")
+  }
 }

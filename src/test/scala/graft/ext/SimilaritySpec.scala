@@ -183,23 +183,28 @@ class SimilaritySpec extends SparkSpec {
       .exists(_.contains(s"bvalBits=${Similarity.StoredPlanes}")))
   }
 
-  test("legacy 4-bit index is adopted; probes clamp to its stored width") {
-    val idx = java.nio.file.Files.createTempDirectory("legidx").toString
-    // simulate a pre-sidecar index: rows hashed at 4 bits, planes=4
-    // column, no meta file
-    val legacyRows = vecs.filter($"vec_id" <= 2L)
+  test("a non-empty index without a sidecar fails loudly (band and vector)") {
+    // rows whose layout no sidecar pins (band count, bucket width) are
+    // refused instead of guessed from the rows
+    val band = java.nio.file.Files.createTempDirectory("nosideband").toString
+    graft.sink.CdcTable.append(Seq((1L, "0:1:2:3:4", Array(1L, 2L), 4))
+      .toDF("doc_id", "band_key", "sig", "bands"), band)
+    val e1 = intercept[RuntimeException](Dedup.nearIncremental(
+      Seq((2L, "one two three four five")).toDF("doc_id", "text"),
+      "text", "doc_id", band))
+    assert(e1.getMessage.contains("has rows but no sidecar"), e1.getMessage)
+    val vec = java.nio.file.Files.createTempDirectory("nosidevec").toString
+    graft.sink.CdcTable.append(vecs.filter($"vec_id" <= 2L)
       .select($"vec_id".as("id"), $"embedding".as("e"))
       .withColumn("bval", Similarity.lshBucket("e", planes = 4))
-      .withColumn("planes", lit(4))
-    graft.sink.CdcTable.append(legacyRows, idx)
-    val b2 = Seq((10L, Array(0.95f, 0.05f, 0.0f)))
-      .toDF("vec_id", "embedding")
-    val r = Similarity.nearDupIncremental(b2, "vec_id", 0.85, idx)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(r.contains((0L, 10L)),
-      s"probe against legacy rows must clamp to 4 bits and match: $r")
-    assert(graft.core.Fs.readString(s"$idx/_graft_index_meta")
-      .exists(_.contains("bvalBits=4")), "adopted width persisted")
+      .withColumn("planes", lit(4)), vec)
+    val before = graft.sink.CdcTable.read(spark, vec).count()
+    val e2 = intercept[RuntimeException](Similarity.nearDupIncremental(
+      Seq((10L, Array(0.95f, 0.05f, 0.0f))).toDF("vec_id", "embedding"),
+      "vec_id", 0.85, vec))
+    assert(e2.getMessage.contains("has rows but no sidecar"), e2.getMessage)
+    assert(graft.sink.CdcTable.read(spark, vec).count() == before,
+      "the refused probe appended nothing")
   }
 
   test("corpus-sized batches fail loudly before any broadcast") {
