@@ -5,11 +5,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions._
 
-/** Session extension registering graft's native Catalyst expressions.
-  * Required: activate with
+/** Session extension registering graft's native Catalyst expressions,
+  * its SQL commands and the `format("graft")` scan rule. Required:
+  * activate with
   * .config("spark.sql.extensions", "graft.GraftExtensions"). Without it
   * the text, LSH, top-k and digest paths fail at analysis with Spark's
-  * unresolved-routine error naming the missing function.
+  * unresolved-routine error naming the missing function, and a
+  * `format("graft")` read fails at planning naming this class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -53,5 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // everything else delegates to Spark's parser untouched
     ext.injectParser((_, delegate) =>
       new graft.sqlext.GraftSqlParser(delegate))
+    // format("graft") reads: splice the manifest-pruned frame's plan
+    ext.injectOptimizerRule(_ => graft.sources.GraftScanRule)
   }
 }

@@ -1,10 +1,16 @@
 package graft.sources
 
 import graft.core.Fs
+import graft.core.SchemaMerge.castTo
 import graft.sink.CdcTable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.planning.ScanOperation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftshim.FilterShim
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
@@ -24,16 +30,15 @@ import org.apache.spark.sql.types.StructType
   * SQL entry point.)
   *
   * Scan shape: schema comes from the manifest log alone (no file
-  * listing); pushed-down filters on partition-path columns prune FILES
-  * at the manifest level before Spark ever plans the scan (the
-  * Delta/Iceberg log-based file-skipping pattern — see
-  * [[GraftRelation.keeps]]); remaining filters and the column
-  * projection are applied inside the delegated DataFrame plan, so they
-  * reach the underlying parquet reader as PushedFilters/ReadSchema.
-  * The v1 exchange hands Spark `RDD[Row]` (one row-conversion on the
-  * boundary) — fine for the SQL convenience surface; throughput-
-  * critical pipelines use the programmatic [[CdcTable]] API, which is
-  * plan-native end to end.
+  * listing). The relations are markers ([[GraftScan]]): during
+  * optimization [[GraftScanRule]] hands each the filters above it,
+  * which prune FILES at the manifest (partition paths, per-file stats
+  * and blooms — the Delta/Iceberg log-based file-skipping pattern, see
+  * [[GraftRelation.prunedRead]]), and splices the pruned frame's plan
+  * in its place. Spark then plans the read once, as its own columnar
+  * parquet `FileScan` — the projection becomes its ReadSchema and the
+  * filters go down as far as the spliced plan lets them — with no row
+  * conversion on the way.
   */
 class GraftSource extends RelationProvider
     with CreatableRelationProvider with StreamSourceProvider
@@ -164,6 +169,49 @@ class GraftSource extends RelationProvider
       parameters.get("maxFilesPerTrigger").map(_.toLong))
 }
 
+/** Every `graft` format relation: a schema-carrying marker that
+  * [[GraftScanRule]] replaces with the plan of `frame`, cast by name to
+  * `schema` (a catalog table's cached relation may predate a schema
+  * change). `frame` gets the filters Spark applies above the relation,
+  * only to skip work: they stay applied above it. */
+sealed trait GraftScan extends BaseRelation with TableScan {
+  private[graft] def frame(filters: Seq[Filter]): DataFrame
+
+  /** Reached only in a session without the rule. */
+  override def buildScan(): RDD[Row] = throw new IllegalStateException(
+    "the graft format is planned by an optimizer rule of " +
+      "graft.GraftExtensions; start the session with " +
+      ".config(\"spark.sql.extensions\", \"graft.GraftExtensions\")")
+}
+
+/** Splices each graft relation's frame into the query, from the
+  * operator-optimization batch (`GraftExtensions`): the filters
+  * gathered above it through any projections ([[ScanOperation]])
+  * prune the frame's files, and the frame's OPTIMIZED plan takes its
+  * place under a projection keeping its attribute ids (the outer query
+  * has run the once-only `ReplaceExpressions`, so an analyzed plan
+  * would keep the partition column's `url_decode` and fail codegen).
+  * The filters stay above; later passes push them into the scans. */
+object GraftScanRule extends Rule[LogicalPlan] {
+  private def isGraft(p: LogicalPlan): Boolean = p match {
+    case l: LogicalRelation => l.relation.isInstanceOf[GraftScan]
+    case _ => false
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!plan.exists(isGraft)) plan
+    else plan.transformDown {
+      case op @ ScanOperation(_, _, filters, leaf) if isGraft(leaf) =>
+        val scan = leaf.asInstanceOf[LogicalRelation].relation
+          .asInstanceOf[GraftScan]
+        val inner = castTo(scan.frame(filters.flatMap(
+          FilterShim.translate)), scan.schema).queryExecution.optimizedPlan
+        val spliced = Project(leaf.output.zip(inner.output).map {
+          case (a, b) => Alias(b, a.name)(exprId = a.exprId) }, inner)
+        op.transformUp { case l if l eq leaf => spliced }
+    }
+}
+
 /** Batch change-feed relation —
   * `spark.read.format("graft").option("readChangeFeed", "true")
   * .option("startingCommit", n)[.option("endingCommit", m)].load(dir)`
@@ -174,15 +222,13 @@ class GraftSource extends RelationProvider
   * programmatic [[CdcTable.readChanges]] for the range-exact schema. */
 final case class GraftChangesRelation(sqlContext: SQLContext,
     dir: String, startingCommit: Long, endingCommit: Option[Long])
-    extends BaseRelation with TableScan {
+    extends GraftScan {
 
   override val schema: StructType = CdcTable.changesSchema(dir)
 
-  override def buildScan(): RDD[Row] =
-    graft.core.SchemaMerge.castTo(
-      CdcTable.readChanges(sqlContext.sparkSession, dir,
-        afterCommit = startingCommit - 1, upToCommit = endingCommit),
-      schema).rdd
+  private[graft] def frame(filters: Seq[Filter]): DataFrame =
+    CdcTable.readChanges(sqlContext.sparkSession, dir,
+      afterCommit = startingCommit - 1, upToCommit = endingCommit)
 }
 
 /** Metadata tables (the Iceberg `.history` / `.files` pattern,
@@ -198,30 +244,23 @@ final case class GraftChangesRelation(sqlContext: SQLContext,
   *       one row per LIVE file (files superseded by a replace drop out)
   */
 final case class GraftMetaRelation(sqlContext: SQLContext, dir: String,
-    which: String) extends BaseRelation with TableScan {
-  import org.apache.spark.sql.types._
+    which: String) extends GraftScan {
 
   private def commits = CdcTable.log(dir)
 
   override val schema: StructType = which match {
-    case "history" => StructType(Seq(
-      StructField("commit", LongType, nullable = false),
-      StructField("commit_ts", LongType, nullable = false),
-      StructField("action", StringType, nullable = false),
-      StructField("schema_version", LongType, nullable = false),
-      StructField("n_files", IntegerType, nullable = false),
-      StructField("is_stub", BooleanType, nullable = false)))
-    case "files" => StructType(Seq(
-      StructField("file", StringType, nullable = false),
-      StructField("commit", LongType, nullable = false),
-      StructField("commit_ts", LongType, nullable = false),
-      StructField("schema_version", LongType, nullable = false),
-      StructField("n_stats_cols", IntegerType, nullable = false)))
+    case "history" => StructType.fromDDL("commit BIGINT NOT NULL, " +
+      "commit_ts BIGINT NOT NULL, action STRING NOT NULL, " +
+      "schema_version BIGINT NOT NULL, n_files INT NOT NULL, " +
+      "is_stub BOOLEAN NOT NULL")
+    case "files" => StructType.fromDDL("file STRING NOT NULL, " +
+      "commit BIGINT NOT NULL, commit_ts BIGINT NOT NULL, " +
+      "schema_version BIGINT NOT NULL, n_stats_cols INT NOT NULL")
     case other => throw new IllegalArgumentException(
       s"unknown metaTable '$other' (history|files)")
   }
 
-  override def buildScan(): RDD[Row] = {
+  private[graft] def frame(filters: Seq[Filter]): DataFrame = {
     val rows: Seq[Row] = which match {
       case "history" => commits.map(c => Row(
         c.commit, c.ts, c.action, c.schemaVersion, c.files.size, c.stub))
@@ -235,7 +274,8 @@ final case class GraftMetaRelation(sqlContext: SQLContext, dir: String,
           f, c.commit, c.ts, c.schemaVersion,
           c.stats.get(f).map(_.size).getOrElse(0))))
     }
-    sqlContext.sparkContext.parallelize(rows, 1)
+    sqlContext.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
   }
 }
 
@@ -244,58 +284,30 @@ final case class GraftMetaRelation(sqlContext: SQLContext, dir: String,
   * consumer pattern, [[graft.query.CurrentState]]) instead of the raw
   * event log, straight from SQL:
   * `CREATE TABLE t USING graft OPTIONS (path '…', stateView 'true')`.
-  * In this mode NO filter reaches below the per-key resolution — a
-  * pre-resolution filter could drop the winning event and resurrect a
-  * superseded one — so the scan reads the full log, resolves, and
-  * leaves every predicate to Spark above (unhandledFilters). */
+  * Its frame ignores the filters: pruning before the per-key
+  * resolution could drop the winning event and resurrect a superseded
+  * one (Spark itself moves only predicates on the key below it). */
 final case class GraftRelation(sqlContext: SQLContext, dir: String,
     commitAsOf: Option[Long], timestampAsOf: Option[Long],
     stateView: Boolean = false, idCol: String = "_id")
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
+    extends GraftScan with InsertableRelation {
 
   /** Schema from the manifest log alone — no file listing, no footer
     * reads (at 100 TB a schema lookup must not touch data files). */
   override val schema: StructType =
     CdcTable.commitsAsOf(dir, commitAsOf, timestampAsOf).last.schema
 
-  /** All filters are re-applied by Spark above this scan: manifest
-    * pruning and the delegated-plan filters below can only SKIP work,
-    * never change results. */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters
+  private[graft] def frame(filters: Seq[Filter]): DataFrame =
+    if (!stateView) prunedRead(filters)
+    else graft.query.CurrentState(CdcTable.readAsOf(
+      sqlContext.sparkSession, dir, commitAsOf, timestampAsOf), idCol)
 
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val filtered = if (stateView) {
-      // resolution must see EVERY event of a key: no file pruning, no
-      // pre-resolution row filters (either could drop the winning
-      // event and resurrect a superseded one)
-      graft.query.CurrentState(
-        CdcTable.readAsOf(sqlContext.sparkSession, dir,
-          commitAsOf, timestampAsOf), idCol)
-    } else {
-      val pruned = prunedRead(filters)
-      // hand the remaining predicates to the delegated plan too, so
-      // they push into its parquet scan (PushedFilters) instead of
-      // filtering post-conversion rows
-      filters.flatMap(toColumn)
-        .reduceOption(_ && _).map(pruned.filter).getOrElse(pruned)
-    }
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(
-        requiredColumns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-    projected.rdd
-  }
-
-  /** The scan's manifest-pruned base frame — three pruning passes,
-    * all conservative (Spark re-applies every filter above the scan):
+  /** The manifest-pruned event log — three pruning passes, all
+    * conservative (Spark re-applies every filter above the scan):
     * partition-path values, per-file column min/max/hasNull stats
     * (data skipping), and per-file Bloom filters (equality skipping on
-    * unclustered columns the appends indexed via `bloomCols`).
-    * Package-visible so the spec can assert the PLANNED file list of
-    * exactly the frame [[buildScan]] executes. */
-  private[graft] def prunedRead(filters: Array[Filter]): DataFrame =
+    * unclustered columns the appends indexed via `bloomCols`). */
+  private[graft] def prunedRead(filters: Seq[Filter]): DataFrame =
     CdcTable.readFiltered(sqlContext.sparkSession, dir,
       (k, v) => filters.forall(keeps(_, k,
         java.net.URLDecoder.decode(v, "UTF-8"))),
@@ -339,27 +351,4 @@ final case class GraftRelation(sqlContext: SQLContext, dir: String,
       case Not(EqualTo(a, x)) if a == k => v != String.valueOf(x)
       case _ => true
     }
-
-  /** Best-effort translation of a pushed filter back to a Column for
-    * the delegated plan; None for shapes not worth translating (Spark
-    * re-applies everything anyway). */
-  private def toColumn(filter: Filter): Option[Column] = filter match {
-    case EqualTo(a, x) => Some(col(s"`$a`") === lit(x))
-    case GreaterThan(a, x) => Some(col(s"`$a`") > lit(x))
-    case GreaterThanOrEqual(a, x) => Some(col(s"`$a`") >= lit(x))
-    case LessThan(a, x) => Some(col(s"`$a`") < lit(x))
-    case LessThanOrEqual(a, x) => Some(col(s"`$a`") <= lit(x))
-    case In(a, xs) => Some(col(s"`$a`").isin(xs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(s"`$a`").isNull)
-    case IsNotNull(a) => Some(col(s"`$a`").isNotNull)
-    case StringStartsWith(a, p) => Some(col(s"`$a`").startsWith(p))
-    case StringEndsWith(a, p) => Some(col(s"`$a`").endsWith(p))
-    case StringContains(a, p) => Some(col(s"`$a`").contains(p))
-    case And(l, r) => for (lc <- toColumn(l); rc <- toColumn(r))
-      yield lc && rc
-    case Or(l, r) => for (lc <- toColumn(l); rc <- toColumn(r))
-      yield lc || rc
-    case Not(f) => toColumn(f).map(!_)
-    case _ => None
-  }
 }

@@ -42,3 +42,12 @@ object ColumnShim {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 }
+
+/** `DataSourceStrategy.translateFilter` (`protected[sql]`), for the
+  * graft scan rule's manifest pruning. */
+object FilterShim {
+  def translate(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
+}

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampNTZType}
+import org.apache.spark.sql.types.TimestampNTZType
 
 /** Pins the `events.ts` loading contract (VERDICT r8 #1): the driver's
   * nanos-parquet column must surface as µs TimestampNTZType — the naive

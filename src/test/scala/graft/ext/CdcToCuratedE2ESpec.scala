@@ -3,7 +3,6 @@ package graft.ext
 import graft.SparkSpec
 import graft.sink.CdcTable
 import graft.streaming.CdcIngest
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The REFERENCE-SHAPED pipeline, composed end to end from the pieces

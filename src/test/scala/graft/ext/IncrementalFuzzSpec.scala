@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Model-based fuzz of the incremental dedup family: random batch
   * sequences (small vocab → forced collisions, NULL texts, empty

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** One-pass profiling: cell-level contract on a frame with nulls and
   * duplicates, and the single-scan plan shape. */

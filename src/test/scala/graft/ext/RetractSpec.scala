@@ -2,7 +2,6 @@ package graft.ext
 
 import graft.SparkSpec
 import graft.sink.CdcTable
-import org.apache.spark.sql.functions._
 
 /** Index retraction under corpus deletes (the right-to-be-forgotten
   * composition, r12 verdict #2): every kept-only similarity index

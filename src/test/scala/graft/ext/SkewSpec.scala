@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.SparkSpec
-import graft.sink.CdcTable
 import org.apache.spark.sql.functions._
 
 class SkewSpec extends SparkSpec {

@@ -294,7 +294,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("rank-normalize never range-shuffles the corpus") {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     val docs = graft.Tables(spark, dir, "documents")
       .withColumn("score", expr("n_chars % 100"))
     val p = plan(graft.ext.Sampling.rankNormalize(docs, "source", "score"))
@@ -360,7 +360,6 @@ class PlanQualitySpec extends SparkSpec {
 
   test("stupid backoff scoring: key-local count joins, no product, " +
       "partial-aggregated training") {
-    import org.apache.spark.sql.functions.col
     val docs = graft.Tables(spark, dir, "documents")
     val p = plan(graft.ext.TextAnalysis.stupidBackoff(docs, "doc_id"))
     assert(!p.contains("CartesianProduct"), p.take(400))
@@ -420,7 +419,6 @@ class PlanQualitySpec extends SparkSpec {
 
   test("chrF: pair-touched docs only, no cartesian, broadcast joins " +
       "for the pair frame") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = graft.Tables(spark, dir, "documents")
     val pairs = Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id")
@@ -432,7 +430,6 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("incremental profile read: the corpus is never scanned") {
-    import org.apache.spark.sql.functions._
     val tbl = tmpDir("plan_profidx")
     graft.ext.Profile.profileAppend(
       graft.Tables(spark, dir, "documents"), tbl,

@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** CHECK constraints — Delta `ALTER TABLE … ADD CONSTRAINT` parity
   * (the reference's DQ rules, spec.md P8, as WRITER-side invariants).

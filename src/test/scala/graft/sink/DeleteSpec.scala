@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class DeleteSpec extends SparkSpec {
   import spark.implicits._

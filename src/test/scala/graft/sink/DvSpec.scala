@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Deletion vectors (merge-on-read DELETE, Delta DV parity, round
   * 16): [[CdcTable.deleteKeysDV]] records (file, row-position)

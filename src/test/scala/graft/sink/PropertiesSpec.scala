@@ -2,7 +2,6 @@ package graft.sink
 
 import graft.SparkSpec
 import graft.core.Fs
-import org.apache.spark.sql.functions._
 
 /** Table properties — Delta TBLPROPERTIES parity: fileless
   * set/unset commits folded over the full log; clones inherit,

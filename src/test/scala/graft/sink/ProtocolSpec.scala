@@ -2,7 +2,6 @@ package graft.sink
 
 import graft.SparkSpec
 import graft.core.Fs
-import org.apache.spark.sql.functions._
 
 /** Reader/writer protocol features — Delta protocol parity. The
   * manifest's line format ignores unknown keys, so WITHOUT a feature

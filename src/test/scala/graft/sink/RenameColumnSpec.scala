@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** GRAFT RENAME COLUMN — metadata-only column mapping (Delta
   * column-mapping parity; reference spec.md:264 FR-059 specifies field

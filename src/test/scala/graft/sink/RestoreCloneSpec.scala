@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** GRAFT RESTORE (metadata-only snapshot rollback) and GRAFT CLONE
   * (shallow clone by file reference) — the Delta-parity table ops

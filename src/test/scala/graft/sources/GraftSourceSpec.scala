@@ -2,12 +2,16 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.sink.CdcTable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.sources.EqualTo
 
 /** The `graft` DataSource format: SQL/DataFrameReader surface over the
   * CdcTable manifest log — reads, time travel options, manifest-level
   * partition pruning from pushed filters, and the write/INSERT path. */
-class GraftSourceSpec extends SparkSpec {
+class GraftSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def seed(dir: String): Unit =
@@ -183,5 +187,76 @@ class GraftSourceSpec extends SparkSpec {
       after.select("x").as[Long].head() == 7L)
     assert(spark.read.format("graft").option("commitAsOf", "2")
       .load(dir).count() == 2)
+  }
+
+  test("format reads execute as Spark's columnar parquet FileScan") {
+    val dir = tmpDir("gsrcplan")
+    val t = java.sql.Timestamp.valueOf("2026-08-10 00:00:00")
+    Seq(Seq((1L, "a", "c"), (2L, "b", "c")), Seq((3L, "a", "u")))
+      .foreach(rows => CdcTable.append(rows.map { case (x, id, op) =>
+        (x, id, op, t, "2026-08-10") }.toDF("x", "_id", "_cdc_operation",
+          "_cdc_timestamp", "_ingestion_date"), dir))
+    val ts1 = CdcTable.log(dir).head.ts
+    def read(opts: (String, String)*): DataFrame =
+      spark.read.format("graft").options(opts.toMap).load(dir)
+    Seq(
+      "current state" -> read(),
+      "commitAsOf" -> read("commitAsOf" -> "1"),
+      "timestampAsOf" -> read("timestampAsOf" -> ts1.toString),
+      "readChangeFeed" -> read("readChangeFeed" -> "true",
+        "startingCommit" -> "1"),
+      "stateView" -> read("stateView" -> "true")
+    ).foreach { case (what, df) =>
+      val q = df.filter(col("x") > 1L)
+      assert(q.count() > 0, what)
+      val plan = q.queryExecution.executedPlan
+      val scans = collect(plan) { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
+        s"$what: no columnar FileScan in\n$plan")
+      assert(collect(plan) { case s: RowDataSourceScanExec => s }.isEmpty,
+        s"$what: row-based V1 scan in\n$plan")
+    }
+  }
+
+  /** Four appends whose keys interleave (min/max stats prune nothing)
+    * with disjoint per-append key sets and blooms on `k`. */
+  private def bloomTable(dir: String): Unit =
+    (0 until 4).foreach { b =>
+      CdcTable.append(
+        (0 until 50).map(i => (b + 4L * i, s"v$b-$i")).toDF("k", "s")
+          .coalesce(1),
+        dir, partitionBy = Nil, bloomCols = Seq("k"))
+    }
+
+  test("pruning survives a projection above the filter and a join") {
+    val dir = tmpDir("gsrcshape")
+    bloomTable(dir)
+    val rel = GraftRelation(spark.sqlContext, dir, None, None)
+    val expected = rel.prunedRead(Seq(EqualTo("k", 6L))).inputFiles.toSeq
+    assert(expected.length < rel.prunedRead(Nil).inputFiles.length)
+    val graft = spark.read.format("graft").load(dir)
+    // q150's shape: ColumnPruning puts a Project between filter and scan
+    val projected = graft.filter(col("k") === 6L).select("k", "s")
+    assert(projected.as[(Long, String)].collect().toSeq ==
+      Seq((6L, "v2-1")))
+    assert(projected.inputFiles.toSeq == expected)
+    // the filter sits above a join; it still reaches the graft side
+    val tags = Seq((6L, "six"), (7L, "seven")).toDF("tk", "tag")
+    val joined = graft.join(tags, graft("k") === tags("tk"))
+      .filter(graft("k") === 6L).select("s", "tag")
+    assert(joined.as[(String, String)].collect().toSeq ==
+      Seq(("v2-1", "six")))
+    assert(joined.inputFiles.toSeq == expected)
+  }
+
+  test("a session without GraftExtensions fails naming the extension") {
+    val dir = tmpDir("gsrcnoext")
+    seed(dir)
+    Seq(GraftRelation(spark.sqlContext, dir, None, None),
+      GraftChangesRelation(spark.sqlContext, dir, 1L, None),
+      GraftMetaRelation(spark.sqlContext, dir, "history")).foreach { r =>
+      val e = intercept[IllegalStateException](r.buildScan())
+      assert(e.getMessage.contains("graft.GraftExtensions"), e.getMessage)
+    }
   }
 }
