@@ -465,10 +465,8 @@ object Bench {
         val fmap = spark.createDataFrame(f2ts).toDF("rel", "commit_ts")
         graft.sink.CdcTable.read(spark, dir)
           .select(expr("unix_millis(_cdc_timestamp)").as("ets"),
-            // last-occurrence rel-path extraction, matching the
-            // manifest's stagedFiles keying
-            regexp_extract(input_file_name(),
-              graft.sink.CdcTable.RelPathRe, 1).as("rel"))
+            // the manifest's rel-path keying
+            graft.sink.CdcTable.relPathCol().as("rel"))
           .join(broadcast(fmap), Seq("rel"))
           .select((col("commit_ts") - col("ets")).as("lag_ms"))
       }

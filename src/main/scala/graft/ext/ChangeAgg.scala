@@ -76,7 +76,7 @@ object ChangeAgg {
       CdcTable.append(state, stateDir, partitionBy = Nil,
         txn = Some((appId, range.last.commit)))
     else
-      CdcTable.replaceWith(spark, stateDir, state, partitionBy = Nil,
+      CdcTable.replaceWith(stateDir, state, partitionBy = Nil,
         txn = Some((appId, range.last.commit)))
     range.length
   }
@@ -136,7 +136,7 @@ object ChangeAgg {
       CdcTable.append(state, stateDir, partitionBy = Nil,
         txn = Some(txn))
     else
-      CdcTable.replaceWith(spark, stateDir, state, partitionBy = Nil,
+      CdcTable.replaceWith(stateDir, state, partitionBy = Nil,
         txn = Some(txn))
     ()
   }

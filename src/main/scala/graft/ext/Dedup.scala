@@ -188,7 +188,7 @@ object Dedup {
         else if (cols.contains("dtype")) // batch profile partials:
           Profile.foldProfile(spark, indexDir) // one row per column
         else CdcTable.read(spark, indexDir).distinct()
-      CdcTable.replaceWith(spark, indexDir, folded,
+      CdcTable.replaceWith(indexDir, folded,
         expectedLastCommit = Some(commits.last.commit))
       ()
     }
@@ -373,7 +373,7 @@ object Dedup {
       .dropDuplicates("doc_id")
     val rebanded = bandRows(sigs, "doc_id", newBands, carrySig = true)
       .withColumn("bands", lit(newBands))
-    CdcTable.replaceWith(spark, indexDir, rebanded,
+    CdcTable.replaceWith(indexDir, rebanded,
       expectedLastCommit = Some(snap))
     IndexMeta.overwrite(indexDir, Map("bands" -> newBands))
   }
@@ -1363,7 +1363,7 @@ object Dedup {
     * table exists, create-by-append otherwise. */
   private def landReplaceOrAppend(df: DataFrame, tbl: String): Unit =
     if (graft.sink.CdcTable.log(tbl).nonEmpty) {
-      graft.sink.CdcTable.replaceWith(df.sparkSession, tbl, df,
+      graft.sink.CdcTable.replaceWith(tbl, df,
         partitionBy = Nil)
       ()
     } else {
@@ -1472,7 +1472,7 @@ object Dedup {
         CdcTable.append(labels, compDir, partitionBy = Nil,
           txn = Some((CcAppId, last)))
       else
-        CdcTable.replaceWith(spark, compDir, labels, partitionBy = Nil,
+        CdcTable.replaceWith(compDir, labels, partitionBy = Nil,
           txn = Some((CcAppId, last)))
       ()
     }

@@ -578,7 +578,7 @@ object Sampling {
           expr(s"md5(CAST(`$keyCol` AS STRING))").asc,
           col(s"`$keyCol`").asc)
         .limit(k)
-      CdcTable.replaceWith(spark, stateDir, merged,
+      CdcTable.replaceWith(stateDir, merged,
         partitionBy = Nil, txn = txn)
       ()
     }

@@ -809,7 +809,7 @@ object Similarity {
     import graft.sink.CdcTable
     require(CdcTable.log(indexDir).nonEmpty, s"no index at $indexDir")
     IndexMeta.foldWithRetry(retries) { () =>
-      CdcTable.replaceWith(spark, indexDir,
+      CdcTable.replaceWith(indexDir,
         CdcTable.read(spark, indexDir).distinct(),
         expectedLastCommit = Some(CdcTable.log(indexDir).last.commit))
       ()

@@ -423,7 +423,7 @@ object TextAnalysis {
     require(terms.nonEmpty, "probeLexicalTable needs a non-empty query")
     val tbs = terms.map(t => tokenBucketOf(t, buckets).toString).toSet
     val tf = graft.sink.CdcTable
-      .readPruned(spark, s"$dir/postings",
+      .readFiltered(spark, s"$dir/postings",
         (c, v) => c != "tbucket" || tbs.contains(v))
       .filter(col("tok").isin(terms: _*))
       // pin the term postings: they feed the df aggregate AND the
@@ -493,14 +493,14 @@ object TextAnalysis {
         // co-locate each bucket before the partitioned write: without
         // this every task holding bucket rows emits its own file and
         // the fold leaves tasks×buckets files, not ~one per bucket
-        CdcTable.replaceWith(spark, pdir,
+        CdcTable.replaceWith(pdir,
           CdcTable.read(spark, pdir).repartition(col("tbucket")),
           partitionBy = Seq("tbucket"), expectedLastCommit = Some(snap))
         ()
       },
       IndexMeta.foldWithRetry(retries) { () =>
         val snap = CdcTable.log(tdir).last.commit
-        CdcTable.replaceWith(spark, tdir,
+        CdcTable.replaceWith(tdir,
           CdcTable.read(spark, tdir)
             .agg(sum(col("n_docs")).cast("long").as("n_docs"),
               sum(col("tot_len")).cast("long").as("tot_len")),
@@ -587,7 +587,7 @@ object TextAnalysis {
     val pdir = s"$dir/postings"; val tdir = s"$dir/totals"
     require(CdcTable.log(pdir).nonEmpty,
       s"no incremental lexical index at $dir")
-    CdcTable.replaceWith(spark, tdir,
+    CdcTable.replaceWith(tdir,
       CdcTable.read(spark, pdir)
         .groupBy(col("id")).agg(max(col("dl")).as("dl"))
         .agg(count(lit(1)).cast("long").as("n_docs"),

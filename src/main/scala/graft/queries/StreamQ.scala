@@ -50,7 +50,7 @@ object StreamQ {
         // complete mode re-emits the whole aggregate: replace, don't
         // accumulate (first trigger creates the table)
         if (CdcTable.log(out).isEmpty) CdcTable.append(b, out)
-        else CdcTable.replaceWith(s, out, b)
+        else CdcTable.replaceWith(out, b)
         ()
       }
       .start()

@@ -31,6 +31,22 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * All metadata IO goes through the Hadoop FileSystem API
   * ([[graft.core.Fs]]) so the sink runs on file://, hdfs:// and s3a://.
   *
+  * Every write path commits through one protocol:
+  *   1. STAGE: new data files under a fresh `data/batch-<uuid>` with
+  *      their footer stats ([[stageData]]), change files and DV
+  *      sidecars under `_changes/` and `_dv/` ([[stageAux]]) — all
+  *      invisible until step 4;
+  *   2. CARRY: a rewrite republishes every file it does not rewrite BY
+  *      REFERENCE, with its stats, row counts, sizes and blooms
+  *      ([[rewriteFiles]]) — zero data movement for the untouched bulk;
+  *   3. VALIDATE AT TAIL: before the manifest lands, the log tail must
+  *      still be the commit the write was built from ([[atTail]]), or
+  *      the write fails with ConcurrentModificationException instead
+  *      of silently superseding a commit it never saw; a write whose
+  *      `txn` is at or below the log's high-water mark for its appId
+  *      is a replay and skips ([[replayed]]);
+  *   4. COMMIT: one atomically-created manifest ([[commit]]).
+  *
   * Schema generations: every commit records its full schema and a
   * schema version `sv`; widening changes (int64→double …) bump `sv`
   * instead of mixing parquet physical types in one scan — Spark's
@@ -498,8 +514,7 @@ object CdcTable {
     * Returns the new schema version. Single-writer maintenance, like
     * every schema operation; optimistic validation fails a racing
     * write loudly. */
-  def renameColumn(spark: SparkSession, dir: String, from: String,
-      to: String): Long = {
+  def renameColumn(dir: String, from: String, to: String): Long = {
     val commits0 = log(dir)
     require(commits0.nonEmpty, s"no CdcTable at $dir")
     val schema = commits0.last.schema
@@ -533,15 +548,10 @@ object CdcTable {
           s"${g._1.name} [${g._2}] — drop that column first"))
     val renamed = StructType(schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    val snap = commits0.last.commit
     commit(dir, n => Commit(n, commits0.last.schemaVersion + 1,
       "rename", System.currentTimeMillis(), None, renamed, Nil,
       rename = Some((from, to))),
-      validate = cur =>
-        if (cur.lastOption.map(_.commit) != Some(snap))
-          throw new java.util.ConcurrentModificationException(
-            s"rename at $dir: a write landed mid-rename (expected " +
-              s"log tail $snap); rerun")).schemaVersion
+      validate = atTail("rename", dir, commits0.last.commit)).schemaVersion
   }
 
   /** `GRAFT DROP COLUMN` — the metadata-only sibling of
@@ -560,7 +570,7 @@ object CdcTable {
     * modernizes old files (physically shedding the dropped bytes —
     * until then VACUUM cannot reclaim them, the documented
     * column-mapping tradeoff). Returns the new schema version. */
-  def dropColumn(spark: SparkSession, dir: String, name: String): Long = {
+  def dropColumn(dir: String, name: String): Long = {
     val commits0 = log(dir)
     require(commits0.nonEmpty, s"no CdcTable at $dir")
     val schema = commits0.last.schema
@@ -586,15 +596,10 @@ object CdcTable {
         s"drop: column '$name' is a source of generated column " +
           s"${g._1.name} [${g._2}] — drop that column first"))
     val narrowed = StructType(schema.fields.filterNot(_.name == name))
-    val snap = commits0.last.commit
     commit(dir, n => Commit(n, commits0.last.schemaVersion + 1,
       "drop", System.currentTimeMillis(), None, narrowed, Nil,
       rename = Some((name, ""))), // empty target = drop marker
-      validate = cur =>
-        if (cur.lastOption.map(_.commit) != Some(snap))
-          throw new java.util.ConcurrentModificationException(
-            s"drop at $dir: a write landed mid-drop (expected log " +
-              s"tail $snap); rerun")).schemaVersion
+      validate = atTail("drop", dir, commits0.last.commit)).schemaVersion
   }
 
   /** `GRAFT ADD COLUMN` — metadata-only schema widening, completing
@@ -607,8 +612,7 @@ object CdcTable {
     * the column before any writer sends it, with the type YOU chose
     * rather than the first batch's inference). Returns the new schema
     * version. */
-  def addColumn(spark: SparkSession, dir: String, name: String,
-      dataType: DataType): Long = {
+  def addColumn(dir: String, name: String, dataType: DataType): Long = {
     val commits0 = log(dir)
     require(commits0.nonEmpty, s"no CdcTable at $dir")
     val schema = commits0.last.schema
@@ -618,14 +622,9 @@ object CdcTable {
       s"add: '$name' is an engine-owned metadata prefix")
     val widened = StructType(schema.fields :+
       StructField(name, dataType, nullable = true))
-    val snap = commits0.last.commit
     commit(dir, n => Commit(n, commits0.last.schemaVersion + 1,
       "add", System.currentTimeMillis(), None, widened, Nil),
-      validate = cur =>
-        if (cur.lastOption.map(_.commit) != Some(snap))
-          throw new java.util.ConcurrentModificationException(
-            s"add at $dir: a write landed mid-add (expected log " +
-              s"tail $snap); rerun")).schemaVersion
+      validate = atTail("add", dir, commits0.last.commit)).schemaVersion
   }
 
   /** `GRAFT ALTER COLUMN … TYPE` — explicit metadata-only TYPE
@@ -647,8 +646,7 @@ object CdcTable {
     * (their values live in file paths as strings; re-typing them is a
     * rewrite concern); `_cdc_`/`_graft` metadata columns reject.
     * Returns the new schema version. */
-  def widenColumn(spark: SparkSession, dir: String, name: String,
-      newType: DataType): Long = {
+  def widenColumn(dir: String, name: String, newType: DataType): Long = {
     val commits0 = log(dir)
     require(commits0.nonEmpty, s"no CdcTable at $dir")
     val schema = commits0.last.schema
@@ -679,14 +677,10 @@ object CdcTable {
     val out = StructType(schema.fields.map(f =>
       if (f.name == name) f.copy(dataType = newType, nullable = true)
       else f))
-    val snap = commits0.last.commit
     commit(dir, n => Commit(n, commits0.last.schemaVersion + 1,
       "widen", System.currentTimeMillis(), None, out, Nil),
-      validate = cur =>
-        if (cur.lastOption.map(_.commit) != Some(snap))
-          throw new java.util.ConcurrentModificationException(
-            s"alter type at $dir: a write landed mid-alter (expected " +
-              s"log tail $snap); rerun")).schemaVersion
+      validate = atTail("alter type", dir, commits0.last.commit))
+      .schemaVersion
   }
 
   // ───────────────────────────────────────────────────────────────
@@ -768,15 +762,10 @@ object CdcTable {
         s"ADD CONSTRAINT $name rejected: existing rows violate " +
           s"CHECK ($exprSql) — e.g. ${bad.mkString("; ")}")
     }
-    val snap = commits.last.commit
     commit(dir, n => Commit(n, commits.last.schemaVersion,
       "constraint", System.currentTimeMillis(), None, schema, Nil,
       constraintOps = Seq(ConsOp(add = true, name, exprSql, cols))),
-      validate = cur =>
-        if (cur.lastOption.map(_.commit) != Some(snap))
-          throw new java.util.ConcurrentModificationException(
-            s"ADD CONSTRAINT at $dir: a write landed after the " +
-              s"validation scan (expected log tail $snap); rerun"))
+      validate = atTail("ADD CONSTRAINT", dir, commits.last.commit))
       .commit
   }
 
@@ -923,14 +912,10 @@ object CdcTable {
       .putStringArray(GenColsKey, cols.toArray).build()
     val widened = StructType(schema.fields :+
       StructField(name, dataType, nullable = true, metadata = meta))
-    val snap = commits0.last.commit
     commit(dir, n => Commit(n, commits0.last.schemaVersion + 1,
       "add", System.currentTimeMillis(), None, widened, Nil),
-      validate = cur =>
-        if (cur.lastOption.map(_.commit) != Some(snap))
-          throw new java.util.ConcurrentModificationException(
-            s"add generated at $dir: a write landed mid-add " +
-              s"(expected log tail $snap); rerun")).schemaVersion
+      validate = atTail("add generated", dir, commits0.last.commit))
+      .schemaVersion
   }
 
   // ───────────────────────────────────────────────────────────────
@@ -1107,33 +1092,87 @@ object CdcTable {
       s"could not commit to $dir after 50 attempts — concurrent writers?")
   }
 
-  /** Enumerate the parquet files of a staged batch, dir-relative.
-    * LAST occurrence of the batch marker: a table legitimately rooted
-    * under a path that itself contains `/data/batch-` (e.g. a curation
-    * artifact nested inside another table's data dir) must still key
-    * its rel paths at ITS OWN staging level, or `$dir/$rel` reads and
-    * the bloom/keyed-rewrite rel joins all silently miss. Partition
-    * segments cannot contain '/', so the last occurrence is always the
-    * staging dir this commit just wrote. The regexp sites extracting
-    * rel paths from input_file_name use the same last-occurrence rule
-    * (greedy `.*` prefix) — keep them in sync. */
-  private def stagedFiles(batchDir: String): Seq[String] =
-    Fs.walkFiles(batchDir)
-      .map(_._1.toString)
+  /** The tail validator every snapshot-built write passes to
+    * [[commit]]: the log must still end at `snap`, the commit the
+    * write was built from (0 = an empty log). */
+  private def atTail(op: String, dir: String, snap: Long)
+      : Seq[Commit] => Unit = { cur =>
+    val tail = cur.lastOption.map(_.commit).getOrElse(0L)
+    if (tail != snap) throw new java.util.ConcurrentModificationException(
+      s"$op at $dir expected log tail $snap but found $tail — a write " +
+        s"landed mid-$op; rerun over the new snapshot (nothing was lost)")
+  }
+
+  /** The txn high-water check: a write carrying `(appId, v)` is a
+    * replay when the log already holds a commit of that appId at a
+    * version ≥ v — the foreachBatch exactly-once pattern (Delta's
+    * txnAppId/txnVersion). */
+  private def replayed(commits: Seq[Commit],
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, v) =>
+      commits.exists(_.txn.exists(t => t._1 == app && t._2 >= v)) }
+
+  /** Data files with their per-file manifest entries — the unit the
+    * write paths stage, carry and commit. */
+  private final case class FileSet(
+      files: Seq[String] = Nil,
+      stats: Map[String, Map[String, FileStats.ColStats]] = Map.empty,
+      rows: Map[String, Long] = Map.empty,
+      bytes: Map[String, Long] = Map.empty,
+      blooms: Map[String, Map[String, String]] = Map.empty) {
+    def ++(o: FileSet): FileSet = FileSet(files ++ o.files,
+      stats ++ o.stats, rows ++ o.rows, bytes ++ o.bytes, blooms ++ o.blooms)
+  }
+
+  /** A manifest publishing `fs`. */
+  private def manifest(n: Long, sv: Long, action: String,
+      txn: Option[(String, Long)], schema: StructType, fs: FileSet): Commit =
+    Commit(n, sv, action, System.currentTimeMillis(), txn, schema, fs.files,
+      stats = fs.stats, fileRows = fs.rows, fileBytes = fs.bytes,
+      blooms = fs.blooms)
+
+  /** Write `rows` as parquet under a fresh `<dir>/<sub>/batch-<uuid>`
+    * (Hive-partitioned by `layout`) and return the staged files,
+    * dir-relative. Keyed at the LAST `/<sub>/batch-` occurrence: a
+    * table legitimately rooted under a path that itself contains
+    * `/data/batch-` (e.g. a curation artifact nested inside another
+    * table's data dir) must still key its rel paths at ITS OWN staging
+    * level, or `$dir/$rel` reads and the bloom/keyed-rewrite rel joins
+    * all silently miss. Partition segments cannot contain '/', so the
+    * last occurrence is always the batch this call just wrote; the
+    * regexps extracting rel paths from input_file_name ([[RelPathRe]],
+    * [[ChangeRelPathRe]]) use the same rule — keep them in sync. */
+  private def stageAux(dir: String, sub: String, rows: DataFrame,
+      layout: Seq[String] = Nil): Seq[String] = {
+    val batchDir = s"$dir/$sub/batch-${UUID.randomUUID()}"
+    val writer = rows.write.mode("overwrite")
+    (if (layout.nonEmpty) writer.partitionBy(layout: _*) else writer)
+      .parquet(batchDir)
+    Fs.walkFiles(batchDir).map(_._1.toString)
       .filter(_.endsWith(".parquet"))
       .map { abs =>
-        val marker = abs.lastIndexOf("/data/batch-")
-        require(marker >= 0, s"staged file outside data dir: $abs")
+        val marker = abs.lastIndexOf(s"/$sub/batch-")
+        require(marker >= 0, s"staged file outside $sub: $abs")
         abs.substring(marker + 1)
       }
+  }
+
+  /** Stage data files under `data/` and read back their footer stats,
+    * row counts and sizes. */
+  private def stageData(dir: String, rows: DataFrame,
+      layout: Seq[String]): FileSet = {
+    val files = stageAux(dir, "data", rows, layout)
+    val (stats, frows, fbytes) = FileStats.collectInfo(dir, files)
+    FileSet(files, stats, frows, fbytes)
+  }
 
   /** input_file_name → manifest rel path, as a regex: the greedy `.*`
     * prefix pins the capture to the LAST `data/batch-` occurrence,
-    * matching [[stagedFiles]]' keying — INCLUDING the anchoring `/`
+    * matching [[stageAux]]' keying — INCLUDING the anchoring `/`
     * before it (input_file_name is always an absolute URI, so the
     * separator exists). Without the `/` a partition-value suffix
     * spelling `…data` followed by a partition dir starting `batch-`
-    * would key rel paths differently here than stagedFiles does. */
+    * would key rel paths differently here than stageAux does. */
   private[graft] val RelPathRe = ".*/(data/batch-.*)$"
 
   /** input_file_name → rel path for CDF change files (same
@@ -1151,47 +1190,23 @@ object CdcTable {
     StructType(schema.fields :+ StructField("_change_type",
       org.apache.spark.sql.types.StringType))
 
-  /** Stage auxiliary (non-data) parquet under `<dir>/<sub>/batch-…`
-    * and return the dir-relative file list — the CDF change-file and
-    * DV-sidecar writer ([[stagedFiles]]' keying rules apply). */
-  private def stageAux(dir: String, sub: String, rows: DataFrame)
-      : Seq[String] = {
-    val batchDir = s"$dir/$sub/batch-${UUID.randomUUID()}"
-    rows.write.mode("overwrite").parquet(batchDir)
-    Fs.walkFiles(batchDir).map(_._1.toString)
-      .filter(_.endsWith(".parquet"))
-      .map { abs =>
-        val marker = abs.lastIndexOf(s"/$sub/batch-")
-        require(marker >= 0, s"staged file outside $sub: $abs")
-        abs.substring(marker + 1)
-      }
-  }
-
   /** Append a batch, merging schemas under `mode`. A schema change
     * opens a new generation. Returns the schema version after the
     * write. Single-writer semantics (the streaming sink is the only
     * writer, as in the reference).
     *
-    * `txn = Some((appId, version))` makes replays idempotent — the
-    * foreachBatch exactly-once pattern (Delta's txnAppId/txnVersion;
-    * the reference tracks `_kafka_offset` for the same purpose,
-    * `schema_inferrer.py:488`): a batch whose version was already
-    * committed for this appId is skipped, and because the manifest IS
-    * the commit point, a crash between the data write and the
-    * manifest leaves only invisible orphan files — the replay appends
-    * exactly once (no duplicate window, matching the Delta guarantee). */
+    * `txn = Some((appId, version))` makes replays idempotent (the
+    * reference tracks `_kafka_offset` for the same purpose,
+    * `schema_inferrer.py:488`): a replayed batch is skipped, and since
+    * a crash before the manifest leaves only invisible orphans, the
+    * replay appends exactly once. */
   def append(batch: DataFrame, dir: String, mode: MergeMode = SchemaMerge.Auto,
       partitionBy: Seq[String] = Seq("_ingestion_date"),
       txn: Option[(String, Long)] = None,
       maxStructFields: Int = Int.MaxValue,
       bloomCols: Seq[String] = Nil): Long = {
     val commits = log(dir)
-    txn.foreach { case (app, v) =>
-      val committed = commits.flatMap(_.txn)
-        .filter(_._1 == app).map(_._2)
-      if (committed.nonEmpty && committed.max >= v)
-        return commits.last.schemaVersion // replayed batch — skip
-    }
+    if (replayed(commits, txn)) return commits.last.schemaVersion
     val existing = commits.lastOption.map(_.schema)
     // incoming metadata never reaches the manifest (stripFieldMeta):
     // only the ADD GENERATED DDL may install engine markers
@@ -1212,26 +1227,19 @@ object CdcTable {
       applyGenerated(SchemaMerge.castTo(batch, merged), merged,
         batch.schema.fieldNames.toSet, "append"),
       constraintsOf(commits), "append")
-    val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
-    val writer = out.write.mode("overwrite")
     val partCols = partitionBy.filter(merged.fieldNames.contains)
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(batchDir)
-    val files = stagedFiles(batchDir)
-    val (stats, frows, fbytes) = FileStats.collectInfo(dir, files)
-    val blooms = collectBlooms(out.sparkSession, batchDir, files,
+    val staged = stageData(dir, out, partCols)
+    val blooms = collectBlooms(out.sparkSession, dir, staged.files,
       bloomCols, merged, partCols)
-    commit(dir, n => Commit(n, sv, "append",
-      System.currentTimeMillis(), txn, merged, files,
-      stats = stats, fileRows = frows, fileBytes = fbytes,
-      blooms = blooms))
+    commit(dir, n => manifest(n, sv, "append", txn, merged,
+      staged.copy(blooms = blooms)))
     sv
   }
 
   /** Build the per-file Bloom filters an append requested: one
-    * column-pruned read-back of the just-written staged batch per
-    * bloom column (page-cache-warm — the batch was written a moment
-    * ago), hashing each non-null value to its 4 bit positions in SQL
+    * column-pruned read-back of the just-staged files per bloom column
+    * (page-cache-warm — they were written a moment ago), hashing each
+    * non-null value to its 4 bit positions in SQL
     * (the portable md5-substring family [[FileStats.bloomPositions]]
     * probes with) and collecting the DISTINCT (file, position) pairs —
     * bounded by files × 8192 regardless of row count. Requested
@@ -1239,7 +1247,7 @@ object CdcTable {
     * string rendering is probe-portable), and not be partition
     * columns (whose values never reach the data files — partition
     * pruning already covers them). */
-  private def collectBlooms(spark: SparkSession, batchDir: String,
+  private def collectBlooms(spark: SparkSession, dir: String,
       relFiles: Seq[String], bloomCols: Seq[String],
       schema: StructType, partCols: Seq[String])
   : Map[String, Map[String, String]] = {
@@ -1252,10 +1260,7 @@ object CdcTable {
     // and basename keying would merge those files' positions into one
     // superset bloom while the others silently got none.
     val byRel = relFiles.toSet
-    def relOf(abs: String): String = {
-      val marker = abs.lastIndexOf("/data/batch-")
-      require(marker >= 0, s"bloom read-back file outside data dir: $abs")
-      val rel = abs.substring(marker + 1)
+    def relOf(rel: String): String = {
       require(byRel.contains(rel),
         s"bloom read-back file not in the staged list: $rel")
       rel
@@ -1273,14 +1278,15 @@ object CdcTable {
           "(string/integral only — other renderings are not " +
           "probe-portable)")
     }
+    if (relFiles.isEmpty) return Map.empty
     bloomCols.map { c =>
       // aggregate positions per FILE with collect_set (map-side
       // partial aggregation, bounded by BloomBits per file) instead of
       // a corpus-wide distinct on the exploded (file, position) rows:
       // the shuffle carries one bounded set per file per map task, not
       // hashes×rows rows, and the collect returns one row per file
-      c -> spark.read.parquet(batchDir)
-        .select(input_file_name().as("_f"),
+      c -> spark.read.parquet(relFiles.map(resolve(dir, _)): _*)
+        .select(relPathCol().as("_f"),
           col(c).cast("string").as("_v"))
         .where(col("_v").isNotNull)
         .select(col("_f"), explode(expr(
@@ -1347,7 +1353,7 @@ object CdcTable {
 
   /** The manifest-relative path of each row's source file, as a
     * column — percent-decoded `input_file_name()` keyed by the same
-    * last-occurrence rule as [[stagedFiles]]. */
+    * last-occurrence rule as [[stageAux]]. */
   private[graft] def relPathCol(): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
     pctDecode(regexp_extract(input_file_name(), RelPathRe, 1))
@@ -1373,24 +1379,19 @@ object CdcTable {
     else readCommits(spark, dir, eff)
   }
 
-  /** Read with MANIFEST-level partition pruning: the predicate runs
-    * over each committed file's (partitionColumn, value) pairs parsed
-    * from its staged path, and files that fail are never handed to
-    * Spark at all — log-based file skipping (the Delta/Iceberg scale
-    * pattern): no directory listing, no scan-time filtering, the
-    * planned scan contains exactly the surviving files. Files without
-    * a value for a predicated column (e.g. pre-partitioning layouts)
-    * are kept — pruning must never drop data it cannot judge. */
-  def readPruned(spark: SparkSession, dir: String,
-      partitionPredicate: (String, String) => Boolean): DataFrame =
-    readFiltered(spark, dir, partitionPredicate)
-
-  /** [[readPruned]] + [[readAsOf]] combined: manifest-level file
-    * skipping over the table as of a commit / timestamp — the scan
-    * primitive behind the `graft` DataSource format
-    * ([[graft.sources.GraftSource]]). `statsPredicate` additionally
-    * judges each file by its recorded column stats ([[FileStats]] —
-    * min/max/hasNull data skipping); files without stats always pass. */
+  /** Read with MANIFEST-level file skipping, optionally as of a commit
+    * / timestamp ([[readAsOf]]) — the scan primitive behind the `graft`
+    * DataSource format ([[graft.sources.GraftSource]]). The
+    * `partitionPredicate` runs over each committed file's
+    * (partitionColumn, value) pairs parsed from its staged path, and
+    * files that fail are never handed to Spark at all — log-based file
+    * skipping (the Delta/Iceberg scale pattern): no directory listing,
+    * no scan-time filtering, the planned scan contains exactly the
+    * surviving files. Files without a value for a predicated column
+    * (e.g. pre-partitioning layouts) are kept — pruning must never drop
+    * data it cannot judge. `statsPredicate` and `bloomPredicate`
+    * additionally judge each file by its recorded column stats and
+    * Bloom filters ([[FileStats]]); files without them always pass. */
   def readFiltered(spark: SparkSession, dir: String,
       partitionPredicate: (String, String) => Boolean,
       commitAsOf: Option[Long] = None,
@@ -1530,7 +1531,7 @@ object CdcTable {
     import org.apache.spark.sql.functions.{broadcast, col, input_file_name,
       lit, regexp_extract}
     import spark.implicits._
-    val commits = CdcTable.log(dir)
+    val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
     val hi = upToCommit.getOrElse(commits.last.commit)
     val range = commits
@@ -1559,8 +1560,7 @@ object CdcTable {
         .toDF("_graft_file", "_commit", "_commit_ts")
       Some(SchemaMerge.castTo(readCommits(spark, dir,
         (appends ++ renameMarkers).sortBy(_.commit)), target)
-        .withColumn("_graft_file",
-          pctDecode(regexp_extract(input_file_name(), RelPathRe, 1)))
+        .withColumn("_graft_file", relPathCol())
         .join(broadcast(fileMeta), Seq("_graft_file"))
         .drop("_graft_file")
         .withColumn("_change_type", lit("insert"))
@@ -1617,10 +1617,15 @@ object CdcTable {
           .getOrElse(c))
       val legs = withRf.map { c =>
         val rfSet = c.removedFiles.map(fileKey).toSet
+        // the LATEST commit before c listing a removed file owns it: a
+        // replace that carried the file re-lists it, and reading every
+        // listing would emit its delete rows once per listing
+        val ownerOf = hydrated.filter(_.commit < c.commit)
+          .flatMap(o => o.files.map(fileKey).filter(rfSet).map(_ -> o.commit))
+          .toMap
         val owners = hydrated
-          .map(o => o.copy(files =
-            if (o.commit < c.commit) o.files.filter(f => rfSet(fileKey(f)))
-            else Nil))
+          .map(o => o.copy(files = o.files.filter(f =>
+            ownerOf.get(fileKey(f)).contains(o.commit))))
           .filter(o => o.files.nonEmpty ||
             o.rename.nonEmpty || // chain markers (any position) ride
             (o.dvFiles.nonEmpty && o.commit < c.commit)) // pre-delete
@@ -1870,9 +1875,7 @@ object CdcTable {
       numFiles: Int = 0,
       partitionBy: Seq[String] = Seq("_ingestion_date")): Long = {
     // one log snapshot: the state is computed from it AND the replace
-    // validates against it, so an append landing mid-compaction fails
-    // the commit (ConcurrentModificationException) instead of being
-    // silently superseded — retry the compaction to pick it up
+    // validates against it
     val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
     val state = graft.query.CurrentState(
@@ -1886,16 +1889,13 @@ object CdcTable {
         if (numFiles > 0) numFiles
         else math.max(1, spark.sparkContext.defaultParallelism / 2),
         leading = partCols)
-    replaceWith(spark, dir, clustered, partitionBy,
+    replaceWith(dir, clustered, partitionBy,
       expectedLastCommit = Some(commits.last.commit))
   }
 
-  /** Atomically rewrite the table's whole content as one `replace`
-    * manifest under the current schema (superseded files become
-    * vacuumable orphans). The rewrite primitive behind upsert
-    * compaction and DLQ replay resolution. Keeps the table's partition
-    * layout: a generation must be layout-uniform or the unioned
-    * per-generation scan would mix partitioned and flat files. */
+  /** What a DML op did: rows it deleted (or updated / matched), data
+    * files it wrote, live files it carried by reference, and the
+    * commit it made (the unchanged tail when it made none). */
   final case class DeleteResult(
       rowsDeleted: Long,
       filesRewritten: Long,
@@ -1909,18 +1909,10 @@ object CdcTable {
     * of files containing matching rows (parquet row-group stats skip
     * the rest, so the scan is cheap relative to any rewrite, and a
     * file that merely MIGHT match never rewrites). Only those files
-    * re-write without their matching rows; every other live file is
-    * republished by REFERENCE in one optimistic-concurrency replace
-    * commit — stats carried forward, zero data movement for the
-    * untouched bulk. Readers see the pre-delete snapshot until the
-    * single manifest commit lands (MVCC), and time travel to an
-    * earlier commit still shows the deleted rows until vacuum.
-    *
-    * Files from older schema GENERATIONS or with a different
-    * partition LAYOUT than `partitionBy` also rewrite (touched or
-    * not): a replace commit carries one schema and one layout, so
-    * carrying them by reference would misread them — the delete
-    * doubles as generation/layout compaction on such tables.
+    * re-write without their matching rows ([[rewriteFiles]] carries
+    * the rest). Readers see the pre-delete snapshot until the manifest
+    * commit lands (MVCC), and time travel to an earlier commit still
+    * shows the deleted rows until vacuum.
     *
     * @note CHANGE FEED (round 16, Delta CDF parity): the commit
     *       persists its victims as `delete` change rows — partial
@@ -1949,8 +1941,7 @@ object CdcTable {
   /** Targeted row update (`UPDATE … SET … WHERE …`): same
     * touched-file machinery as [[delete]] — only files containing
     * matching rows rewrite, with the assignments applied to matching
-    * rows and everything else byte-identical; untouched files carry by
-    * reference. Assignment values are SQL expressions over the row;
+    * rows and everything else byte-identical. Assignment values are SQL expressions over the row;
     * types coerce through the table schema (castTo), never widen it. */
   def update(spark: SparkSession, dir: String, predicate: String,
       assignments: Seq[(String, String)],
@@ -2012,9 +2003,8 @@ object CdcTable {
     * discovery is a key join instead of a predicate (the source key
     * set is not a literal), then the same carry-by-reference rewrite:
     * only files holding matched keys rewrite (their unmatched rows
-    * survive, matched rows drop via LEFT ANTI), the whole source
-    * lands as fresh files, everything else republishes by reference.
-    * Source keys must be unique per key tuple (duplicates would all
+    * survive, matched rows drop via LEFT ANTI) and the whole source
+    * lands as fresh files. Source keys must be unique per key tuple (duplicates would all
     * insert). */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String],
@@ -2028,8 +2018,7 @@ object CdcTable {
     * `keys` — the repair-plan / right-to-be-forgotten path where the
     * key set is a FRAME, not a literal predicate (so it never
     * round-trips through the driver as an IN-list). Same touched-file
-    * machinery as MERGE minus the insert: only files holding matched
-    * keys rewrite, everything else carries by reference. */
+    * machinery as MERGE minus the insert. */
   def deleteKeys(spark: SparkSession, dir: String, keys: DataFrame,
       keyCols: Seq[String],
       partitionBy: Seq[String] = Seq("_ingestion_date")): DeleteResult =
@@ -2107,18 +2096,11 @@ object CdcTable {
       keys: Seq[String],
       partitionBy: Seq[String] = Seq("_ingestion_date"),
       txn: Option[(String, Long)] = None): DeleteResult = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "mergeDV needs at least one key column")
     val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
-    txn.foreach { case (app, v) =>
-      val committed = commits.flatMap(_.txn)
-        .filter(_._1 == app).map(_._2)
-      if (committed.nonEmpty && committed.max >= v)
-        return DeleteResult(0L, 0L,
-          effective(commits).flatMap(_.files).size, commits.last.commit)
-    }
-    val snap = commits.last.commit
+    if (replayed(commits, txn)) return unchanged(commits)
     val schema = commits.last.schema
     val extra = source.schema.fieldNames
       .filterNot(schema.fieldNames.contains)
@@ -2128,64 +2110,37 @@ object CdcTable {
         "rewrite route (merge with evolveSchema = true)")
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"mergeDV key $k not in the table schema"))
-    val live = effective(commits)
     val src = source.localCheckpoint() // pin: feeds 4 branches
     val srcKeys = src
       .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*).distinct()
-    val matched = readCommits(spark, dir, live, tagPos = true)
-      .join(srcKeys, keys.toSeq, "left_semi")
-      .localCheckpoint()
-    val n = matched.count()
-    val matchedKeys = matched
-      .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*).distinct()
-    val srcCast = applyGenerated(SchemaMerge.castTo(src, schema),
-      schema, src.schema.fieldNames.toSet, "mergeDV")
-    val ct = "_change_type"
-    val changeRows = matched.drop("_graft_file", "_graft_pos")
-      .withColumn(ct, lit("update_preimage"))
-      .unionByName(srcCast.join(matchedKeys, keys.toSeq, "left_semi")
-        .withColumn(ct, lit("update_postimage")))
-      .unionByName(srcCast.join(matchedKeys, keys.toSeq, "left_anti")
-        .withColumn(ct, lit("insert")))
-    // the WHOLE source lands as fresh files under the table's layout
-    // (CHECK constraints gate them in-write, like the rewrite route)
-    val targetLayout = partitionBy.filter(schema.fieldNames.contains)
-    val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
-    val writer = constraintGuard(srcCast, constraintsOf(commits),
-      "mergeDV").write.mode("overwrite")
-    (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
-     else writer).parquet(batchDir)
-    val fresh = stagedFiles(batchDir)
-    val (freshStats, freshRows, freshBytes) =
-      FileStats.collectInfo(dir, fresh)
-    val sidecar =
-      if (n == 0) Nil
-      else stageAux(dir, "_dv",
-        matched.select(col("_graft_file"), col("_graft_pos")))
-    val cfiles = stageAux(dir, "_changes",
-      SchemaMerge.castTo(changeRows, changeSchemaOf(schema)))
-    val c = commit(dir, nn => Commit(nn, commits.last.schemaVersion,
-      "dv", System.currentTimeMillis(), txn, schema, fresh,
-      stats = freshStats, fileRows = freshRows,
-      fileBytes = freshBytes,
-      changeFiles = cfiles, dvFiles = sidecar),
-      validate = cur => if (cur.lastOption.map(_.commit) != Some(snap))
-        throw new java.util.ConcurrentModificationException(
-          s"mergeDV at $dir built from commit $snap but the log is " +
-            s"now at ${cur.lastOption.map(_.commit).getOrElse(0L)} — " +
-            "a write landed mid-merge; rerun (nothing was lost)"))
-    DeleteResult(n, 0L, live.flatMap(_.files).size, c.commit)
+    commitDv(spark, dir, commits, "mergeDV",
+      scan => scan.join(srcKeys, keys.toSeq, "left_semi"),
+      source = Some(applyGenerated(SchemaMerge.castTo(src, schema),
+        schema, src.schema.fieldNames.toSet, "mergeDV")),
+      keys = keys, layout = partitionBy.filter(schema.fieldNames.contains),
+      txn = txn)
   }
 
-  /** Shared DV-delete tail: one DV-applied position-tagged scan
+  /** The table as it stands: nothing matched, replayed or rewritten. */
+  private def unchanged(commits: Seq[Commit]): DeleteResult =
+    DeleteResult(0L, 0L, effective(commits).flatMap(_.files).size,
+      commits.last.commit)
+
+  /** The merge-on-read commit: one DV-applied position-tagged scan
     * (re-deleting already-deleted rows records nothing twice),
-    * `matchOf` selects the victims, then ONE sidecar + change-file
-    * write and ONE fileless `"dv"` commit. */
+    * `matchOf` selects the victims, then one sidecar + change-file
+    * write and ONE `"dv"` commit. With a `source` (MoR merge), the
+    * victims are the preimages of `keys` the source updates, and the
+    * WHOLE source lands as fresh data files under `layout` (CHECK
+    * constraints gate them in-write); without one, matching nothing
+    * commits nothing. */
   private def commitDv(spark: SparkSession, dir: String,
       commits: Seq[Commit], op: String,
-      matchOf: DataFrame => DataFrame): DeleteResult = {
+      matchOf: DataFrame => DataFrame,
+      source: Option[DataFrame] = None, keys: Seq[String] = Nil,
+      layout: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None): DeleteResult = {
     import org.apache.spark.sql.functions.{col, lit}
-    val snap = commits.last.commit
     val schema = commits.last.schema
     val live = effective(commits)
     // pin the matched frame — the sidecar, the change rows and the
@@ -2193,54 +2148,153 @@ object CdcTable {
     val matched = matchOf(readCommits(spark, dir, live, tagPos = true))
       .localCheckpoint()
     val n = matched.count()
-    if (n == 0)
-      return DeleteResult(0L, 0L, live.flatMap(_.files).size, snap)
-    val sidecar = stageAux(dir, "_dv",
-      matched.select(col("_graft_file"), col("_graft_pos")))
-    val cfiles = stageAux(dir, "_changes", SchemaMerge.castTo(
-      matched.drop("_graft_file", "_graft_pos")
-        .withColumn("_change_type", lit("delete")),
-      changeSchemaOf(schema)))
-    val c = commit(dir, nn => Commit(nn, commits.last.schemaVersion,
-      "dv", System.currentTimeMillis(), None, schema, Nil,
-      changeFiles = cfiles, dvFiles = sidecar),
-      validate = cur => if (cur.lastOption.map(_.commit) != Some(snap))
-        throw new java.util.ConcurrentModificationException(
-          s"$op at $dir built from commit $snap but the log " +
-            s"is now at ${cur.lastOption.map(_.commit).getOrElse(0L)} " +
-            "— a write landed mid-delete; rerun (nothing was lost)"))
+    if (n == 0 && source.isEmpty) return unchanged(commits)
+    val pre = matched.drop("_graft_file", "_graft_pos")
+    val ct = "_change_type"
+    val changeRows = source.fold(pre.withColumn(ct, lit("delete"))) { src =>
+      val matchedKeys = pre
+        .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*).distinct()
+      pre.withColumn(ct, lit("update_preimage"))
+        .unionByName(src.join(matchedKeys, keys.toSeq, "left_semi")
+          .withColumn(ct, lit("update_postimage")))
+        .unionByName(src.join(matchedKeys, keys.toSeq, "left_anti")
+          .withColumn(ct, lit("insert")))
+    }
+    val fresh = source.fold(FileSet())(src => stageData(dir,
+      constraintGuard(src, constraintsOf(commits), op), layout))
+    val sidecar =
+      if (n == 0) Nil
+      else stageAux(dir, "_dv",
+        matched.select(col("_graft_file"), col("_graft_pos")))
+    val cfiles = stageAux(dir, "_changes",
+      SchemaMerge.castTo(changeRows, changeSchemaOf(schema)))
+    val c = commit(dir, nn => manifest(nn, commits.last.schemaVersion,
+      "dv", txn, schema, fresh).copy(changeFiles = cfiles,
+      dvFiles = sidecar),
+      validate = atTail(op, dir, commits.last.commit))
     DeleteResult(n, 0L, live.flatMap(_.files).size, c.commit)
   }
 
-  /** `txn`: recorded in the replace commit as an idempotency /
-    * HIGH-WATER marker (a committed (appId, ver ≥ v) short-circuits
-    * the rewrite, like [[append]]) — the hook incremental maintainers
-    * (e.g. [[graft.ext.Dedup.syncComponents]]) use to remember which
-    * upstream commit a keyed upsert has folded in. */
+  /** Touched-file discovery: one scan of the live files, each row
+    * tagged with its file ([[relPathCol]]); `matching` keeps the rows
+    * the op hits. Returns the matched-row count per touched file, keyed
+    * by [[fileKey]]. */
+  private def matchedByFile(spark: SparkSession, dir: String,
+      live: Seq[Commit])(matching: DataFrame => DataFrame)
+      : Map[String, Long] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    matching(readCommits(spark, dir, live)
+      .withColumn("__graft_file", relPathCol()))
+      .groupBy(col("__graft_file")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** The FULL-FILE shortcut (pure removals only — Delta CDF's
+    * remove-file optimization): a touched file whose matched-row count
+    * equals its manifest row count has NO survivors, so it neither
+    * rewrites nor carries nor writes preimage change rows; it drops
+    * from the manifest as a `removedFiles` entry and the feed derives
+    * its delete rows from the file itself. Files without `frows`
+    * metadata (or holding DV'd positions — their matched count is
+    * below the raw frows) stay on the partial path: conservative,
+    * never wrong. A mass DELETE of whole partitions thereby costs
+    * manifest writes, not a corpus-scale preimage copy. */
+  private def fullyMatched(live: Seq[Commit],
+      byFile: Map[String, Long]): Set[String] = {
+    val frows = live.flatMap(_.fileRows)
+      .map { case (k, v) => fileKey(k) -> v }.toMap
+    byFile.collect { case (f, n) if frows.get(f).contains(n) => f }.toSet
+  }
+
+  /** The carry-by-reference `replace` behind keyed DML, predicate DML
+    * and OPTIMIZE WHERE. A live file is REMOVED without a rewrite when
+    * `dead` (the full-file shortcut); it is REWRITTEN when `selected`,
+    * or when it belongs to another schema generation than `sv` or
+    * another partition layout than `layout` (a replace commit carries
+    * one schema and one layout, so carrying such a file would misread
+    * it — on such tables the op doubles as generation/layout
+    * compaction); every other file is CARRIED with its manifest
+    * entries. The rewritten files' rows, cast to `schema` (so a
+    * predicate or key on a newer column resolves even when only older
+    * generations rewrite), go through `transform` into fresh data
+    * files under `layout`; `changes` turns the same rows into the
+    * commit's change-feed rows, staged beside them from a second
+    * driver thread so one write's task tail back-fills the other. With
+    * nothing to rewrite or remove and no `inserts`, nothing is written
+    * and the table is unchanged. Carried deletion vectors ride along;
+    * rewritten files fold theirs (the rewrite read is DV-applied). */
+  private def rewriteFiles(spark: SparkSession, dir: String, op: String,
+      commits: Seq[Commit], schema: StructType, sv: Long,
+      layout: Seq[String], txn: Option[(String, Long)], matched: Long,
+      selected: String => Boolean, dead: String => Boolean = _ => false,
+      inserts: Boolean = false)(
+      transform: DataFrame => DataFrame,
+      changes: Option[DataFrame => DataFrame] = None): DeleteResult = {
+    val live = effective(commits)
+    def rewrite(c: Commit, f: String): Boolean = !dead(f) &&
+      (selected(f) || c.schemaVersion != sv || partColsFromPath(f) != layout)
+    val rewriteCommits = live
+      .map(c => c.copy(files = c.files.filter(rewrite(c, _))))
+      // rename markers ride along (no files): the rewrite subset's
+      // older generations must still read under the renamed schema;
+      // DV sidecars must gate the rewrite scan
+      .filter(c => c.files.nonEmpty || c.rename.nonEmpty ||
+        c.dvFiles.nonEmpty)
+    val removed = live.flatMap(_.files.filter(dead)).distinct
+    val carried = live.flatMap(c =>
+      c.files.filterNot(f => dead(f) || rewrite(c, f)))
+    val idle = rewriteCommits.forall(_.files.isEmpty)
+    if (idle && removed.isEmpty && !inserts) return unchanged(commits)
+    val keep = carried.toSet
+    def carry[V](entries: Commit => Map[String, V]): Map[String, V] =
+      live.flatMap(entries(_).view.filterKeys(keep)).toMap
+    val rows =
+      if (idle) spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      else SchemaMerge.castTo(readCommits(spark, dir, rewriteCommits),
+        schema)
+    def data =
+      if (idle && !inserts) FileSet()
+      else stageData(dir, transform(rows), layout)
+    val (fresh, cfiles) = changes match {
+      case None => (data, Nil)
+      case Some(ch) => graft.core.Par.both(data, stageAux(dir, "_changes",
+        SchemaMerge.castTo(ch(rows), changeSchemaOf(schema))))
+    }
+    val kept = FileSet(carried, carry(_.stats), carry(_.fileRows),
+      carry(_.fileBytes), carry(_.blooms))
+    val c = commit(dir, n => manifest(n, sv, "replace", txn, schema,
+      kept ++ fresh).copy(changeFiles = cfiles,
+      dvFiles = if (carried.isEmpty) Nil
+        else live.flatMap(_.dvFiles).distinct,
+      removedFiles = removed),
+      validate = atTail(op, dir, commits.last.commit))
+    DeleteResult(matched, fresh.files.size, carried.size, c.commit)
+  }
+
+  /** Keyed DML (MERGE / keyed DELETE): the touched files are those
+    * holding a source key. `txn`: recorded in the replace commit as an
+    * idempotency / HIGH-WATER marker ([[replayed]]) — the hook
+    * incremental maintainers (e.g. [[graft.ext.Dedup.syncComponents]])
+    * use to remember which upstream commit a keyed upsert has folded
+    * in. Matching nothing still compacts stale generations and
+    * layouts. */
   private def keyedRewrite(spark: SparkSession, dir: String,
       source: DataFrame, keys: Seq[String], partitionBy: Seq[String],
       evolveSchema: Boolean, insert: Boolean, op: String,
       txn: Option[(String, Long)] = None): DeleteResult = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name,
-      lit, regexp_extract}
+    import org.apache.spark.sql.functions.{col, lit}
     require(keys.nonEmpty, s"$op needs at least one key column")
     val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
-    txn.foreach { case (app, v) =>
-      val committed = commits.flatMap(_.txn)
-        .filter(_._1 == app).map(_._2)
-      if (committed.nonEmpty && committed.max >= v)
-        return DeleteResult(0L, 0L,
-          effective(commits).flatMap(_.files).size, commits.last.commit)
-    }
-    val snap = commits.last.commit
+    if (replayed(commits, txn)) return unchanged(commits)
     val tableSchema = commits.last.schema
     // schema evolution (Delta withSchemaEvolution parity): widen the
     // table schema by the source's columns. A WIDENED replace commit
-    // must carry every row under the new schema, so evolution forces
-    // a FULL rewrite (carry-by-reference would leave files the new
-    // schema misreads) — the documented cost of widening through a
-    // replace-based DML; same-schema merges keep the cheap path.
+    // opens a new generation, so every file rewrites under it
+    // (carry-by-reference would leave files the new schema misreads)
+    // — the documented cost of widening through a replace-based DML;
+    // same-schema merges keep the cheap path.
     val schema =
       if (evolveSchema)
         SchemaMerge.merge(tableSchema, stripFieldMeta(source.schema),
@@ -2256,9 +2310,6 @@ object CdcTable {
     }
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"$op key $k not in the table schema"))
-    val currentSv =
-      if (widened) commits.last.schemaVersion + 1
-      else commits.last.schemaVersion
     val live = effective(commits)
     // pin the source: it is evaluated for touch-detection, the
     // anti-join, AND the final write — a non-deterministic source
@@ -2268,312 +2319,106 @@ object CdcTable {
     val src = source.localCheckpoint()
     val srcKeys = src
       .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*).distinct()
-
-    val touchedRows = readCommits(spark, dir, live)
-      .withColumn("__graft_file", pctDecode(
-        regexp_extract(input_file_name(), RelPathRe, 1)))
-      .join(srcKeys, keys)
-      .groupBy(col("__graft_file")).agg(count(lit(1)).as("n"))
-      .collect()
-    val touched = touchedRows.map(_.getString(0)).toSet
-    val rowsMatched = touchedRows.map(_.getLong(1)).sum
-
-    // FULL-FILE shortcut for pure removals (keyed DELETE, not MERGE —
-    // see rewriteMatching): fully-matched files drop from the
-    // manifest with no rewrite and no preimage change-file write; the
-    // feed derives their delete rows from the files themselves
-    val matchedByFile = touchedRows
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val frowsByFile = live.flatMap(_.fileRows)
-      .map { case (k, v) => fileKey(k) -> v }.toMap
-    val fullyDead: Set[String] =
-      if (insert || widened) Set.empty
-      else matchedByFile.collect {
-        case (f, n) if frowsByFile.get(f).contains(n) => f }.toSet
-
-    val targetLayout = partitionBy.filter(schema.fieldNames.contains)
-    def dropped(f: String): Boolean = fullyDead(fileKey(f))
-    def mustRewrite(c: Commit, f: String): Boolean =
-      !dropped(f) && (widened || touched(fileKey(f)) ||
-        c.schemaVersion != currentSv ||
-        partColsFromPath(f) != targetLayout)
-    val rewriteCommits = live
-      .map(c => c.copy(files = c.files.filter(f => mustRewrite(c, f))))
-      // rename markers ride along (no files): the rewrite subset's
-      // older generations must still read under the renamed schema
-      .filter(c => c.files.nonEmpty || c.rename.nonEmpty ||
-        c.dvFiles.nonEmpty) // DV sidecars must gate the rewrite scan
-    val removed = live.flatMap(c => c.files.filter(dropped)).distinct
-    val carried = live.flatMap(c =>
-      c.files.filterNot(f => dropped(f) || mustRewrite(c, f)))
-    val carriedStats = live.flatMap(_.stats.view
-      .filterKeys(f => !touched(fileKey(f)) && carried.contains(f))).toMap
-    val carriedRows = live.flatMap(_.fileRows.view
-      .filterKeys(f => !touched(fileKey(f)) && carried.contains(f))).toMap
-    val carriedBytes = live.flatMap(_.fileBytes.view
-      .filterKeys(f => !touched(fileKey(f)) && carried.contains(f))).toMap
-
-    // a keyed delete matching nothing (and needing no generation or
-    // layout compaction) must be a no-op commit-wise, like delete()
-    if (!insert && rewriteCommits.forall(_.files.isEmpty) &&
-        removed.isEmpty)
-      return DeleteResult(0L, 0L, carried.size, snap)
-
-    // an insert-only merge (no keys matched, single generation,
-    // matching layout) rewrites nothing — readCommits cannot take an
-    // empty commit list, so survivors degenerate to an empty frame
-    // (cast BEFORE the key join: the rewrite subset's own last commit
-    // may predate a key column added by evolution, and the anti-join
-    // must resolve keys against the current table schema)
-    val rewriteRows =
-      if (rewriteCommits.forall(_.files.isEmpty))
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else SchemaMerge.castTo(readCommits(spark, dir, rewriteCommits),
-        schema)
-    val survivors = rewriteRows.join(srcKeys, keys.toSeq, "left_anti")
+    val byFile = matchedByFile(spark, dir, live)(_.join(srcKeys, keys))
+    val dead =
+      if (insert || widened) Set.empty[String] else fullyMatched(live, byFile)
     // generated columns: computed when the source lacks them,
     // in-write-verified when it provides them (change rows carry the
     // computed values too — srcCast feeds both)
     val srcCast = applyGenerated(SchemaMerge.castTo(src, schema),
       schema, src.schema.fieldNames.toSet, op)
-    // CHECK constraints gate only the NEW rows (survivors passed at
-    // their own write time — induction holds); in-write enforcement,
-    // no extra scan
-    val outRows =
-      if (insert) survivors.unionByName(
-        constraintGuard(srcCast, constraintsOf(commits), op))
-      else survivors
-    // the commit's two staging writes — the survivors/source data
-    // files and the CDF change files — are INDEPENDENT scans of the
-    // touched-file subset staged to different locations; run them
-    // from two driver threads (guide §2.6) so one write's task tail
-    // back-fills the other instead of serializing two jobs per DML.
-    // Both must finish before the manifest commit below.
     val ct = "_change_type"
-    val matchedOld = rewriteRows.join(srcKeys, keys.toSeq, "left_semi")
-    val (fresh, cfiles) = graft.core.Par.both(
-      // a purely full-file keyed delete leaves nothing to rewrite:
-      // skip the (empty) staging write entirely
-      if (!insert && rewriteCommits.forall(_.files.isEmpty))
-        Seq.empty[String]
-      else {
-        val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
-        val writer = outRows.write.mode("overwrite")
-        (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
-         else writer).parquet(batchDir)
-        stagedFiles(batchDir)
-      }, {
+    rewriteFiles(spark, dir, op, commits, schema,
+      commits.last.schemaVersion + (if (widened) 1 else 0),
+      partitionBy.filter(schema.fieldNames.contains), txn,
+      byFile.values.sum, f => byFile.contains(fileKey(f)),
+      f => dead(fileKey(f)), inserts = insert)(
+      { rows =>
+        val survivors = rows.join(srcKeys, keys.toSeq, "left_anti")
+        // CHECK constraints gate only the NEW rows (survivors passed at
+        // their own write time — induction holds)
+        if (insert) survivors.unionByName(
+          constraintGuard(srcCast, constraintsOf(commits), op))
+        else survivors
+      },
+      Some { rows =>
         // CDF change rows (Delta CDF parity): matched target rows are
         // the preimages; for MERGE the source splits into
         // update_postimage (matched keys) and insert (new keys) — all
-        // O(matched + source), never O(table). The matched-key set is
-        // pinned (it gates three branches and is bounded by the
-        // source size).
-        val changeRows =
-          if (!insert)
-            matchedOld.withColumn(ct, lit("delete"))
-          else {
-            // pin the matched preimages ONCE (the mergeDV shape):
-            // they feed the matched-key split of the source AND the
-            // preimage change rows — unpinned, the touched-file
-            // subset was scanned twice more (the matched-key distinct
-            // and the change-file write each re-ran the semi-join).
-            // Volume = the commit's own preimage change rows, which
-            // are written out anyway.
-            val matchedPre = matchedOld.localCheckpoint()
-            val matchedKeys = matchedPre
-              .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*)
-              .distinct()
-            matchedPre.withColumn(ct, lit("update_preimage"))
-              .unionByName(srcCast
-                .join(matchedKeys, keys.toSeq, "left_semi")
-                .withColumn(ct, lit("update_postimage")))
-              .unionByName(srcCast
-                .join(matchedKeys, keys.toSeq, "left_anti")
-                .withColumn(ct, lit("insert")))
-          }
-        stageAux(dir, "_changes",
-          SchemaMerge.castTo(changeRows, changeSchemaOf(schema)))
+        // O(matched + source), never O(table)
+        val matchedOld = rows.join(srcKeys, keys.toSeq, "left_semi")
+        if (!insert) matchedOld.withColumn(ct, lit("delete"))
+        else {
+          // pin the matched preimages ONCE: they feed the matched-key
+          // split of the source AND the preimage change rows (volume =
+          // the commit's own preimage change rows, written out anyway)
+          val matchedPre = matchedOld.localCheckpoint()
+          val matchedKeys = matchedPre
+            .select(keys.map(k => col(s"`$k`")).toIndexedSeq: _*)
+            .distinct()
+          matchedPre.withColumn(ct, lit("update_preimage"))
+            .unionByName(srcCast
+              .join(matchedKeys, keys.toSeq, "left_semi")
+              .withColumn(ct, lit("update_postimage")))
+            .unionByName(srcCast
+              .join(matchedKeys, keys.toSeq, "left_anti")
+              .withColumn(ct, lit("insert")))
+        }
       })
-    val (freshStats, freshRows, freshBytes) =
-      FileStats.collectInfo(dir, fresh)
-
-    val c = commit(dir, n => Commit(n, currentSv, "replace",
-      System.currentTimeMillis(), txn, schema, carried ++ fresh,
-      stats = carriedStats ++ freshStats,
-      fileRows = carriedRows ++ freshRows,
-      fileBytes = carriedBytes ++ freshBytes,
-      changeFiles = cfiles,
-      dvFiles = if (carried.isEmpty) Nil
-        else live.flatMap(_.dvFiles).distinct,
-      removedFiles = removed),
-      validate = cur => if (cur.lastOption.map(_.commit) != Some(snap))
-        throw new java.util.ConcurrentModificationException(
-          s"$op at $dir built from commit $snap but the log is now " +
-            s"at ${cur.lastOption.map(_.commit).getOrElse(0L)} — a " +
-            s"write landed mid-$op; rerun over the new snapshot " +
-            "(nothing was lost)"))
-    DeleteResult(rowsMatched, fresh.size, carried.size, c.commit)
   }
 
-  /** Shared DML engine: find the exact touched-file set with one
-    * pushed-down scan, rewrite ONLY those files through
-    * `transform(rows, pred)`, republish the rest by reference in one
-    * optimistic-concurrency replace commit (stats carried).
-    * `changes(rows, pred)` produces the commit's CDF rows (the
-    * commit's schema + `_change_type`), persisted as change files —
-    * O(matched rows), never O(table). */
+  /** Predicate DML (DELETE / UPDATE): the touched files are those
+    * holding a row `predicate` matches; `transform(rows, pred)`
+    * rewrites them and `changes(rows, pred)` produces the commit's CDF
+    * rows (the commit's schema + `_change_type`) — O(matched rows),
+    * never O(table). Matching nothing commits nothing, even on a table
+    * with older generations. */
   private def rewriteMatching(spark: SparkSession, dir: String,
       predicate: String, op: String, partitionBy: Seq[String],
       changes: (DataFrame, org.apache.spark.sql.Column) => DataFrame,
       fullFileShortcut: Boolean = false)(
       transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame)
       : DeleteResult = {
-    import org.apache.spark.sql.functions.{col, count, expr,
-      input_file_name, lit, regexp_extract}
     val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
-    val snap = commits.last.commit
     val schema = commits.last.schema
-    val currentSv = commits.last.schemaVersion
     val live = effective(commits)
-    val pred = expr(predicate)
-
-    val touchedRows = readCommits(spark, dir, live)
-      .withColumn("__graft_file", pctDecode(
-        regexp_extract(input_file_name(), RelPathRe, 1)))
-      .filter(pred)
-      .groupBy(col("__graft_file")).agg(count(lit(1)).as("n"))
-      .collect()
-    val touched = touchedRows.map(_.getString(0)).toSet
-    val rowsMatched = touchedRows.map(_.getLong(1)).sum
-    if (touched.isEmpty)
-      return DeleteResult(0L, 0L, live.flatMap(_.files).size, snap)
-
-    // FULL-FILE shortcut (pure-removal ops only — Delta CDF's
-    // remove-file optimization): a touched file whose matched-row
-    // count equals its manifest row count has NO survivors — it
-    // neither rewrites nor carries nor writes preimage change rows;
-    // it drops from the manifest as a `removedFiles` entry and the
-    // feed derives its delete rows from the file itself. Files
-    // without `frows` metadata (or holding DV'd positions — their
-    // matched count is below the raw frows) stay on the partial
-    // path: conservative, never wrong. A mass DELETE of whole
-    // partitions thereby costs manifest writes, not a corpus-scale
-    // preimage copy.
-    val matchedByFile = touchedRows
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val frowsByFile = live.flatMap(_.fileRows)
-      .map { case (k, v) => fileKey(k) -> v }.toMap
-    val fullyDead: Set[String] =
-      if (!fullFileShortcut) Set.empty
-      else matchedByFile.collect {
-        case (f, n) if frowsByFile.get(f).contains(n) => f }.toSet
-
-    val targetLayout = partitionBy.filter(schema.fieldNames.contains)
-    def dropped(f: String): Boolean = fullyDead(fileKey(f))
-    def mustRewrite(c: Commit, f: String): Boolean =
-      !dropped(f) && (touched(fileKey(f)) ||
-        c.schemaVersion != currentSv ||
-        partColsFromPath(f) != targetLayout)
-    val rewriteCommits = live
-      .map(c => c.copy(files = c.files.filter(f => mustRewrite(c, f))))
-      // rename markers ride along (no files): the rewrite subset's
-      // older generations must still read under the renamed schema
-      .filter(c => c.files.nonEmpty || c.rename.nonEmpty ||
-        c.dvFiles.nonEmpty) // DV sidecars must gate the rewrite scan
-    val removed = live.flatMap(c => c.files.filter(dropped)).distinct
-    val carried = live.flatMap(c =>
-      c.files.filterNot(f => dropped(f) || mustRewrite(c, f)))
-    val carriedStats = live.flatMap(_.stats.view
-      .filterKeys(f => !touched(fileKey(f)) && carried.contains(f))).toMap
-    val carriedRows = live.flatMap(_.fileRows.view
-      .filterKeys(f => !touched(fileKey(f)) && carried.contains(f))).toMap
-    val carriedBytes = live.flatMap(_.fileBytes.view
-      .filterKeys(f => !touched(fileKey(f)) && carried.contains(f))).toMap
-
-    // cast the rewrite set to the CURRENT table schema before the
-    // predicate/transform runs: readCommits targets the subset's own
-    // last commit, and when only older-generation files need rewriting
-    // (e.g. DELETE WHERE newcol IS NULL matching only pre-evolution
-    // files) a predicate referencing a newer-generation column would
-    // otherwise fail to resolve on a legitimate operation. A purely
-    // full-file delete leaves nothing to rewrite at all.
-    val rewriteRows =
-      if (rewriteCommits.forall(_.files.isEmpty))
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else SchemaMerge.castTo(
-        readCommits(spark, dir, rewriteCommits), schema)
-    // data-file rewrite and CDF change-file write: independent scans
-    // of the touched subset, staged to different locations — run from
-    // two driver threads (guide §2.6, same move as keyedRewrite) so
-    // the two per-DML jobs overlap instead of serializing
-    val (fresh, cfiles) = graft.core.Par.both(
-      if (rewriteCommits.forall(_.files.isEmpty)) Seq.empty[String]
-      else {
-        // the guard re-checks untouched survivor rows of touched
-        // files too (they pass by induction) — in-write, O(touched).
-        // Generated columns verify here too: an UPDATE that changes a
-        // source column without recomputing its derivation fails
-        // loudly instead of committing a stale generated value.
-        val outRows = constraintGuard(transform(rewriteRows, pred),
-          constraintsOf(commits) ++ generatedVerify(schema), op)
-        val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
-        val writer = SchemaMerge.castTo(outRows, schema)
-          .write.mode("overwrite")
-        (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
-         else writer).parquet(batchDir)
-        stagedFiles(batchDir)
-      },
-      // CDF change rows (one extra matched-rows-only scan of the
-      // PARTIALLY-touched files — never the carried bulk, and never
-      // the fully-dead files the shortcut routed to removedFiles)
-      stageAux(dir, "_changes", SchemaMerge.castTo(
-        changes(rewriteRows, pred), changeSchemaOf(schema))))
-    val (freshStats, freshRows, freshBytes) =
-      FileStats.collectInfo(dir, fresh)
-
-    val c = commit(dir, n => Commit(n, currentSv, "replace",
-      System.currentTimeMillis(), None, schema, carried ++ fresh,
-      stats = carriedStats ++ freshStats,
-      fileRows = carriedRows ++ freshRows,
-      fileBytes = carriedBytes ++ freshBytes,
-      changeFiles = cfiles,
-      dvFiles = if (carried.isEmpty) Nil
-        else live.flatMap(_.dvFiles).distinct,
-      removedFiles = removed),
-      validate = cur => if (cur.lastOption.map(_.commit) != Some(snap))
-        throw new java.util.ConcurrentModificationException(
-          s"$op at $dir built from commit $snap but the log is now " +
-            s"at ${cur.lastOption.map(_.commit).getOrElse(0L)} — a " +
-            s"write landed mid-$op; rerun over the new snapshot " +
-            "(nothing was lost)"))
-    DeleteResult(rowsMatched, fresh.size, carried.size, c.commit)
+    val pred = org.apache.spark.sql.functions.expr(predicate)
+    val byFile = matchedByFile(spark, dir, live)(_.filter(pred))
+    if (byFile.isEmpty) return unchanged(commits)
+    val dead =
+      if (fullFileShortcut) fullyMatched(live, byFile) else Set.empty[String]
+    rewriteFiles(spark, dir, op, commits, schema,
+      commits.last.schemaVersion,
+      partitionBy.filter(schema.fieldNames.contains), None,
+      byFile.values.sum, f => byFile.contains(fileKey(f)),
+      f => dead(fileKey(f)))(
+      // the guard re-checks untouched survivor rows of touched files
+      // too (they pass by induction) — in-write, O(touched). Generated
+      // columns verify here too: an UPDATE that changes a source
+      // column without recomputing its derivation fails loudly
+      // instead of committing a stale generated value.
+      rows => SchemaMerge.castTo(constraintGuard(transform(rows, pred),
+        constraintsOf(commits) ++ generatedVerify(schema), op), schema),
+      Some(changes(_, pred)))
   }
 
   /** PARTITION-SCOPED OPTIMIZE (Delta `OPTIMIZE … WHERE` parity) —
     * the 100 TB form of compaction: rewrite ONLY the files whose
-    * partition-path values satisfy `predicate`, republish everything
-    * else by reference in one optimistic replace commit. At scale a
-    * table is optimized partition-by-partition as partitions close
-    * (yesterday's ingest date, one language…); a full-table OPTIMIZE
-    * is a corpus-scale rewrite nobody runs.
+    * partition-path values satisfy `predicate` ([[rewriteFiles]]
+    * carries everything else). At scale a table is optimized
+    * partition-by-partition as partitions close (yesterday's ingest
+    * date, one language…); a full-table OPTIMIZE is a corpus-scale
+    * rewrite nobody runs.
     *
     * The predicate may reference PARTITION columns only — selection
     * is decided from the manifest alone (zero data IO; the file list
     * with path-derived partition values is evaluated as a local
     * frame, so types and percent-decoding match the read path
-    * exactly). Files of superseded schema generations or stale
-    * layouts join the rewrite (the single-generation replace-commit
-    * invariant, same rule as keyed/predicate DML) — with a stable
-    * schema that set is empty and the rewrite touches exactly the
-    * selected partitions. Rewritten files fold their deletion-vector
-    * tombstones physically (the rewrite read is DV-applied); carried
-    * files keep their sidecars. A physical rewrite changes no logical
-    * rows, so the change feed stays silent (compaction semantics).
-    * Returns (filesBefore, filesAfter, commit id). */
+    * exactly). With a stable schema the rewrite touches exactly the
+    * selected partitions. A physical rewrite changes no logical rows,
+    * so the change feed stays silent (compaction semantics). Returns
+    * (filesBefore, filesAfter, commit id). */
   def optimizeWhere(spark: SparkSession, dir: String,
       predicate: Option[String], zorderCols: Seq[String] = Nil,
       nFiles: Option[Int] = None,
@@ -2584,9 +2429,7 @@ object CdcTable {
         "full OPTIMIZE otherwise")
     val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
-    val snap = commits.last.commit
     val schema = commits.last.schema
-    val currentSv = commits.last.schemaVersion
     val live = effective(commits)
     val files = live.flatMap(_.files)
     val before = files.size
@@ -2651,88 +2494,39 @@ object CdcTable {
         val bytes = live.flatMap(_.fileBytes).toMap
         predMatched.filter(f => bytes.get(f).forall(_ < t))
     }
-    if (selected.isEmpty) return (before, before, snap)
-    def mustRewrite(c: Commit, f: String): Boolean =
-      selected(f) || c.schemaVersion != currentSv ||
-        partColsFromPath(f) != targetLayout
-    val rewriteCommits = live
-      .map(c => c.copy(files = c.files.filter(f => mustRewrite(c, f))))
-      .filter(c => c.files.nonEmpty || c.rename.nonEmpty ||
-        c.dvFiles.nonEmpty)
-    val carried = live.flatMap(c =>
-      c.files.filterNot(f => mustRewrite(c, f)))
-    val carriedSet = carried.toSet
-    val carriedStats = live.flatMap(_.stats.view
-      .filterKeys(carriedSet)).toMap
-    val carriedRows = live.flatMap(_.fileRows.view
-      .filterKeys(carriedSet)).toMap
-    val carriedBytes = live.flatMap(_.fileBytes.view
-      .filterKeys(carriedSet)).toMap
-    val carriedBlooms = live.flatMap(_.blooms.view
-      .filterKeys(carriedSet)).toMap
-    val rewriteRows = SchemaMerge.castTo(
-      readCommits(spark, dir, rewriteCommits), schema)
+    if (selected.isEmpty) return (before, before, commits.last.commit)
     val target = nFiles.getOrElse(
       math.max(1, spark.sparkContext.defaultParallelism / 4))
-    val out =
-      if (zorderCols.nonEmpty)
-        zorderFrame(rewriteRows, zorderCols, target)
-      else rewriteRows.coalesce(target)
-    val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
-    val writer = out.write.mode("overwrite")
-    (if (targetLayout.nonEmpty) writer.partitionBy(targetLayout: _*)
-     else writer).parquet(batchDir)
-    val fresh = stagedFiles(batchDir)
-    val (freshStats, freshRows, freshBytes) =
-      FileStats.collectInfo(dir, fresh)
-    val c = commit(dir, n => Commit(n, currentSv, "replace",
-      System.currentTimeMillis(), None, schema, carried ++ fresh,
-      stats = carriedStats ++ freshStats,
-      fileRows = carriedRows ++ freshRows,
-      fileBytes = carriedBytes ++ freshBytes,
-      blooms = carriedBlooms,
-      dvFiles = if (carried.isEmpty) Nil
-        else live.flatMap(_.dvFiles).distinct),
-      validate = cur => if (cur.lastOption.map(_.commit) != Some(snap))
-        throw new java.util.ConcurrentModificationException(
-          s"OPTIMIZE WHERE at $dir built from commit $snap but the " +
-            s"log is now at " +
-            s"${cur.lastOption.map(_.commit).getOrElse(0L)} — a " +
-            "write landed mid-optimize; rerun (nothing was lost)"))
-    ((before, c.files.size, c.commit))
+    val r = rewriteFiles(spark, dir, "OPTIMIZE WHERE", commits, schema,
+      commits.last.schemaVersion, targetLayout, None, 0L, selected)(rows =>
+      if (zorderCols.nonEmpty) zorderFrame(rows, zorderCols, target)
+      else rows.coalesce(target))
+    (before, (r.filesRewritten + r.filesCarried).toInt, r.commit)
   }
 
-  def replaceWith(spark: SparkSession, dir: String, df: DataFrame,
+  /** Atomically rewrite the table's whole content as one `replace`
+    * manifest under the current schema (superseded files become
+    * vacuumable orphans). The rewrite primitive behind upsert
+    * compaction and DLQ replay resolution. Keeps the table's partition
+    * layout: a generation must be layout-uniform or the unioned
+    * per-generation scan would mix partitioned and flat files.
+    * `expectedLastCommit` is the snapshot `df` was computed from
+    * (default: the current tail); `txn` makes the rewrite idempotent,
+    * like [[append]]. */
+  def replaceWith(dir: String, df: DataFrame,
       partitionBy: Seq[String] = Seq("_ingestion_date"),
       expectedLastCommit: Option[Long] = None,
       txn: Option[(String, Long)] = None): Long = {
     val commits = log(dir)
     require(commits.nonEmpty, s"no CdcTable at $dir")
-    txn.foreach { case (app, v) =>
-      val committed = commits.flatMap(_.txn)
-        .filter(_._1 == app).map(_._2)
-      if (committed.nonEmpty && committed.max >= v)
-        return commits.last.schemaVersion // replayed rewrite — skip
-    }
-    val base = expectedLastCommit.getOrElse(commits.last.commit)
+    if (replayed(commits, txn)) return commits.last.schemaVersion
     val schema = commits.last.schema
-    val batchDir = s"$dir/data/batch-${UUID.randomUUID()}"
-    val writer = SchemaMerge.castTo(df, schema).write.mode("overwrite")
-    val partCols = partitionBy.filter(schema.fieldNames.contains)
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(batchDir)
     val nv = commits.last.schemaVersion + 1
-    val files = stagedFiles(batchDir)
-    val (stats, frows, fbytes) = FileStats.collectInfo(dir, files)
-    commit(dir, n => Commit(n, nv, "replace",
-      System.currentTimeMillis(), txn, schema, files,
-      stats = stats, fileRows = frows, fileBytes = fbytes),
-      validate = cur => if (cur.lastOption.map(_.commit) != Some(base))
-        throw new java.util.ConcurrentModificationException(
-          s"replace at $dir built from commit $base but the log is " +
-            s"now at ${cur.lastOption.map(_.commit).getOrElse(0L)} — " +
-            "a write landed mid-rewrite; rerun the compaction over " +
-            "the new snapshot (nothing was lost)"))
+    val staged = stageData(dir, SchemaMerge.castTo(df, schema),
+      partitionBy.filter(schema.fieldNames.contains))
+    commit(dir, n => manifest(n, nv, "replace", txn, schema, staged),
+      validate = atTail("replace", dir,
+        expectedLastCommit.getOrElse(commits.last.commit)))
     nv
   }
 
@@ -2763,7 +2557,7 @@ object CdcTable {
     *
     * Returns the new current schema version. Restoring to the current
     * snapshot is a no-op. */
-  def restore(spark: SparkSession, dir: String,
+  def restore(dir: String,
       commitAsOf: Option[Long] = None,
       timestampAsOf: Option[Long] = None): Long = {
     val commits = log(dir)
@@ -2829,7 +2623,6 @@ object CdcTable {
     gens.zipWithIndex.foreach { case (g, i) =>
       val action = if (i == 0) "replace" else "append"
       newSv = svMap(g.last.schemaVersion)
-      val tailBefore = expectTail
       val committed = commit(dir, n => Commit(n, newSv,
         action, System.currentTimeMillis(), None, g.last.schema,
         g.flatMap(_.files),
@@ -2850,13 +2643,7 @@ object CdcTable {
         // and stay on their original commits (a restore emits no
         // change rows, like compaction — consumers diff snapshots)
         dvFiles = g.flatMap(_.dvFiles).distinct),
-        validate = cur =>
-          if (cur.lastOption.map(_.commit) != Some(tailBefore))
-            throw new java.util.ConcurrentModificationException(
-              s"restore at $dir: a write landed mid-restore (expected " +
-                s"log tail $tailBefore, found " +
-                s"${cur.lastOption.map(_.commit).getOrElse(0L)}); " +
-                "rerun the restore"))
+        validate = atTail("restore", dir, expectTail))
       expectTail = committed.commit
     }
     newSv
@@ -2879,8 +2666,7 @@ object CdcTable {
     *
     * Returns the number of borrowed files. Fails if `dstDir` already
     * holds a table. */
-  def cloneShallow(spark: SparkSession, srcDir: String,
-      dstDir: String): Long = {
+  def cloneShallow(srcDir: String, dstDir: String): Long = {
     val src = log(srcDir)
     require(src.nonEmpty, s"no CdcTable at $srcDir")
     require(log(dstDir).isEmpty,
@@ -2900,7 +2686,6 @@ object CdcTable {
       borrowed += abs.size
       def rekey[V](m: Map[String, V]): Map[String, V] =
         m.map { case (k, v) => resolve(srcDir, k) -> v }
-      val tailBefore = expectTail
       val committed = commit(dstDir, n => Commit(n, c.schemaVersion,
         c.action, System.currentTimeMillis(), None, c.schema, abs,
         rename = c.rename,
@@ -2913,11 +2698,7 @@ object CdcTable {
         dvFiles = c.dvFiles.map(f => resolve(srcDir, f)),
         constraintOps = if (ci == 0) srcCons else Nil,
         propOps = if (ci == 0) srcProps else Nil),
-        validate = cur =>
-          if (cur.lastOption.map(_.commit).getOrElse(0L) != tailBefore)
-            throw new java.util.ConcurrentModificationException(
-              s"clone at $dstDir: a concurrent write landed in the " +
-                "target mid-clone"))
+        validate = atTail("clone", dstDir, expectTail))
       expectTail = committed.commit
     }
     borrowed

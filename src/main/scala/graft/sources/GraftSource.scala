@@ -106,7 +106,7 @@ class GraftSource extends RelationProvider
           s"graft table already exists at $dir (SaveMode.ErrorIfExists)")
       case SaveMode.Ignore if exists => ()
       case SaveMode.Overwrite if exists =>
-        CdcTable.replaceWith(data.sparkSession, dir, data, partitionBy)
+        CdcTable.replaceWith(dir, data, partitionBy)
         ()
       case _ =>
         CdcTable.append(data, dir, mergeModeOf(parameters),
@@ -321,7 +321,7 @@ final case class GraftRelation(sqlContext: SQLContext, dir: String,
     * manifest commits as the programmatic API. */
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
     if (overwrite)
-      CdcTable.replaceWith(data.sparkSession, dir, data)
+      CdcTable.replaceWith(dir, data)
     else CdcTable.append(data, dir)
     ()
   }

@@ -511,7 +511,7 @@ case class OptimizeGraftTable(dir: String, zorderCols: Seq[String],
       if (zorderCols.nonEmpty)
         CdcTable.zorderFrame(df0, zorderCols, target)
       else df0.coalesce(target)
-    CdcTable.replaceWith(spark, dir, df, expectedLastCommit = Some(snap))
+    CdcTable.replaceWith(dir, df, expectedLastCommit = Some(snap))
     val last = CdcTable.log(dir).last
     Seq(Row(before, last.files.size, last.commit))
   }
@@ -939,7 +939,7 @@ case class RestoreGraftTable(dir: String, commitAsOf: Option[Long],
     attr("schema_version", LongType), attr("current_commit", LongType))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val sv = CdcTable.restore(spark, dir, commitAsOf, timestampAsOf)
+    val sv = CdcTable.restore(dir, commitAsOf, timestampAsOf)
     // current_commit is the new log TAIL's commit id — NOT
     // currentVersion (which is the tail's schemaVersion and reads a
     // rolled-back number after a restore)
@@ -959,7 +959,7 @@ case class RenameGraftColumn(dir: String, from: String, to: String)
     attr("schema_version", LongType))
 
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(CdcTable.renameColumn(spark, dir, from, to)))
+    Seq(Row(CdcTable.renameColumn(dir, from, to)))
 }
 
 /** GRAFT ADD COLUMN '<path>' <name> <type> — metadata-only schema
@@ -975,7 +975,7 @@ case class AddGraftColumn(dir: String, name: String, typeSql: String)
   override def run(spark: SparkSession): Seq[Row] = {
     val dt = org.apache.spark.sql.types.DataType
       .fromDDL(typeSql) // "bigint", "array<float>", "decimal(10,2)"…
-    Seq(Row(CdcTable.addColumn(spark, dir, name, dt)))
+    Seq(Row(CdcTable.addColumn(dir, name, dt)))
   }
 }
 
@@ -1023,7 +1023,7 @@ case class AlterGraftColumnType(dir: String, name: String,
 
   override def run(spark: SparkSession): Seq[Row] = {
     val dt = org.apache.spark.sql.types.DataType.fromDDL(typeSql)
-    Seq(Row(CdcTable.widenColumn(spark, dir, name, dt)))
+    Seq(Row(CdcTable.widenColumn(dir, name, dt)))
   }
 }
 
@@ -1135,7 +1135,7 @@ case class DropGraftColumn(dir: String, name: String)
     attr("schema_version", LongType))
 
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(CdcTable.dropColumn(spark, dir, name)))
+    Seq(Row(CdcTable.dropColumn(dir, name)))
 }
 
 /** GRAFT CLONE '<src>' TO '<dst>' — shallow clone (see
@@ -1151,7 +1151,7 @@ case class CloneGraftTable(srcDir: String, dstDir: String)
     attr("borrowed_files", LongType))
 
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(CdcTable.cloneShallow(spark, srcDir, dstDir)))
+    Seq(Row(CdcTable.cloneShallow(srcDir, dstDir)))
 }
 
 case class HistoryGraftTable(dir: String) extends LeafRunnableCommand {

@@ -343,7 +343,7 @@ object CdcIngest {
             .otherwise(coalesce(col("__new_reason"), col("reason"))))
         .drop("__new_reason")
       val stillDead = remaining.count()
-      CdcTable.replaceWith(spark, dlqDir, remaining,
+      CdcTable.replaceWith(dlqDir, remaining,
         expectedLastCommit = Some(baseCommit))
       (patched.count() - stillDead, stillDead)
     } finally { persisted.unpersist(); () }

@@ -1056,7 +1056,7 @@ class DedupSpec extends SparkSpec {
     assert(comps() == full())
     // a REPLACE in the unseen range (compaction / batch rewrite)
     // cannot fold incrementally: one full rebuild, then fresh again
-    CdcTable.replaceWith(spark, pairsDir,
+    CdcTable.replaceWith(pairsDir,
       CdcTable.read(spark, pairsDir).filter($"a_id" =!= 100L),
       partitionBy = Nil)
     assert(Dedup.syncComponents(spark, dir) == 1)

@@ -239,8 +239,8 @@ class KmvHashesSpec extends SparkSpec {
     val common = (1 to 300).map(i => s"shared$i")
     val rows = (common.map(v => ("s1", v)) ++
       common.take(150).map(v => ("s2", v)) ++
-      (1 to 400).map(i => ("s1", s"a${rnd.nextInt(500)}")) ++
-      (1 to 400).map(i => ("s2", s"b${rnd.nextInt(500)}")))
+      (1 to 400).map(_ => ("s1", s"a${rnd.nextInt(500)}")) ++
+      (1 to 400).map(_ => ("s2", s"b${rnd.nextInt(500)}")))
       .zipWithIndex.map { case ((g, v), i) => (i.toLong, g, v) }
     val df = rows.toDF("id", "src", "v").repartition(8)
     val k = 64

@@ -79,6 +79,38 @@ class BloomSkipSpec extends SparkSpec {
       s"absent value should prune ~all files: ${gone.inputFiles.length}")
   }
 
+  test("DML keeps the blooms of the files it carries") {
+    // each op touches batch 1's file only (k = 5 = 1 + 4·1) and carries
+    // the other three; k = 6 lives only in batch 2 (6 = 2 + 4·1)
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "delete" -> (d => CdcTable.delete(spark, d, "k = 5")),
+      "deleteKeys" -> (d =>
+        CdcTable.deleteKeys(spark, d, Seq(5L).toDF("k"), Seq("k"))),
+      "update" -> (d =>
+        CdcTable.update(spark, d, "k = 5", Seq("s" -> "'z'"))),
+      "merge" -> (d => CdcTable.merge(spark, d,
+        Seq((5L, "z")).toDF("k", "s"), keys = Seq("k"))))
+    ops.foreach { case (name, op) =>
+      val dir = tmpDir(s"bloomdml$name")
+      buildTable(dir)
+      val before = CdcTable.log(dir).flatMap(_.files)
+      op(dir)
+      val last = CdcTable.log(dir).last
+      assert(last.action == "replace" &&
+        before.count(last.files.contains) == 3,
+        s"$name: batch 1's file rewritten, three carried: ${last.files}")
+      val pruned = CdcTable.readFiltered(spark, dir, (_, _) => true,
+        bloomPredicate = bl => FileStats.bloomAllows(bl, EqualTo("k", 6L)))
+      // batch 2's carried file and the rewritten (bloomless) files stay;
+      // the carried batch-0 and batch-3 files are skipped
+      assert(pruned.inputFiles.length == last.files.length - 2,
+        s"$name: carried files must still bloom-prune: " +
+          s"${pruned.inputFiles.length} of ${last.files.length} read")
+      assert(pruned.filter(col("k") === 6L).select("s").as[String]
+        .collect().toSeq == Seq("v2-1"), name)
+    }
+  }
+
   test("graft DataSource read applies bloom pruning to pushed filters") {
     val dir = tmpDir("bloomsrc")
     buildTable(dir)

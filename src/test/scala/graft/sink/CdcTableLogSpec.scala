@@ -55,7 +55,7 @@ class CdcTableLogSpec extends SparkSpec {
     assert(d.rowsEstimate == 3L, s"manifest row estimate: $d")
     assert(d.lastTxn.contains(("app", 3L)))
     // replace supersedes: live files shrink to the compacted set
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir).coalesce(1))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir).coalesce(1))
     val d2 = CdcTable.detail(dir)
     assert(d2.commits == 4 && d2.liveFiles == 1)
   }
@@ -68,7 +68,7 @@ class CdcTableLogSpec extends SparkSpec {
       (1L, "a", "2026-08-10"), (2L, "b", "2026-08-10"),
       (3L, "c", "2026-08-11"), (4L, "d", "2026-08-11"))
       .toDF("x", "_id", "_ingestion_date"), dir)
-    val pruned = CdcTable.readPruned(spark, dir,
+    val pruned = CdcTable.readFiltered(spark, dir,
       (k, v) => k != "_ingestion_date" || v == "2026-08-11")
     assert(pruned.count() == 2)
     assert(pruned.select("_ingestion_date").distinct()
@@ -140,7 +140,7 @@ class CdcTableLogSpec extends SparkSpec {
     (1 to 3).foreach { i =>
       CdcTable.append(Seq((i.toLong, s"h$i")).toDF("x", "_id"), dir)
     }
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir))
     // pre-replace travel works while the superseded files are retained
     assert(CdcTable.readAsOf(spark, dir, commitAsOf = Some(2L))
       .count() == 2)
@@ -164,13 +164,13 @@ class CdcTableLogSpec extends SparkSpec {
     // an append lands between the compaction's snapshot and its commit
     CdcTable.append(Seq((99L, "late")).toDF("x", "_id"), dir)
     intercept[java.util.ConcurrentModificationException] {
-      CdcTable.replaceWith(spark, dir, compacted,
+      CdcTable.replaceWith(dir, compacted,
         expectedLastCommit = Some(base))
     }
     // nothing lost: the late append is still visible
     assert(CdcTable.read(spark, dir).count() == 4)
     // retrying over the new snapshot succeeds
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir).coalesce(1))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir).coalesce(1))
     assert(CdcTable.read(spark, dir).count() == 4)
   }
 
@@ -193,7 +193,7 @@ class CdcTableLogSpec extends SparkSpec {
     assert(CdcTable.readChanges(spark, dir, 1L, upToCommit = Some(2L))
       .select("_id").as[String].collect().toSeq == Seq("c2"))
     // a replace (compaction) is a physical rewrite, not a change
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir))
     val afterReplace = CdcTable.readChanges(spark, dir, afterCommit = 3L)
     assert(afterReplace.count() == 0)
     assert(afterReplace.columns.contains("_commit_ts"))
@@ -241,7 +241,7 @@ class CdcTableLogSpec extends SparkSpec {
       Seq("b").toDF("_id"), keyCols = Seq("_id"))
     assert(CdcTable.rowCountEstimate(dir) == 3L)
     // compaction: one fresh file set, counted from its own footers
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir))
     assert(CdcTable.rowCountEstimate(dir) == 3L)
     // appends after the replace accumulate again
     CdcTable.append(Seq((9L, "z")).toDF("x", "_id"), dir)
@@ -258,7 +258,7 @@ class CdcTableLogSpec extends SparkSpec {
     }
     // replace at commit 10 = checkpoint boundary: commits 1-9 are
     // condensed to fileless stubs in the checkpoint the log prefers
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir))
     assert(CdcTable.log(dir).init.forall(_.stub))
     // pre-replace travel must read the superseded data (raw commit
     // files keep the file lists until vacuum), not silently 0 rows
@@ -281,7 +281,7 @@ class CdcTableLogSpec extends SparkSpec {
       CdcTable.append(Seq((i.toLong, s"r$i")).toDF("x", "_id"), dir)
     }
     // replace at commit 10 triggers the checkpoint too
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir))
     val commits = CdcTable.log(dir)
     assert(commits.size == 10 && commits.last.action == "replace")
     // checkpoint written at the replace: superseded commits are stubs

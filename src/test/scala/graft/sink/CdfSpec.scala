@@ -60,7 +60,7 @@ class CdfSpec extends SparkSpec {
   test("compaction stays CDF-silent; DML after it emits") {
     val dir = tmpDir("cdf_compact")
     CdcTable.append(Seq((1L, "a"), (2L, "b")).toDF("x", "_id"), dir)
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.read(spark, dir).coalesce(1))
     assert(feed(dir, after = 1L).isEmpty,
       "physical rewrites change no logical rows")
@@ -73,7 +73,7 @@ class CdfSpec extends SparkSpec {
     val dir = tmpDir("cdf_ren")
     CdcTable.append(Seq((1L, "a"), (2L, "b")).toDF("x", "_id"), dir)
     val r = CdcTable.delete(spark, dir, "x = 2") // change file: (x, _id)
-    CdcTable.renameColumn(spark, dir, "x", "qty")
+    CdcTable.renameColumn(dir, "x", "qty")
     val got = CdcTable.readChanges(spark, dir, afterCommit = 0L)
     assert(got.columns.contains("qty") && !got.columns.contains("x"))
     assert(got.filter($"_change_type" === "delete")
@@ -240,6 +240,26 @@ class CdfSpec extends SparkSpec {
       Set(("live", 4L)))
   }
 
+  test("full-file delete of a carried file emits each row once") {
+    val dir = tmpDir("cdf_rf_carried")
+    CdcTable.append(Seq((1L, "a"), (2L, "b")).toDF("x", "_id")
+      .coalesce(1), dir)
+    CdcTable.append(Seq((10L, "c"), (11L, "d")).toDF("x", "_id")
+      .coalesce(1), dir)
+    // the partial delete rewrites the first file and carries the
+    // second, so the second is listed by its append AND the replace
+    CdcTable.delete(spark, dir, "x = 1")
+    val before = CdcTable.log(dir).last.commit
+    val r = CdcTable.delete(spark, dir, "x >= 10")
+    assert(r.rowsDeleted == 2)
+    assert(CdcTable.log(dir).last.removedFiles.size == 1,
+      "the carried file drops whole")
+    val got = CdcTable.readChanges(spark, dir, afterCommit = before)
+      .select($"_id", $"_change_type").as[(String, String)]
+      .collect().toSeq.sorted
+    assert(got == Seq(("c", "delete"), ("d", "delete")))
+  }
+
   test("keyed full-file shortcut; DV'd files stay on the partial path") {
     val dir = tmpDir("cdf_ffk")
     CdcTable.append((1L to 6L).map(i => (i, s"k$i"))
@@ -275,7 +295,7 @@ class CdfSpec extends SparkSpec {
     // force commits past a checkpoint boundary with later replaces so
     // the delete commit becomes a stub in the checkpoint
     (1 to 10).foreach { _ =>
-      CdcTable.replaceWith(spark, dir,
+      CdcTable.replaceWith(dir,
         CdcTable.read(spark, dir).coalesce(1))
     }
     assert(CdcTable.log(dir).exists(c => c.stub && c.commit == r.commit),

@@ -45,7 +45,7 @@ class ConcurrencySpec extends SparkSpec {
       .select("_id").as[String].collect().sorted.toSeq
     // later writes — appends AND a full replace — must not leak in
     CdcTable.append(Seq((3L, "c")).toDF("x", "_id"), dir)
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir).coalesce(1))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir).coalesce(1))
     val after = spark.read.format("graft")
       .option("commitAsOf", pin.toString).load(dir)
       .select("_id").as[String].collect().sorted.toSeq

@@ -134,15 +134,15 @@ class ConstraintSpec extends SparkSpec {
     CdcTable.append(Seq((1L, "a")).toDF("qty", "_id"), dir)
     CdcTable.addConstraint(spark, dir, "qty_pos", "qty >= 0")
     val r = intercept[Exception](
-      CdcTable.renameColumn(spark, dir, "qty", "amount"))
+      CdcTable.renameColumn(dir, "qty", "amount"))
     assert(chain(r).contains("qty_pos"))
     val d = intercept[Exception](
-      CdcTable.dropColumn(spark, dir, "qty"))
+      CdcTable.dropColumn(dir, "qty"))
     assert(chain(d).contains("qty_pos"))
     // an UNreferenced column renames freely under the constraint
-    CdcTable.renameColumn(spark, dir, "_id", "doc")
+    CdcTable.renameColumn(dir, "_id", "doc")
     CdcTable.dropConstraint(dir, "qty_pos")
-    assert(CdcTable.renameColumn(spark, dir, "qty", "amount") > 0)
+    assert(CdcTable.renameColumn(dir, "qty", "amount") > 0)
   }
 
   test("shallow clone inherits the source's constraints") {
@@ -169,7 +169,7 @@ class ConstraintSpec extends SparkSpec {
     CdcTable.addConstraint(spark, dir, "c2", "qty < 100")
     CdcTable.dropConstraint(dir, "c1")
     assert(CdcTable.constraints(dir).map(_.name) == Seq("c2"))
-    CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+    CdcTable.restore(dir, commitAsOf = Some(snap))
     assert(CdcTable.constraints(dir).map(_.name) == Seq("c1"))
     // c1 enforces again; c2 is gone
     val bad = intercept[Exception](CdcTable.append(

@@ -8,7 +8,8 @@ import org.scalacheck.rng.Seed
 /** Model-based fuzz of the DML surface: random append / delete /
   * update / merge sequences executed against BOTH the graft table and
   * an in-memory reference model; after every op the table must equal
-  * the model exactly. Catches cross-op interactions (carry-by-
+  * the model exactly, and after every DML op its matched-row count
+  * and change feed must equal the model's delta. Catches cross-op interactions (carry-by-
   * reference vs rewrite, NULL predicates, repeated keys) the targeted
   * specs can't enumerate. */
 class DmlFuzzSpec extends SparkSpec {
@@ -68,6 +69,20 @@ class DmlFuzzSpec extends SparkSpec {
   private def toDf(rows: Seq[(Long, Option[Long])]) =
     rows.toDF("k", "x").withColumn("_id", col("k").cast("string"))
 
+  /** The change feed after commit `after`, counted per `_change_type`. */
+  private def changeCounts(dir: String, after: Long): Map[String, Long] =
+    CdcTable.readChanges(spark, dir, after).groupBy("_change_type")
+      .count().as[(String, Long)].collect().toMap
+
+  /** A MERGE's expected change rows against the model: the matched
+    * keys' pre/postimages, the rest inserts. */
+  private def mergeChanges(model: Model, rows: Seq[(Long, Option[Long])])
+      : (Long, Map[String, Long]) = {
+    val m = rows.count(r => model.contains(r._1)).toLong
+    (m, Map("update_preimage" -> m, "update_postimage" -> m,
+      "insert" -> (rows.size - m)))
+  }
+
   test("random DML sequences match an in-memory model exactly") {
     (1 to 3).foreach { seed =>
       val dir = tmpDir(s"dmlfuzz$seed")
@@ -80,6 +95,20 @@ class DmlFuzzSpec extends SparkSpec {
       val ops = Gen.listOfN(16, genOp)(
         Gen.Parameters.default, Seed(seed.toLong)).get
       ops.zipWithIndex.foreach { case (op, i) =>
+        val pre = CdcTable.log(dir).last.commit
+        // a DML op's result and change feed against the model's delta
+        def dml(r: CdcTable.DeleteResult, matched: Long,
+            changes: Map[String, Long], predicate: Boolean = false): Unit = {
+          val ctx = s"seed=$seed op#$i $op"
+          assert(r.rowsDeleted == matched,
+            s"$ctx: rowsDeleted ${r.rowsDeleted}, model matched $matched")
+          val feed = changeCounts(dir, pre)
+          assert(feed == changes.filter(_._2 > 0),
+            s"$ctx: change feed $feed, model $changes")
+          if (predicate && matched == 0)
+            assert(CdcTable.log(dir).last.commit == pre,
+              s"$ctx: a predicate op matching nothing moved the log tail")
+        }
         op match {
           case Append(rows) =>
             // model has unique keys: drop keys already present
@@ -89,38 +118,51 @@ class DmlFuzzSpec extends SparkSpec {
               model ++= fresh.toMap
             }
           case Delete(thr) =>
-            CdcTable.delete(spark, dir, s"x < $thr")
+            val m = model.values.count(_.exists(_ < thr)).toLong
+            dml(CdcTable.delete(spark, dir, s"x < $thr"), m,
+              Map("delete" -> m), predicate = true)
             // SQL semantics: NULL x never matches
             model = model.filter {
               case (_, Some(x)) => x >= thr
               case (_, None) => true
             }
           case Update(thr, add) =>
-            CdcTable.update(spark, dir, s"x < $thr",
-              Seq("x" -> s"x + $add"))
+            val m = model.values.count(_.exists(_ < thr)).toLong
+            dml(CdcTable.update(spark, dir, s"x < $thr",
+              Seq("x" -> s"x + $add")), m,
+              Map("update_preimage" -> m, "update_postimage" -> m),
+              predicate = true)
             model = model.map {
               case (k, Some(x)) if x < thr => k -> Some(x + add)
               case kv => kv
             }
           case Merge(rows) =>
-            CdcTable.merge(spark, dir, toDf(rows), keys = Seq("k"))
+            val (m, changes) = mergeChanges(model, rows)
+            dml(CdcTable.merge(spark, dir, toDf(rows), keys = Seq("k")),
+              m, changes)
             model ++= rows.toMap
           case DeleteKeys(ks) =>
-            CdcTable.deleteKeys(spark, dir, ks.toDF("k"), Seq("k"))
+            val m = ks.distinct.count(model.contains).toLong
+            dml(CdcTable.deleteKeys(spark, dir, ks.toDF("k"), Seq("k")), m,
+              Map("delete" -> m))
             model --= ks
           case Optimize =>
             // content-preserving compaction interleaved with DML:
             // the model must be unaffected
-            CdcTable.replaceWith(spark, dir,
+            CdcTable.replaceWith(dir,
               CdcTable.read(spark, dir).coalesce(1))
           case Vacuum =>
             // reclaiming superseded files must never touch live data
             CdcTable.vacuumOrphans(dir, retainMillis = 0L)
           case MergeDV(rows) =>
-            CdcTable.mergeDV(spark, dir, toDf(rows), keys = Seq("k"))
+            val (m, changes) = mergeChanges(model, rows)
+            dml(CdcTable.mergeDV(spark, dir, toDf(rows), keys = Seq("k")),
+              m, changes)
             model ++= rows.toMap
           case DeleteKeysDV(ks) =>
-            CdcTable.deleteKeysDV(spark, dir, ks.toDF("k"), Seq("k"))
+            val m = ks.distinct.count(model.contains).toLong
+            dml(CdcTable.deleteKeysDV(spark, dir, ks.toDF("k"), Seq("k")),
+              m, Map("delete" -> m))
             model --= ks
           case ToggleConstraint =>
             // always-true on the fuzz domain: every later write runs

@@ -84,13 +84,13 @@ class DvSpec extends SparkSpec {
       Seq("k1", "k4").toDF("_id"), Seq("_id"))
     val dvSnap = CdcTable.log(dir).last.commit
     val want = rows(dir)
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.read(spark, dir).coalesce(1))
     assert(CdcTable.log(dir).last.dvFiles.isEmpty,
       "a full rewrite folds the tombstones into fresh files")
     assert(rows(dir) == want)
     // restore to the DV snapshot: sidecars are snapshot state
-    CdcTable.restore(spark, dir, commitAsOf = Some(dvSnap))
+    CdcTable.restore(dir, commitAsOf = Some(dvSnap))
     assert(CdcTable.log(dir).last.dvFiles.nonEmpty,
       "restore must reinstate the snapshot's sidecars")
     assert(rows(dir) == want)
@@ -103,7 +103,7 @@ class DvSpec extends SparkSpec {
       src)
     CdcTable.deleteKeysDV(spark, src,
       Seq("k2", "k11").toDF("_id"), Seq("_id"))
-    CdcTable.cloneShallow(spark, src, dst)
+    CdcTable.cloneShallow(src, dst)
     val want = (1L to 12L).filterNot(i => i == 2 || i == 11).toSeq
     assert(rows(dst) == want, "borrowed DVs filter borrowed files")
     // force the distributed anti-join fallback and compare
@@ -199,7 +199,7 @@ class DvSpec extends SparkSpec {
       ("k7", 70L, "update_preimage"), ("k7", 888L, "update_postimage"),
       ("knew", 777L, "insert")))
     // a later compaction folds the DVs physically, same answer
-    CdcTable.replaceWith(spark, dvDir,
+    CdcTable.replaceWith(dvDir,
       CdcTable.read(spark, dvDir).coalesce(1), partitionBy = Nil)
     assert(rows(dvDir) == rows(rwDir))
     // txn replay no-ops

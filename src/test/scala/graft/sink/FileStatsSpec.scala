@@ -102,7 +102,7 @@ class FileStatsSpec extends SparkSpec {
       .select(input_file_name()).distinct().count()
     assert(rawScanned == 3, s"overlapping ranges can't skip: $rawScanned")
     // OPTIMIZE-style rewrite clustered on x → disjoint per-file ranges
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.zorderFrame(
         CdcTable.read(spark, dir), Seq("x"), nFiles = 3),
       partitionBy = Nil)

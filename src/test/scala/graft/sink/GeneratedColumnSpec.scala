@@ -152,13 +152,13 @@ class GeneratedColumnSpec extends SparkSpec {
       .select("bucket").as[Long].head() == 1L,
       "generation must still fire after a schema merge")
     val r = intercept[Exception](
-      CdcTable.renameColumn(spark, dir, "v", "val"))
+      CdcTable.renameColumn(dir, "v", "val"))
     assert(chain(r).contains("generated column"), chain(r))
-    val d = intercept[Exception](CdcTable.dropColumn(spark, dir, "v"))
+    val d = intercept[Exception](CdcTable.dropColumn(dir, "v"))
     assert(chain(d).contains("generated column"), chain(d))
     // dropping the GENERATED column itself is fine
-    CdcTable.dropColumn(spark, dir, "bucket")
-    assert(CdcTable.renameColumn(spark, dir, "v", "val") > 0)
+    CdcTable.dropColumn(dir, "bucket")
+    assert(CdcTable.renameColumn(dir, "v", "val") > 0)
     // chained generation rejects
     val dir2 = tmpDir("gen_chain")
     CdcTable.append(Seq((1L, "a")).toDF("v", "_id"), dir2,

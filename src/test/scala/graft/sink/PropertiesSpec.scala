@@ -41,7 +41,7 @@ class PropertiesSpec extends SparkSpec {
     val dir = tmpDir("prop_vac")
     CdcTable.append(Seq((1L, "a")).toDF("qty", "_id"), dir)
     // a replace orphans the old file
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.read(spark, dir).coalesce(1))
     // malformed retention rejects at SET time (never wedges VACUUM)
     val badp = intercept[IllegalArgumentException](
@@ -59,7 +59,7 @@ class PropertiesSpec extends SparkSpec {
     assert(CdcTable.read(spark, dir).count() == 1)
     // an explicit RETAIN overrides the property
     CdcTable.setProperty(dir, "graft.vacuum.retainHours", "99999")
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.read(spark, dir).coalesce(1))
     val d2 = spark.sql(s"GRAFT VACUUM '$dir' RETAIN 0 HOURS FORCE")
       .collect()(0).getInt(0)
@@ -71,7 +71,7 @@ class PropertiesSpec extends SparkSpec {
     val dst = tmpDir("prop_clone_dst") + "/t"
     CdcTable.append(Seq((1L, "a")).toDF("qty", "_id"), src)
     CdcTable.setProperty(src, "owner", "alpha")
-    CdcTable.cloneShallow(spark, src, dst)
+    CdcTable.cloneShallow(src, dst)
     assert(CdcTable.properties(dst) == Map("owner" -> "alpha"))
     CdcTable.setProperty(dst, "owner", "beta")
     assert(CdcTable.properties(src) == Map("owner" -> "alpha"),
@@ -84,7 +84,7 @@ class PropertiesSpec extends SparkSpec {
     val snap = CdcTable.log(dir).last.commit
     CdcTable.setProperty(dir, "owner", "gamma")
     CdcTable.setProperty(dir, "extra", "x")
-    CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+    CdcTable.restore(dir, commitAsOf = Some(snap))
     assert(CdcTable.properties(dir) == Map("owner" -> "alpha"),
       s"restore must roll properties back: ${CdcTable.properties(dir)}")
   }

@@ -29,7 +29,7 @@ class ProtocolSpec extends SparkSpec {
     assert(dv.requires.contains("deletion-vectors"))
     assert(dv.writerRequires.contains("change-data-feed"))
     // rename → column-mapping
-    CdcTable.renameColumn(spark, dir, "qty", "amount")
+    CdcTable.renameColumn(dir, "qty", "amount")
     assert(CdcTable.log(dir).last.requires.contains("column-mapping"))
     // constraint → writer-side check-constraints, no reader feature
     CdcTable.addConstraint(spark, dir, "pos", "amount >= 0")
@@ -98,7 +98,7 @@ class ProtocolSpec extends SparkSpec {
       "deletion-vectors")), "the stamp must survive in the checkpoint")
     // a shallow clone re-commits borrowed DV sidecars → re-stamped
     val dst = tmpDir("proto_clone") + "/t"
-    CdcTable.cloneShallow(spark, dir, dst)
+    CdcTable.cloneShallow(dir, dst)
     assert(CdcTable.log(dst).exists(_.requires.contains(
       "deletion-vectors")))
     assert(CdcTable.read(spark, dst).count() ==

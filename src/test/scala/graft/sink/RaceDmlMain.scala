@@ -68,7 +68,7 @@ object RaceDmlMain {
             // pre-read log tail — a commit landing in between fails
             // the replace loudly (nothing lost) and retries
             val tail = CdcTable.log(dir).last.commit
-            CdcTable.replaceWith(spark, dir,
+            CdcTable.replaceWith(dir,
               CdcTable.read(spark, dir).coalesce(1),
               partitionBy = Nil, expectedLastCommit = Some(tail))
           }

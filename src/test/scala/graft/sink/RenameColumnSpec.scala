@@ -19,7 +19,7 @@ class RenameColumnSpec extends SparkSpec {
     val dir = tmpDir("ren1")
     CdcTable.append(Seq((1L, "a"), (2L, "b")).toDF("x", "_id"), dir)
     val before = dataFiles(dir)
-    val sv = CdcTable.renameColumn(spark, dir, "x", "qty")
+    val sv = CdcTable.renameColumn(dir, "x", "qty")
     assert(dataFiles(dir) == before,
       "rename must write no data files")
     assert(sv == CdcTable.currentVersion(dir))
@@ -38,7 +38,7 @@ class RenameColumnSpec extends SparkSpec {
     val dir = tmpDir("ren_tt")
     CdcTable.append(Seq((1L, "a")).toDF("x", "_id"), dir)
     val snap = CdcTable.log(dir).last.commit
-    CdcTable.renameColumn(spark, dir, "x", "qty")
+    CdcTable.renameColumn(dir, "x", "qty")
     CdcTable.append(Seq((2L, "b")).toDF("qty", "_id"), dir)
     val old = CdcTable.readAsOf(spark, dir, commitAsOf = Some(snap))
     assert(old.columns.contains("x") && !old.columns.contains("qty"))
@@ -48,7 +48,7 @@ class RenameColumnSpec extends SparkSpec {
   test("keyed DML over a renamed column spans old and new files") {
     val dir = tmpDir("ren_dml")
     CdcTable.append((1L to 4L).map(i => (i, s"k$i")).toDF("x", "_id"), dir)
-    CdcTable.renameColumn(spark, dir, "x", "qty")
+    CdcTable.renameColumn(dir, "x", "qty")
     CdcTable.append((5L to 6L).map(i => (i, s"k$i")).toDF("qty", "_id"), dir)
     // delete keys living in a PRE-rename file and a POST-rename file
     val res = CdcTable.deleteKeys(spark, dir,
@@ -67,9 +67,9 @@ class RenameColumnSpec extends SparkSpec {
   test("renames chain in order; a swap works via a temporary") {
     val dir = tmpDir("ren_chain")
     CdcTable.append(Seq((1L, 10L, "a")).toDF("x", "y", "_id"), dir)
-    CdcTable.renameColumn(spark, dir, "x", "tmp")
-    CdcTable.renameColumn(spark, dir, "y", "x")
-    CdcTable.renameColumn(spark, dir, "tmp", "y")
+    CdcTable.renameColumn(dir, "x", "tmp")
+    CdcTable.renameColumn(dir, "y", "x")
+    CdcTable.renameColumn(dir, "tmp", "y")
     val r = CdcTable.read(spark, dir).select("x", "y").as[(Long, Long)]
       .collect().toSeq
     assert(r == Seq((10L, 1L)), s"swap through the chain: $r")
@@ -78,17 +78,17 @@ class RenameColumnSpec extends SparkSpec {
   test("restore and shallow clone carry the rename mapping") {
     val dir = tmpDir("ren_restore")
     CdcTable.append(Seq((1L, "a")).toDF("x", "_id"), dir)
-    CdcTable.renameColumn(spark, dir, "x", "qty")
+    CdcTable.renameColumn(dir, "x", "qty")
     CdcTable.append(Seq((2L, "b")).toDF("qty", "_id"), dir)
     val snap = CdcTable.log(dir).last.commit
     CdcTable.delete(spark, dir, "qty = 1")
     // restore to the post-rename snapshot: the chain must re-commit
-    CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+    CdcTable.restore(dir, commitAsOf = Some(snap))
     assert(CdcTable.read(spark, dir).select("qty").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L))
     // clone borrows pre-rename files; the mapping rides the manifest
     val dst = tmpDir("ren_clone")
-    CdcTable.cloneShallow(spark, dir, dst)
+    CdcTable.cloneShallow(dir, dst)
     assert(CdcTable.read(spark, dst).select("qty").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L))
   }
@@ -96,7 +96,7 @@ class RenameColumnSpec extends SparkSpec {
   test("change feed across a rename serves the range-final names") {
     val dir = tmpDir("ren_cdf")
     CdcTable.append(Seq((1L, "a")).toDF("x", "_id"), dir)
-    CdcTable.renameColumn(spark, dir, "x", "qty")
+    CdcTable.renameColumn(dir, "x", "qty")
     CdcTable.append(Seq((2L, "b")).toDF("qty", "_id"), dir)
     val ch = CdcTable.readChanges(spark, dir, afterCommit = 0L)
     assert(ch.columns.contains("qty") && !ch.columns.contains("x"))
@@ -107,7 +107,7 @@ class RenameColumnSpec extends SparkSpec {
   test("rename survives log checkpoints (stub round-trip)") {
     val dir = tmpDir("ren_ckpt")
     CdcTable.append(Seq((1L, "a")).toDF("x", "_id"), dir)
-    CdcTable.renameColumn(spark, dir, "x", "qty")
+    CdcTable.renameColumn(dir, "x", "qty")
     // push past the checkpoint interval so the log reloads through a
     // consolidated checkpoint containing the rename commit
     (2L to 14L).foreach(i =>
@@ -121,16 +121,16 @@ class RenameColumnSpec extends SparkSpec {
     CdcTable.append(Seq((1L, "eu", "a"), (2L, "us", "b"))
       .toDF("x", "region", "_id"), dir, partitionBy = Seq("region"))
     intercept[IllegalArgumentException] {
-      CdcTable.renameColumn(spark, dir, "region", "zone")
+      CdcTable.renameColumn(dir, "region", "zone")
     }
     intercept[IllegalArgumentException] {
-      CdcTable.renameColumn(spark, dir, "x", "region") // exists
+      CdcTable.renameColumn(dir, "x", "region") // exists
     }
     intercept[IllegalArgumentException] {
-      CdcTable.renameColumn(spark, dir, "missing", "y")
+      CdcTable.renameColumn(dir, "missing", "y")
     }
     intercept[IllegalArgumentException] {
-      CdcTable.renameColumn(spark, dir, "x", "_cdc_sneaky")
+      CdcTable.renameColumn(dir, "x", "_cdc_sneaky")
     }
     // nothing committed by the rejections
     assert(CdcTable.log(dir).size == 1)
@@ -142,7 +142,7 @@ class RenameColumnSpec extends SparkSpec {
       .toDF("x", "extra", "_id"), dir)
     val snap = CdcTable.log(dir).last.commit
     val before = dataFiles(dir)
-    CdcTable.dropColumn(spark, dir, "extra")
+    CdcTable.dropColumn(dir, "extra")
     assert(dataFiles(dir) == before, "drop must write no data files")
     val now = CdcTable.read(spark, dir)
     assert(!now.columns.contains("extra"))
@@ -157,7 +157,7 @@ class RenameColumnSpec extends SparkSpec {
   test("a re-added same-name column never resurrects dropped values") {
     val dir = tmpDir("drop_readd")
     CdcTable.append(Seq((1L, 7L, "a")).toDF("x", "extra", "_id"), dir)
-    CdcTable.dropColumn(spark, dir, "extra")
+    CdcTable.dropColumn(dir, "extra")
     // widening append re-introduces the name as a FRESH column
     CdcTable.append(Seq((2L, 99L, "b")).toDF("x", "extra", "_id"), dir)
     val got = CdcTable.read(spark, dir)
@@ -170,8 +170,8 @@ class RenameColumnSpec extends SparkSpec {
     val dir = tmpDir("drop_chain")
     CdcTable.append(Seq((1L, 7L, "a"), (2L, 8L, "b"))
       .toDF("x", "extra", "_id"), dir)
-    CdcTable.renameColumn(spark, dir, "x", "qty")
-    CdcTable.dropColumn(spark, dir, "extra")
+    CdcTable.renameColumn(dir, "x", "qty")
+    CdcTable.dropColumn(dir, "extra")
     assert(CdcTable.read(spark, dir).columns.toSet
       .filterNot(_.startsWith("_")) == Set("qty"))
     val res = CdcTable.delete(spark, dir, "qty = 1", partitionBy = Nil)
@@ -185,10 +185,10 @@ class RenameColumnSpec extends SparkSpec {
     CdcTable.append(Seq((1L, "eu", "a")).toDF("x", "region", "_id"),
       dir, partitionBy = Seq("region"))
     intercept[IllegalArgumentException] {
-      CdcTable.dropColumn(spark, dir, "region") // partition column
+      CdcTable.dropColumn(dir, "region") // partition column
     }
     intercept[IllegalArgumentException] {
-      CdcTable.dropColumn(spark, dir, "missing")
+      CdcTable.dropColumn(dir, "missing")
     }
     val out = spark.sql(s"GRAFT DROP COLUMN '$dir' x").collect()
     assert(out.length == 1 &&
@@ -214,7 +214,7 @@ class RenameColumnSpec extends SparkSpec {
       .toDF("x", "score", "_id"), dir)
     assert(CdcTable.read(spark, dir).count() == 2)
     intercept[IllegalArgumentException] {
-      CdcTable.addColumn(spark, dir, "x",
+      CdcTable.addColumn(dir, "x",
         org.apache.spark.sql.types.LongType) // exists
     }
   }
@@ -252,23 +252,23 @@ class RenameColumnSpec extends SparkSpec {
     val dir = tmpDir("widen_rej")
     CdcTable.append(Seq((1L, 1.5, "a")).toDF("x", "d", "_id"), dir)
     intercept[IllegalArgumentException] { // narrowing
-      CdcTable.widenColumn(spark, dir, "x",
+      CdcTable.widenColumn(dir, "x",
         org.apache.spark.sql.types.IntegerType)
     }
     intercept[IllegalArgumentException] { // double → long narrows
-      CdcTable.widenColumn(spark, dir, "d",
+      CdcTable.widenColumn(dir, "d",
         org.apache.spark.sql.types.LongType)
     }
     intercept[IllegalArgumentException] { // same type: no-op rejects
-      CdcTable.widenColumn(spark, dir, "x",
+      CdcTable.widenColumn(dir, "x",
         org.apache.spark.sql.types.LongType)
     }
     intercept[IllegalArgumentException] { // unknown column
-      CdcTable.widenColumn(spark, dir, "nope",
+      CdcTable.widenColumn(dir, "nope",
         org.apache.spark.sql.types.LongType)
     }
     // long → double IS a lattice-up move
-    CdcTable.widenColumn(spark, dir, "x",
+    CdcTable.widenColumn(dir, "x",
       org.apache.spark.sql.types.DoubleType)
     assert(CdcTable.read(spark, dir).select("x").as[Double]
       .collect().toSeq == Seq(1.0))
@@ -280,11 +280,11 @@ class RenameColumnSpec extends SparkSpec {
       .toDF("x", "part", "_cdc_op", "_id"), dir,
       partitionBy = Seq("part"))
     intercept[IllegalArgumentException] { // int part col: lattice OK,
-      CdcTable.widenColumn(spark, dir, "part", // partition check fires
+      CdcTable.widenColumn(dir, "part", // partition check fires
         org.apache.spark.sql.types.LongType)
     }
     intercept[IllegalArgumentException] {
-      CdcTable.widenColumn(spark, dir, "_cdc_op",
+      CdcTable.widenColumn(dir, "_cdc_op",
         org.apache.spark.sql.types.BinaryType)
     }
   }
@@ -293,8 +293,8 @@ class RenameColumnSpec extends SparkSpec {
     val dir = tmpDir("ren_stats_drop")
     CdcTable.append(Seq((1L, 10L, "a"), (2L, 20L, "b"))
       .toDF("_id", "a", "k"), dir, partitionBy = Nil)
-    CdcTable.dropColumn(spark, dir, "a")
-    CdcTable.addColumn(spark, dir, "a",
+    CdcTable.dropColumn(dir, "a")
+    CdcTable.addColumn(dir, "a",
       org.apache.spark.sql.types.LongType)
     // pre-drop file rows now read a = NULL; the pre-drop stats
     // (hasNull = false, keyed by the OLD physical 'a') must not serve
@@ -311,7 +311,7 @@ class RenameColumnSpec extends SparkSpec {
     val dir = tmpDir("ren_stats_key")
     CdcTable.append(Seq((1L, 10L, "a"), (2L, 20L, "b"))
       .toDF("_id", "a", "k"), dir, partitionBy = Nil)
-    CdcTable.renameColumn(spark, dir, "a", "b")
+    CdcTable.renameColumn(dir, "a", "b")
     var seen = Set.empty[String]
     CdcTable.readFiltered(spark, dir, (_, _) => true,
       statsPredicate = m => { seen ++= m.keySet; true }).count()

@@ -23,7 +23,7 @@ class RestoreCloneSpec extends SparkSpec {
       .map(_._1.toString).filter(_.endsWith(".parquet")).toSet
     val before = dataFiles()
     val tailBefore = CdcTable.log(dir).last.commit
-    CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+    CdcTable.restore(dir, commitAsOf = Some(snap))
     assert(dataFiles() == before,
       "restore must be metadata-only: no data file written or removed")
     assert(CdcTable.log(dir).last.commit == tailBefore + 1,
@@ -42,7 +42,7 @@ class RestoreCloneSpec extends SparkSpec {
     assert(CdcTable.currentSchema(dir).get.fieldNames.contains("note"))
     val preRestore = CdcTable.log(dir).last.commit
 
-    CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+    CdcTable.restore(dir, commitAsOf = Some(snap))
     val sch = CdcTable.currentSchema(dir).get
     assert(!sch.fieldNames.contains("note"),
       "restore must roll the schema back to the snapshot's")
@@ -59,7 +59,7 @@ class RestoreCloneSpec extends SparkSpec {
     CdcTable.append(Seq((2L, "b", 9L)).toDF("x", "_id", "v"), dir)
     val snap = CdcTable.log(dir).last.commit
     CdcTable.delete(spark, dir, "x = 1") // full rewrite of gen 1 file
-    CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+    CdcTable.restore(dir, commitAsOf = Some(snap))
     val rows = CdcTable.read(spark, dir)
       .select("x", "v").as[(Long, Option[Long])].collect().sortBy(_._1)
     assert(rows.toSeq == Seq((1L, None), (2L, Some(9L))),
@@ -70,7 +70,7 @@ class RestoreCloneSpec extends SparkSpec {
     val dir = tmpDir("restore4")
     CdcTable.append(Seq((1L, "a")).toDF("x", "_id"), dir)
     val last = CdcTable.log(dir).last.commit
-    CdcTable.restore(spark, dir,
+    CdcTable.restore(dir,
       commitAsOf = Some(last))
     assert(CdcTable.log(dir).last.commit == last,
       "restoring to the current snapshot must write no commit")
@@ -86,7 +86,7 @@ class RestoreCloneSpec extends SparkSpec {
     assert(CdcTable.vacuumOrphans(dir, retainMillis = -60000L).nonEmpty)
     val tail = CdcTable.log(dir).last.commit
     val e = intercept[IllegalArgumentException] {
-      CdcTable.restore(spark, dir, commitAsOf = Some(snap))
+      CdcTable.restore(dir, commitAsOf = Some(snap))
     }
     assert(e.getMessage.contains("vacuum"))
     assert(CdcTable.log(dir).last.commit == tail,
@@ -113,7 +113,7 @@ class RestoreCloneSpec extends SparkSpec {
     val src = tmpDir("cloneseg") + "/region=eu/tbl"
     val dst = tmpDir("cloneseg_d")
     CdcTable.append((1L to 6L).map(i => (i, s"k$i")).toDF("x", "_id"), src)
-    CdcTable.cloneShallow(spark, src, dst)
+    CdcTable.cloneShallow(src, dst)
     val got = CdcTable.read(spark, dst)
     assert(got.columns.toSet.filter(!_.startsWith("_cdc")) ==
       Set("x", "_id"), "no phantom 'region' partition column")
@@ -123,7 +123,7 @@ class RestoreCloneSpec extends SparkSpec {
     // borrowed absolute path: a predicate on 'region' must NOT be
     // applied to the source-path segment (which would silently prune
     // every live borrowed file here)
-    assert(CdcTable.readPruned(spark, dst,
+    assert(CdcTable.readFiltered(spark, dst,
       (k, v) => k != "region" || v == "us").count() == 6,
       "key=value segments of the source's own directory path are not " +
         "partition columns of borrowed files")
@@ -141,7 +141,7 @@ class RestoreCloneSpec extends SparkSpec {
     val dst = tmpDir("clonedst")
     CdcTable.append(Seq((1L, "a"), (2L, "b")).toDF("x", "_id"), src)
     CdcTable.append(Seq((3L, "c")).toDF("x", "_id"), src)
-    val borrowed = CdcTable.cloneShallow(spark, src, dst)
+    val borrowed = CdcTable.cloneShallow(src, dst)
     assert(borrowed >= 2)
     assert(graft.core.Fs.walkFiles(s"$dst/data").isEmpty,
       "a shallow clone must copy zero data files")
@@ -156,7 +156,7 @@ class RestoreCloneSpec extends SparkSpec {
     val dst = tmpDir("cloneind_d")
     CdcTable.append(Seq((1L, "a"), (2L, "b"), (3L, "c"))
       .toDF("x", "_id"), src)
-    CdcTable.cloneShallow(spark, src, dst)
+    CdcTable.cloneShallow(src, dst)
     // DML in the clone rewrites BORROWED files into the clone's dir
     val r = CdcTable.delete(spark, dst, "x = 2")
     assert(r.rowsDeleted == 1L)
@@ -174,7 +174,7 @@ class RestoreCloneSpec extends SparkSpec {
     val dst = tmpDir("clonekeyed_d")
     CdcTable.append((1L to 10L).map(i => (i, s"k$i"))
       .toDF("x", "_id"), src)
-    CdcTable.cloneShallow(spark, src, dst)
+    CdcTable.cloneShallow(src, dst)
     val keys = Seq("k3", "k7").toDF("_id")
     val res = CdcTable.deleteKeys(spark, dst, keys, Seq("_id"))
     assert(res.rowsDeleted == 2L,
@@ -189,7 +189,7 @@ class RestoreCloneSpec extends SparkSpec {
     CdcTable.append(Seq((1L, "a")).toDF("x", "_id"), src)
     CdcTable.append(Seq((2L, "b")).toDF("x", "_id"), dst)
     intercept[IllegalArgumentException] {
-      CdcTable.cloneShallow(spark, src, dst)
+      CdcTable.cloneShallow(src, dst)
     }
   }
 

@@ -150,7 +150,7 @@ class GraftSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(files.select("n_stats_cols").as[Int].collect()
       .forall(_ > 0), "footer stats recorded per file")
     // a replace supersedes earlier files in the live view
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.read(spark, dir).coalesce(1))
     val after = spark.read.format("graft")
       .option("metaTable", "files").load(dir)

@@ -40,7 +40,7 @@ class GraftStreamSpec extends SparkSpec {
       q.processAllAvailable()
       assert(received.size == 3 && received.contains(("c", 3L)))
       // compaction is a physical rewrite: nothing re-enters the stream
-      CdcTable.replaceWith(spark, dir,
+      CdcTable.replaceWith(dir,
         CdcTable.read(spark, dir).coalesce(1))
       q.processAllAvailable()
       assert(received.size == 3)
@@ -181,7 +181,7 @@ class GraftStreamSpec extends SparkSpec {
     // whole backfill in one trigger)
     (1 to 9).foreach(i => CdcTable.append(
       Seq((i.toLong, s"r$i")).toDF("x", "_id").coalesce(1), dir))
-    CdcTable.replaceWith(spark, dir,
+    CdcTable.replaceWith(dir,
       CdcTable.read(spark, dir).coalesce(1))
     CdcTable.append(Seq((10L, "r10")).toDF("x", "_id").coalesce(1), dir)
     assert(CdcTable.log(dir).exists(_.stub),

@@ -49,7 +49,7 @@ class GraftSqlParserSpec extends SparkSpec {
     assert(det._1 == 2 && det._4 >= 1 && det._5 > 0 && det._6 >= 1,
       s"commits/live_files/live_bytes/live_rows_est: $det")
     // a replace orphans the old files; sub-floor retention needs FORCE
-    CdcTable.replaceWith(spark, dir, CdcTable.read(spark, dir).coalesce(1))
+    CdcTable.replaceWith(dir, CdcTable.read(spark, dir).coalesce(1))
     intercept[IllegalArgumentException] {
       spark.sql(s"GRAFT VACUUM '$dir' RETAIN 0 HOURS").collect()
     }
