@@ -1,16 +1,17 @@
 package graft.queries
 
 import graft.Tables
+import graft.reconcile.Reconciler
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Reconciliation operators (SURVEY.md §2.5 J2/J3; reference
   * `specs/001-mongodb-cdc-delta/research.md:659-858` — specified, never
-  * implemented there). The source↔target diff is expressed as anti /
-  * full-outer joins plus per-bucket digests, which is exactly how Spark
-  * wants it: the reference's 8-worker thread pool becomes shuffle
-  * partitions, and the 10k-doc batches become hash buckets computed
-  * distributively (no driver-side ranges).
+  * implemented there). q25 and q26 read the library's own one-pass diff
+  * ([[graft.reconcile.Reconciler.diff]]), so the oracle checks it; q27
+  * compares per-bucket digests. The reference's 8-worker thread pool
+  * becomes shuffle partitions, and its 10k-doc batches become hash
+  * partitions computed distributively (no driver-side ranges).
   *
   * The two "replicas" are simulated from the same orders table with
   * deterministic divergence, so the oracle can rebuild them in SQL:
@@ -19,8 +20,9 @@ import org.apache.spark.sql.functions._
   *             with o_totalprice perturbed for keys ≡ 1 (mod 500)
   *             (field mismatch).
   *
-  * The digest is engine-portable integer arithmetic (not xxhash64, which
-  * differs between engines): sum over a key-mixed modular polynomial.
+  * q27's digest is engine-portable integer arithmetic (not xxhash64,
+  * which differs between engines): sum over a key-mixed modular
+  * polynomial.
   */
 object ReconQ {
 
@@ -42,16 +44,20 @@ object ReconQ {
       |    o_orderdate, o_orderpriority
       |  FROM orders WHERE o_orderkey % 997 <> 3""".stripMargin
 
-  /** q25 — missing/extra detection via two anti joins unioned with a
-    * side tag (one full-outer join in physical terms at scale). */
+  /** The replicas' diff over the two payload columns q26 compares. */
+  private def diff(s: SparkSession, dir: String): Reconciler.Report =
+    Reconciler.diff(source(s, dir), target(s, dir), "o_orderkey",
+      Seq("o_totalprice", "o_orderstatus"))
+
+  /** q25 — missing/extra detection: the diff's missing and extra rows'
+    * keys, unioned with a side tag. */
   def q25(s: SparkSession, dir: String): DataFrame = {
-    val src = source(s, dir).select(col("o_orderkey"))
-    val tgt = target(s, dir).select(col("o_orderkey"))
-    val missing = src.join(tgt, Seq("o_orderkey"), "left_anti")
-      .withColumn("status", lit("missing_in_target"))
-    val extra = tgt.join(src, Seq("o_orderkey"), "left_anti")
-      .withColumn("status", lit("extra_in_target"))
-    missing.union(extra).orderBy(col("o_orderkey"))
+    val r = diff(s, dir)
+    def keys(df: DataFrame, status: String) =
+      df.select(col("o_orderkey"), lit(status).as("status"))
+    keys(r.missingInTarget, "missing_in_target")
+      .union(keys(r.extraInTarget, "extra_in_target"))
+      .orderBy(col("o_orderkey"))
   }
 
   val q25Sql: String =
@@ -63,19 +69,13 @@ object ReconQ {
        |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM src)
        |ORDER BY o_orderkey""".stripMargin
 
-  /** q26 — field-mismatch detection: inner join on key, compare payload
-    * columns (reference drill-down compare, research.md:732-768). */
-  def q26(s: SparkSession, dir: String): DataFrame = {
-    val src = source(s, dir).select(col("o_orderkey"),
-      col("o_totalprice").as("src_price"), col("o_orderstatus").as("src_status"))
-    val tgt = target(s, dir).select(col("o_orderkey"),
-      col("o_totalprice").as("tgt_price"), col("o_orderstatus").as("tgt_status"))
-    src.join(tgt, Seq("o_orderkey"))
-      .filter(col("src_price") =!= col("tgt_price") ||
-        col("src_status") =!= col("tgt_status"))
-      .select(col("o_orderkey"), col("src_price"), col("tgt_price"))
+  /** q26 — field-mismatch detection: the diff's mismatched pairs
+    * (reference drill-down compare, research.md:732-768). */
+  def q26(s: SparkSession, dir: String): DataFrame =
+    diff(s, dir).mismatched.select(col("o_orderkey"),
+      col("o_totalprice").as("src_price"),
+      col("tgt_o_totalprice").as("tgt_price"))
       .orderBy(col("o_orderkey"))
-  }
 
   val q26Sql: String =
     s"""WITH src AS ($sourceSql), tgt AS ($targetSql)
@@ -87,9 +87,8 @@ object ReconQ {
        |ORDER BY src.o_orderkey""".stripMargin
 
   /** q27 — bucketed digest comparison (J3): hash keys into 64 buckets,
-    * compare per-bucket counts and digests; only mismatched buckets need
-    * the row-level drill-down (q25/q26). At 100 TB the digest pass
-    * touches every row once with a single narrow aggregation. */
+    * compare per-bucket counts and digests. The digest pass touches
+    * every row once with a single narrow aggregation per side. */
   def q27(s: SparkSession, dir: String): DataFrame = {
     def digestOf(df: DataFrame, cnt: String, dig: String): DataFrame =
       df.groupBy(pmod(col("o_orderkey"), lit(64)).as("bucket"))

@@ -1,21 +1,20 @@
 package graft.reconcile
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** Source↔target reconciliation (SURVEY.md §2.5 J2/J3; reference
+/** Source↔target reconciliation (SURVEY.md §2.5 J2; reference
   * algorithm `specs/001-mongodb-cdc-delta/research.md:659-858` —
-  * specified there, implemented here as distributed joins).
+  * specified there, implemented here as one distributed join).
   *
-  * Two-phase at scale: (1) `bucketDigests` hashes every row once into
-  * `nBuckets` partitions with an order-insensitive multiset digest — a
-  * single narrow aggregation per side, comparing 100 TB with one
-  * small-result shuffle; (2) `diff` drills into rows (anti + inner
-  * joins) — run it on everything at small scale, or filter both sides
-  * to the mismatched buckets first at large scale. The reference's
-  * thread-pooled range batches become shuffle partitions; its
-  * driver-side `_id` ranges become hash buckets, so no coordinator
-  * bottleneck exists.
+  * [[diff]] is one pass: a full-outer join of the two sides on the key
+  * reads each side once, tags every output row by which side it lacks
+  * or by a digest mismatch, and pins only those rows — the pinned set
+  * scales with the diff, not the table. Both side counts ride along in
+  * the same action. The report's frames, the SQL command's counts and
+  * the repair plan's keys are all projections of the pinned rows. The
+  * reference's thread-pooled range batches become shuffle partitions,
+  * so no coordinator bottleneck exists.
   */
 object Reconciler {
 
@@ -23,56 +22,41 @@ object Reconciler {
       extraInTarget: DataFrame, mismatched: DataFrame,
       counts: (Long, Long))
 
-  /** Row digest over `cols`: stable hash of the canonical struct.
-    * xxhash64 is fine engine-internally (both sides computed by us). */
+  /** Row digest over `cols`. xxhash64 skips null inputs, so each column
+    * also hashes its null flag: `("x", null)` and `(null, "x")` must
+    * not collide. Fine engine-internally (both sides computed by us). */
   def rowDigest(cols: Seq[String]): Column =
-    xxhash64(cols.map(col): _*)
-
-  /** Per-bucket counts + order-insensitive digests for one side. Uses
-    * the native multiset_digest aggregate (count/sum/xor of
-    * avalanche-mixed row hashes — collision-resistant and commutative,
-    * so partial aggregation order is irrelevant). */
-  def bucketDigests(df: DataFrame, keyCol: String, nBuckets: Int,
-      compareCols: Seq[String]): DataFrame = {
-    val digest = expr(s"multiset_digest(xxhash64(" +
-      (keyCol +: compareCols).map(c => s"`$c`").mkString(", ") + "))")
-    df.groupBy(pmod(xxhash64(col(keyCol)), lit(nBuckets)).as("bucket"))
-      .agg(count(lit(1)).as("cnt"), digest.as("digest"))
-  }
-
-  /** Compare two sides' bucket digests; rows where anything differs
-    * are the buckets needing row-level drill-down. */
-  def compareBuckets(src: DataFrame, tgt: DataFrame, keyCol: String,
-      nBuckets: Int, compareCols: Seq[String]): DataFrame = {
-    val a = bucketDigests(src, keyCol, nBuckets, compareCols)
-      .withColumnRenamed("cnt", "src_cnt")
-      .withColumnRenamed("digest", "src_digest")
-    val b = bucketDigests(tgt, keyCol, nBuckets, compareCols)
-      .withColumnRenamed("cnt", "tgt_cnt")
-      .withColumnRenamed("digest", "tgt_digest")
-    a.join(b, Seq("bucket"), "full_outer")
-      .withColumn("is_match",
-        col("src_cnt") <=> col("tgt_cnt") &&
-          col("src_digest") <=> col("tgt_digest"))
-  }
+    xxhash64(cols.flatMap(c => Seq(col(c).isNull, col(c))): _*)
 
   /** Row-level diff: missing / extra / field-mismatched records
-    * (reference research.md:732-768 compare_records). */
+    * (reference research.md:732-768 compare_records), in one Spark
+    * action. Rows pair up as a join does: a row whose key (null
+    * included) has no partner on the other side is missing or extra,
+    * and every same-key source/target pair whose compare columns
+    * differ is mismatched. */
   def diff(src: DataFrame, tgt: DataFrame, keyCol: String,
       compareCols: Seq[String]): Report = {
-    val missing = src.join(tgt, Seq(keyCol), "left_anti")
-    val extra = tgt.join(src, Seq(keyCol), "left_anti")
-    val s = src.select((keyCol +: compareCols).map(col): _*)
-      .withColumn("_src_digest", rowDigest(compareCols))
-    val t = tgt.select((keyCol +: compareCols).map(c =>
-        col(c).as(s"tgt_$c")): _*)
-      .withColumnRenamed(s"tgt_$keyCol", keyCol)
-      .withColumn("_tgt_digest",
-        xxhash64(compareCols.map(c => col(s"tgt_$c")): _*))
-    val mismatched = s.join(t, Seq(keyCol))
-      .filter(col("_src_digest") =!= col("_tgt_digest"))
-      .drop("_src_digest", "_tgt_digest")
-    Report(missing, extra, mismatched, (src.count(), tgt.count()))
+    def side(df: DataFrame, tag: String, obs: Observation) =
+      df.observe(obs, count(lit(1)).as("n")).select(
+        col(keyCol).as(s"_${tag}k"),
+        struct(df.columns.toSeq.map(c => col(s"`$c`")): _*).as(s"_$tag"),
+        rowDigest(compareCols).as(s"_${tag}d"))
+    val (os, ot) = (Observation(), Observation())
+    val pinned = side(src, "s", os)
+      .join(side(tgt, "t", ot), col("_sk") === col("_tk"), "full_outer")
+      .filter(col("_s").isNull || col("_t").isNull ||
+        col("_sd") =!= col("_td"))
+      .select("_s", "_t").localCheckpoint()
+    // a side the planner pruned as empty reports no metric at all
+    def n(o: Observation) = o.get.getOrElse("n", 0L).asInstanceOf[Long]
+    def only(s: String, t: String) =
+      pinned.filter(col(s).isNotNull && col(t).isNull).select(s"$s.*")
+    val names = src.select((keyCol +: compareCols).map(col): _*).columns
+    val mismatched = pinned
+      .filter(col("_s").isNotNull && col("_t").isNotNull)
+      .select(names.toSeq.map(c => col("_s").getField(c).as(c)) ++
+        compareCols.map(c => col("_t").getField(c).as(s"tgt_$c")): _*)
+    Report(only("_s", "_t"), only("_t", "_s"), mismatched, (n(os), n(ot)))
   }
 
   /** Repair plan (reference FR-021 "sync source→target"): rows to
@@ -86,7 +70,9 @@ object Reconciler {
     repairPlanFrom(diff(src, tgt, keyCol, compareCols), src, keyCol)
 
   /** Build the plan from an ALREADY-computed diff — callers that also
-    * report the diff counts must not pay the three joins twice. */
+    * report the diff counts must not run the join twice. The upserts
+    * take every source row of a mismatched key, including a duplicate
+    * that matched (its pair is not among the pinned rows). */
   def repairPlanFrom(r: Report, src: DataFrame, keyCol: String)
       : RepairPlan = {
     val mismKeys = r.mismatched.select(col(keyCol))

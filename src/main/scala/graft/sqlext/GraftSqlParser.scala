@@ -760,8 +760,9 @@ case class MergeGraftTable(dir: String, sourceDir: String,
 /** `GRAFT RECONCILE '<target>' FROM '<source>' ON key
   * [COMPARE c1, c2, …] [REPAIR]` — source↔target reconciliation from
   * pure SQL (reference FR-021): counts missing / extra / mismatched
-  * rows via [[graft.reconcile.Reconciler.diff]]; with `REPAIR`, the
-  * repair plan is APPLIED (keyed MERGE upserts + keyed DELETE of
+  * rows from the pinned rows of one [[graft.reconcile.Reconciler.diff]]
+  * pass; with `REPAIR`, the repair plan built from that same diff is
+  * APPLIED (keyed MERGE upserts + keyed DELETE of
   * extras, both carry-by-reference commits) and the post-repair state
   * converges to the source. `<source>` is a graft table when it has a
   * commit log, else a parquet directory. COMPARE defaults to every
@@ -797,7 +798,7 @@ case class ReconcileGraftTable(dir: String, sourceDir: String,
       d.extraInTarget.count(), d.mismatched.count())
     if (repair) {
       // reuse the diff already computed for the report — repairPlan
-      // would otherwise pay the three joins a second time
+      // would otherwise run the join a second time
       val res = Reconciler.applyRepair(spark, dir,
         Reconciler.repairPlanFrom(d, source, key), key)
       Seq(Row(miss, extra, mism,

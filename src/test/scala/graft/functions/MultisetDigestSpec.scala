@@ -49,17 +49,4 @@ class MultisetDigestSpec extends SparkSpec {
     viaExpr.keys.foreach(k => assert(viaExpr(k) == viaAgg(k),
       s"doc $k signatures differ"))
   }
-
-  test("reconciler bucket compare uses the digest and detects drift") {
-    val src = (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v")
-    val tgt = (1L to 1000L).map(i =>
-      (i, if (i == 500L) "corrupt" else s"v$i")).toDF("id", "v")
-    val same = graft.reconcile.Reconciler
-      .compareBuckets(src, src, "id", 16, Seq("v"))
-    assert(same.filter(!$"is_match").count() == 0)
-    val drift = graft.reconcile.Reconciler
-      .compareBuckets(src, tgt, "id", 16, Seq("v"))
-    assert(drift.filter(!$"is_match").count() == 1,
-      "exactly the corrupted row's bucket mismatches")
-  }
 }

@@ -20,13 +20,74 @@ class ReconcilerSpec extends SparkSpec {
     assert(r.counts == ((4L, 4L)))
   }
 
-  test("bucket digests match iff contents match") {
-    val same = Reconciler.compareBuckets(src, src, "id", 8,
-      Seq("name", "amount"))
-    assert(same.filter(!$"is_match").count() == 0)
-    val diff = Reconciler.compareBuckets(src, tgt, "id", 8,
-      Seq("name", "amount"))
-    assert(diff.filter(!$"is_match").count() > 0)
+  test("diff keeps join pairing: duplicate keys, null keys, extra columns") {
+    val noKey = Option.empty[Long]
+    // source carries `note`, which is not compared
+    val s = Seq((Some(1L), "a", 10.0, "n1"), (Some(1L), "a", 11.0, "n2"),
+      (Some(2L), "b", 20.0, "n3"), (Some(2L), "b", 21.0, "n4"),
+      (Some(3L), "c", 30.0, "n5"), (noKey, "z", 0.0, "n6"))
+      .toDF("id", "name", "amount", "note")
+    val t = Seq((Some(1L), "a", 10.0), (Some(1L), "a", 12.0),
+      (Some(2L), "b", 20.0), (Some(4L), "d", 40.0), (noKey, "y", 0.0))
+      .toDF("id", "name", "amount")
+    val r = Reconciler.diff(s, t, "id", Seq("name", "amount"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(_.toSeq.map(String.valueOf).mkString(",")).sorted.toSeq
+    assert(r.missingInTarget.columns.toSeq ==
+      Seq("id", "name", "amount", "note"))
+    assert(rows(r.missingInTarget) == Seq("3,c,30.0,n5", "null,z,0.0,n6"))
+    assert(r.extraInTarget.columns.toSeq == Seq("id", "name", "amount"))
+    assert(rows(r.extraInTarget) == Seq("4,d,40.0", "null,y,0.0"))
+    assert(r.mismatched.columns.toSeq ==
+      Seq("id", "name", "amount", "tgt_name", "tgt_amount"))
+    // every same-key pair whose compared columns differ, once per pair
+    assert(rows(r.mismatched) == Seq("1,a,10.0,a,12.0", "1,a,11.0,a,10.0",
+      "1,a,11.0,a,12.0", "2,b,21.0,b,20.0"))
+    assert(r.counts == ((6L, 5L)))
+    // upserts: missing rows plus every source row of a mismatched key
+    assert(Reconciler.repairPlanFrom(r, s, "id").upserts.count() == 6L)
+  }
+
+  test("diff sees a value moving between columns through a null") {
+    val s = Seq((1L, "x", null: String)).toDF("id", "a", "b")
+    val t = Seq((1L, null: String, "x")).toDF("id", "a", "b")
+    val r = Reconciler.diff(s, t, "id", Seq("a", "b"))
+    assert(r.mismatched.count() == 1L)
+  }
+
+  test("diff, its three frames and its counts scan each side once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec,
+      QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (sDir, tDir) = (tmpDir("scans"), tmpDir("scant"))
+    src.write.mode("overwrite").parquet(sDir)
+    tgt.write.mode("overwrite").parquet(tDir)
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains("scan-count-marker"))
+          drained.countDown()
+        else if (collect(qe.executedPlan) { case scan: FileSourceScanExec =>
+            scan.relation.location.rootPaths.map(_.toUri.getPath) }.flatten
+            .exists(p => Seq(sDir, tDir).contains(p.stripSuffix("/"))))
+          scans.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = Reconciler.diff(spark.read.parquet(sDir),
+        spark.read.parquet(tDir), "id", Seq("name", "amount"))
+      assert((r.missingInTarget.count(), r.extraInTarget.count(),
+        r.mismatched.count(), r.counts) == ((1L, 1L, 1L, (4L, 4L))))
+      // listener events arrive in order: once the marker is seen, every
+      // execution before it has been counted
+      spark.sql("SELECT 'scan-count-marker'").collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(scans.get == 1, s"executions scanning a side: ${scans.get}")
   }
 
   test("repair plan upserts missing+mismatched (source wins), deletes extra") {
@@ -76,10 +137,6 @@ class ReconcilerSpec extends SparkSpec {
     // the clean file carried by reference through BOTH commits
     assert(CdcTable.log(dir).last.files.toSet.intersect(before).nonEmpty,
       "untouched file must survive merge + deleteKeys unrewritten")
-    // and the bucket digests now agree end to end
-    val cmp = Reconciler.compareBuckets(srcDf,
-      CdcTable.read(spark, dir), "id", 8, Seq("name", "amount"))
-    assert(cmp.filter(!$"is_match").count() == 0)
   }
 
   test("GRAFT RECONCILE reports from SQL; REPAIR converges the table") {
