@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * (O(changed rows), never O(table)), aggregates them map-side to
   * group cardinality, and lands one replace commit on the k-row
   * state. The high-water mark rides the state table's txn marker
-  * (crash/replay-safe, the [[Profile.profileSync]] idiom).
+  * (crash/replay-safe, [[CdcTable.syncFeed]]).
   *
   * Contract: `replace` commits WITHOUT change files are
   * content-preserving physical rewrites (compaction / OPTIMIZE /
@@ -42,43 +42,10 @@ object ChangeAgg {
       stateDir: String, groupCols: Seq[String],
       sumCols: Seq[String]): Int = {
     require(groupCols.nonEmpty, "changeAggSync needs group columns")
-    val commits = CdcTable.log(tableDir)
-    require(commits.nonEmpty, s"no CdcTable at $tableDir")
-    val appId = s"changeagg@${Profile.canonicalDir(tableDir)}"
-    val stLog = CdcTable.log(stateDir)
-    val hw = stLog.flatMap(_.txn)
-      .filter(_._1 == appId).map(_._2).maxOption.getOrElse(0L)
-    val range = commits.filter(_.commit > hw)
-    if (range.isEmpty) return 0
-    val signed = CdcTable
-      .readChanges(spark, tableDir, afterCommit = hw,
-        upToCommit = Some(range.last.commit))
-      .withColumn("__sign",
-        when(col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L))
-    val delta = signed
-      .groupBy(groupCols.map(c => col(s"`$c`")): _*)
-      .agg(sum(col("__sign")).as("n_rows"),
-        sumCols.map(c =>
-          sum(col(s"`$c`") * col("__sign")).as(s"sum_$c")): _*)
-    val merged =
-      if (stLog.isEmpty) delta
-      else CdcTable.read(spark, stateDir)
-        .select(delta.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-        .unionByName(delta)
-        .groupBy(groupCols.map(c => col(s"`$c`")): _*)
-        .agg(sum(col("n_rows")).as("n_rows"),
-          sumCols.map(c =>
-            sum(col(s"`sum_$c`")).as(s"sum_$c")): _*)
-    // groups whose rows all deleted drop out of the state entirely
-    val state = merged.filter(col("n_rows") =!= 0L)
-    if (stLog.isEmpty)
-      CdcTable.append(state, stateDir, partitionBy = Nil,
-        txn = Some((appId, range.last.commit)))
-    else
-      CdcTable.replaceWith(stateDir, state, partitionBy = Nil,
-        txn = Some((appId, range.last.commit)))
-    range.length
+    CdcTable.syncFeed(spark, tableDir, stateDir,
+      s"changeagg@${CdcTable.canonicalDir(tableDir)}") { u =>
+      foldBatch(u.feed(), stateDir, groupCols, sumCols, u.txn)
+    }
   }
 
   /** Serve the maintained aggregate. */
@@ -107,8 +74,9 @@ object ChangeAgg {
       }
       .start()
 
-  /** Fold ONE micro-batch of change rows into the state (the shared
-    * tail of the streaming glue; exactly-once via `txn`). */
+  /** Fold ONE batch of change rows into the state (the shared tail of
+    * [[changeAggSync]] and the streaming glue; exactly-once via
+    * `txn`). The first fold creates the state table. */
   private def foldBatch(batch: DataFrame, stateDir: String,
       groupCols: Seq[String], sumCols: Seq[String],
       txn: (String, Long)): Unit = {
@@ -121,9 +89,8 @@ object ChangeAgg {
       .agg(sum(col("__sign")).as("n_rows"),
         sumCols.map(c =>
           sum(col(s"`$c`") * col("__sign")).as(s"sum_$c")): _*)
-    val stLog = CdcTable.log(stateDir)
     val merged =
-      if (stLog.isEmpty) delta
+      if (CdcTable.log(stateDir).isEmpty) delta
       else CdcTable.read(spark, stateDir)
         .select(delta.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
         .unionByName(delta)
@@ -131,13 +98,9 @@ object ChangeAgg {
         .agg(sum(col("n_rows")).as("n_rows"),
           sumCols.map(c =>
             sum(col(s"`sum_$c`")).as(s"sum_$c")): _*)
-    val state = merged.filter(col("n_rows") =!= 0L)
-    if (stLog.isEmpty)
-      CdcTable.append(state, stateDir, partitionBy = Nil,
-        txn = Some(txn))
-    else
-      CdcTable.replaceWith(stateDir, state, partitionBy = Nil,
-        txn = Some(txn))
+    // groups whose rows all deleted drop out of the state entirely
+    CdcTable.replaceWith(stateDir, merged.filter(col("n_rows") =!= 0L),
+      partitionBy = Nil, txn = Some(txn))
     ()
   }
 }

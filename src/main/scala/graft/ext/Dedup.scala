@@ -1359,21 +1359,12 @@ object Dedup {
     * reason, specs/001-mongodb-cdc-delta/research.md:732-768). A
     * write over an existing result REPLACES it atomically: readers
     * see the old snapshot or the new one, never a mix. */
-  /** Land `df` as the table's whole content: atomic replace when the
-    * table exists, create-by-append otherwise. */
-  private def landReplaceOrAppend(df: DataFrame, tbl: String): Unit =
-    if (graft.sink.CdcTable.log(tbl).nonEmpty) {
-      graft.sink.CdcTable.replaceWith(tbl, df,
-        partitionBy = Nil)
-      ()
-    } else {
-      graft.sink.CdcTable.append(df, tbl, partitionBy = Nil)
-      ()
-    }
-
   def writeNearDupResult(res: NearDupResult, dir: String): Unit = {
-    landReplaceOrAppend(res.pairs, s"$dir/pairs")
-    landReplaceOrAppend(res.components, s"$dir/components")
+    graft.sink.CdcTable.replaceWith(s"$dir/pairs", res.pairs,
+      partitionBy = Nil)
+    graft.sink.CdcTable.replaceWith(s"$dir/components", res.components,
+      partitionBy = Nil)
+    ()
   }
 
   /** Maintain a MATERIALIZED near-dup result batch-at-a-time — the
@@ -1456,36 +1447,34 @@ object Dedup {
     import graft.sink.CdcTable
     val pairsDir = s"$dir/pairs"
     val compDir = s"$dir/components"
-    val pLog = CdcTable.log(pairsDir)
-    require(pLog.nonEmpty, s"no pairs table at $pairsDir")
-    val last = pLog.last.commit
-    val cLog = CdcTable.log(compDir)
-    val hw = cLog.flatMap(_.txn).filter(_._1 == CcAppId).map(_._2)
-      .maxOption.getOrElse(0L)
-    if (hw >= last) return 0
-    val range = pLog.filter(_.commit > hw)
-
-    def fullRebuild(): Unit = {
-      val labels = connectedComponents(spark,
-        CdcTable.read(spark, pairsDir))
-      if (cLog.isEmpty)
-        CdcTable.append(labels, compDir, partitionBy = Nil,
-          txn = Some((CcAppId, last)))
-      else
-        CdcTable.replaceWith(compDir, labels, partitionBy = Nil,
-          txn = Some((CcAppId, last)))
-      ()
+    CdcTable.syncFeed(spark, pairsDir, compDir, CcAppId) { u =>
+      val cLog = CdcTable.log(compDir)
+      // legacy batch-written components (no mark yet) or a replace in
+      // the unseen range: the stored labels' provenance is unknown /
+      // the feed cannot replay — pay one full relabel of the pairs as
+      // of the marked commit, then mark; so do edges the incremental
+      // fold cannot take
+      if (u.commits.exists(_.action != "append") ||
+          (cLog.nonEmpty && CdcTable.highWater(cLog, CcAppId) < 0) ||
+          !foldEdges(spark, compDir, cLog.isEmpty, u.feed(),
+            driverEdgeLimit, Some(u.txn))) {
+        CdcTable.replaceWith(compDir, connectedComponents(spark,
+          CdcTable.readAsOf(spark, pairsDir, commitAsOf = Some(u.txn._2))),
+          partitionBy = Nil, txn = Some(u.txn))
+        ()
+      }
     }
+  }
 
-    // legacy batch-written components (no mark yet) or a replace in
-    // the unseen range: the stored labels' provenance is unknown /
-    // the feed cannot replay — pay one full relabel, then mark
-    if (range.exists(_.action != "append") ||
-        (cLog.nonEmpty && hw == 0L)) {
-      fullRebuild(); return range.length
-    }
-    val newEdges = CdcTable
-      .readChanges(spark, pairsDir, afterCommit = hw)
+  /** [[syncComponents]]' incremental fold of the unseen pairs
+    * commits' edges (`feed`) into the components at `compDir`
+    * (`fresh` = none stored yet). False, with nothing written, when
+    * the ids are non-integral or the edges exceed the driver bound. */
+  private def foldEdges(spark: SparkSession, compDir: String,
+      fresh: Boolean, feed: DataFrame, driverEdgeLimit: Long,
+      txn: Option[(String, Long)]): Boolean = {
+    import graft.sink.CdcTable
+    val newEdges = feed
       .select(col("a_id").as("u"), col("b_id").as("v"))
       .filter(col("u") =!= col("v")).distinct()
     val integralIds = newEdges.schema.fields.forall(_.dataType match {
@@ -1516,16 +1505,12 @@ object Dedup {
     if (probe.isEmpty) {
       // still stamp the mark (one empty-source merge commit), or every
       // later sync re-reads these commits forever
-      if (cLog.isEmpty) fullRebuild()
-      else CdcTable.merge(spark, compDir, newEdges
+      CdcTable.merge(spark, compDir, newEdges
         .select(col("u").as("id"), col("v").as("component")).limit(0),
-        keys = Seq("id"), partitionBy = Nil,
-        txn = Some((CcAppId, last)))
-      return range.length
+        keys = Seq("id"), partitionBy = Nil, txn = txn)
+      return true
     }
-    if (probe.length > cap || !integralIds) {
-      fullRebuild(); return range.length
-    }
+    if (probe.length > cap || !integralIds) return false
     val idType = newEdges.schema("u").dataType
     val edgeArr = probe.map(r => (r.getLong(0), r.getLong(1)))
     // touched nodes derive on the driver from the collected residue;
@@ -1537,7 +1522,7 @@ object Dedup {
     // stored labels of touched nodes: ONE key-bounded probe — the
     // touched set broadcasts, the components table streams through
     val storedTouched =
-      if (cLog.isEmpty) Array.empty[(Long, Long)]
+      if (fresh) Array.empty[(Long, Long)]
       else CdcTable.read(spark, compDir)
         .select(col("id").cast("long").as("id"),
           col("component").cast("long").as("component"))
@@ -1576,7 +1561,7 @@ object Dedup {
       .diff(storedIds).toSeq.map(n => (n, find(n)))
     import spark.implicits._
     val changedMembers =
-      if (remap.isEmpty || cLog.isEmpty)
+      if (remap.isEmpty)
         spark.emptyDataset[(Long, Long)].toDF("id", "component")
       else CdcTable.read(spark, compDir)
         .select(col("id").cast("long").as("id"),
@@ -1588,13 +1573,9 @@ object Dedup {
       .unionByName(newNodes.toDF("id", "component"))
       .select(col("id").cast(idType).as("id"),
         col("component").cast(idType).as("component"))
-    if (cLog.isEmpty)
-      CdcTable.append(source, compDir, partitionBy = Nil,
-        txn = Some((CcAppId, last)))
-    else
-      CdcTable.merge(spark, compDir, source, keys = Seq("id"),
-        partitionBy = Nil, txn = Some((CcAppId, last)))
-    range.length
+    CdcTable.merge(spark, compDir, source, keys = Seq("id"),
+      partitionBy = Nil, txn = txn)
+    true
   }
 
   /** Read a [[writeNearDupResult]] artifact back as a

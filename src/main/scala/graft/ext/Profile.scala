@@ -187,7 +187,7 @@ object Profile {
 
   /** Maintain a profile index FROM a live graft table's commit log —
     * the O(changed commits) refresh: reads ONLY the table commits the
-    * index has not yet folded in ([[graft.sink.CdcTable.readChanges]]
+    * index has not yet folded in ([[graft.sink.CdcTable.syncFeed]]
     * above the index's high-water mark, tracked by a txn marker keyed
     * to the table) and lands ONE partial append for the whole range,
     * so a `GRAFT PROFILE INDEX` of a 100 TB table stays exact while a
@@ -201,13 +201,6 @@ object Profile {
       tableDir: String, indexDir: String, cols: Seq[String],
       k: Option[Int] = None): Int = {
     import graft.sink.CdcTable
-    val commits = CdcTable.log(tableDir)
-    require(commits.nonEmpty, s"no CdcTable at $tableDir")
-    // canonicalize the path: the high-water marker is keyed on the
-    // table's identity, and the same table synced via a different
-    // SPELLING (trailing slash, relative path) must not reset the
-    // mark and double-fold every commit
-    val appId = s"profile@${canonicalDir(tableDir)}"
     val idxLog = CdcTable.log(indexDir)
     // an EXISTING index serves its creation-time k from the sidecar —
     // k = None adopts it (the kmvJaccardTable principle: derive,
@@ -219,8 +212,6 @@ object Profile {
       s"profile index at $indexDir was created with k=$useK but " +
         s"this sync explicitly asked k=$req — recreate the index to " +
         "change its sketch width"))
-    val hw = idxLog.flatMap(_.txn)
-      .filter(_._1 == appId).map(_._2).maxOption.getOrElse(0L)
     if (idxLog.nonEmpty) {
       // the creation-time pinned set lives in the sidecar (zero IO)
       val stored = IndexMeta.stored(indexDir).flatMap(_.get("profile_cols"))
@@ -232,29 +223,18 @@ object Profile {
           s"but sync asked for ${cols.mkString(",")} — partial-column " +
           "history would undercount; recreate the index")
     }
-    val range = commits.filter(_.commit > hw)
-    if (range.isEmpty) return 0
-    val nonAppend = range.filter(_.action != "append")
-    require(nonAppend.isEmpty,
-      s"profileSync: non-append commit(s) " +
-        s"${nonAppend.map(c => s"${c.commit}:${c.action}").mkString(",")} " +
-        s"at $tableDir — partials cannot subtract; recreate the index " +
-        "from the table's current state")
-    val batch = CdcTable.readChanges(spark, tableDir, afterCommit = hw)
-      .drop("_commit", "_commit_ts", "_change_type")
-    profileAppend(batch, indexDir, cols, useK,
-      txn = Some((appId, range.last.commit)))
-    range.length
+    CdcTable.syncFeed(spark, tableDir, indexDir,
+      s"profile@${CdcTable.canonicalDir(tableDir)}") { u =>
+      val nonAppend = u.commits.filter(_.action != "append")
+      require(nonAppend.isEmpty,
+        s"profileSync: non-append commit(s) " +
+          s"${nonAppend.map(c => s"${c.commit}:${c.action}").mkString(",")} " +
+          s"at $tableDir — partials cannot subtract; recreate the index " +
+          "from the table's current state")
+      profileAppend(u.feed().drop("_commit", "_commit_ts", "_change_type"),
+        indexDir, cols, useK, txn = Some(u.txn))
+    }
   }
-
-  /** One canonical spelling per table path, for identity-keyed txn
-    * markers: URI-style paths normalize through Hadoop Path (strips
-    * trailing slashes, collapses //); bare local paths additionally
-    * absolutize so `./t`, `t` and `/cwd/t` all key the same mark. */
-  private[graft] def canonicalDir(dir: String): String =
-    if (dir.contains("://"))
-      new org.apache.hadoop.fs.Path(dir).toString
-    else java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
 
   /** The table's k, pinned at creation in the sidecar. */
   private[graft] def storedProfileK(tableDir: String): Int =
@@ -302,7 +282,7 @@ object Profile {
     require(cols.forall(c => !c.contains(",")),
       s"profile column names must be comma-free: ${cols.mkString("|")}")
     val commits = CdcTable.commitsAsOf(tableDir)
-    val canon = canonicalDir(tableDir)
+    val canon = CdcTable.canonicalDir(tableDir)
     val meta = IndexMeta.ensureRaw(indexDir,
       Map("profile_k" -> k.getOrElse(256).toString,
         "profile_cols" -> cols.sorted.mkString(","),
@@ -338,8 +318,7 @@ object Profile {
     // driver-side, bounded by the sync delta)
     val appId = s"profilefiles@$canon"
     val idxLog = CdcTable.log(indexDir)
-    val hw = idxLog.flatMap(_.txn).filter(_._1 == appId).map(_._2)
-      .maxOption.getOrElse(0L)
+    val hw = CdcTable.highWater(idxLog, appId)
     val live = commits.flatMap(_.files).toSet
     val candidates = commits.filter(_.commit > hw)
       .flatMap(_.files).distinct.filter(live)

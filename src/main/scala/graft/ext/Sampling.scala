@@ -567,20 +567,16 @@ object Sampling {
     import graft.sink.CdcTable
     val spark = batch.sparkSession
     val top = weightedSampleK(batch, keyCol, weightCol, k)
-    if (CdcTable.log(stateDir).isEmpty) {
-      CdcTable.append(top, stateDir, partitionBy = Nil, txn = txn)
-      ()
-    } else {
-      val merged = CdcTable.read(spark, stateDir)
+    val merged =
+      if (CdcTable.log(stateDir).isEmpty) top
+      else CdcTable.read(spark, stateDir)
         .select(col(s"`$keyCol`"), col(s"`$weightCol`"), col("ares_fp"))
         .unionByName(top)
         .orderBy(col("ares_fp").asc,
           expr(s"md5(CAST(`$keyCol` AS STRING))").asc,
           col(s"`$keyCol`").asc)
         .limit(k)
-      CdcTable.replaceWith(stateDir, merged,
-        partitionBy = Nil, txn = txn)
-      ()
-    }
+    CdcTable.replaceWith(stateDir, merged, partitionBy = Nil, txn = txn)
+    ()
   }
 }

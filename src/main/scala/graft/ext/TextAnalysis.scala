@@ -1460,7 +1460,7 @@ object TextAnalysis {
     * consumer the round-16 change feed exists for: before it, an LM
     * maintained from an append-only tail silently kept the n-grams of
     * every right-to-be-forgotten document. Each sync reads only the
-    * unseen commits' change rows ([[graft.sink.CdcTable.readChanges]]
+    * unseen commits' change rows ([[graft.sink.CdcTable.syncFeed]]
     * above the high-water txn marker, O(changed rows) never
     * O(corpus)): inserted/post-update text ADDS its n-gram counts,
     * deleted/pre-update text appends NEGATED counts — counts are
@@ -1473,19 +1473,12 @@ object TextAnalysis {
   def lmCountsCdfSync(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, lmDir: String, textCol: String = "text"): Int = {
     import graft.sink.CdcTable
-    val commits = CdcTable.log(tableDir)
-    require(commits.nonEmpty, s"no CdcTable at $tableDir")
-    val appId = s"lmcdf@${graft.ext.Profile.canonicalDir(tableDir)}"
-    val lmLog = CdcTable.log(lmDir)
-    val hw = lmLog.flatMap(_.txn)
-      .filter(_._1 == appId).map(_._2).maxOption.getOrElse(0L)
-    val range = commits.filter(_.commit > hw)
-    if (range.isEmpty) return 0
-    val feed = CdcTable.readChanges(spark, tableDir, afterCommit = hw,
-      upToCommit = Some(range.last.commit))
-    graft.sink.CdcTable.append(lmSignedCounts(feed, textCol), lmDir,
-      partitionBy = Nil, txn = Some((appId, range.last.commit)))
-    range.length
+    CdcTable.syncFeed(spark, tableDir, lmDir,
+      s"lmcdf@${CdcTable.canonicalDir(tableDir)}") { u =>
+      CdcTable.append(lmSignedCounts(u.feed(), textCol), lmDir,
+        partitionBy = Nil, txn = Some(u.txn))
+      ()
+    }
   }
 
   /** One change-feed batch's signed LM count partials: every change

@@ -419,13 +419,10 @@ object EventsQ {
         ev.join(broadcast(seeds), Seq("user_id"), "left")
       } else nullSeeds(ev)
     val folded = funnelChain(seeded, horizonUs)
-    // first fold CREATES the state table; later folds keyed-MERGE
-    // (both paths honor the txn high-water mark for replays)
-    if (CdcTable.log(stateDir).isEmpty)
-      CdcTable.append(folded, stateDir, partitionBy = Nil, txn = txn)
-    else
-      CdcTable.merge(spark, stateDir, folded, Seq("user_id"),
-        partitionBy = Nil, txn = txn)
+    // the first fold's MERGE creates the state table; the txn
+    // high-water mark skips replays
+    CdcTable.merge(spark, stateDir, folded, Seq("user_id"),
+      partitionBy = Nil, txn = txn)
     ()
   }
 

@@ -48,9 +48,8 @@ object StreamQ {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, _: Long) =>
         // complete mode re-emits the whole aggregate: replace, don't
-        // accumulate (first trigger creates the table)
-        if (CdcTable.log(out).isEmpty) CdcTable.append(b, out)
-        else CdcTable.replaceWith(out, b)
+        // accumulate (the first trigger's replace creates the table)
+        CdcTable.replaceWith(out, b)
         ()
       }
       .start()

@@ -47,6 +47,22 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *      is a replay and skips ([[replayed]]);
   *   4. COMMIT: one atomically-created manifest ([[commit]]).
   *
+  * Every table DERIVED from another table's commits (LM counts, change
+  * aggregates, profile indexes, connected components, funnel state)
+  * keeps one exactly-once protocol on top of that:
+  *   - its source position is an `(appId, version)` txn marker on its
+  *     own commits; the largest version of an appId is its high water
+  *     ([[highWater]]), the one definition of "seen" behind both
+  *     replay skips and syncs;
+  *   - a change-feed sync ([[syncFeed]]) folds exactly the source
+  *     commits above the high water, reading the feed bounded to the
+  *     last of them and marking that same commit, so a commit landing
+  *     mid-sync is left for the next sync instead of folded twice;
+  *   - [[replaceWith]] and [[merge]] treat a missing table as empty:
+  *     the first commit is the manifest [[append]] writes, validated
+  *     against an empty tail, so a derived table needs no
+  *     create-or-rewrite branch.
+  *
   * Schema generations: every commit records its full schema and a
   * schema version `sv`; widening changes (int64→double …) bump `sv`
   * instead of mixing parquet physical types in one scan — Spark's
@@ -1103,14 +1119,53 @@ object CdcTable {
         s"landed mid-$op; rerun over the new snapshot (nothing was lost)")
   }
 
+  /** The largest txn version `appId` has committed in `commits`, or −1
+    * when it has none (versions are foreachBatch ids or source commit
+    * ids, both ≥ 0). */
+  private[graft] def highWater(commits: Seq[Commit], appId: String): Long =
+    commits.flatMap(_.txn).filter(_._1 == appId).map(_._2)
+      .maxOption.getOrElse(-1L)
+
   /** The txn high-water check: a write carrying `(appId, v)` is a
-    * replay when the log already holds a commit of that appId at a
-    * version ≥ v — the foreachBatch exactly-once pattern (Delta's
-    * txnAppId/txnVersion). */
+    * replay when the log's high water for that appId is ≥ v — the
+    * foreachBatch exactly-once pattern (Delta's txnAppId/txnVersion). */
   private def replayed(commits: Seq[Commit],
       txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (app, v) =>
-      commits.exists(_.txn.exists(t => t._1 == app && t._2 >= v)) }
+    txn.exists { case (app, v) => highWater(commits, app) >= v }
+
+  /** One spelling per table path, for the identity-keyed appIds of
+    * derived tables: URI-style paths normalize through Hadoop Path
+    * (strips trailing slashes, collapses //); bare local paths also
+    * absolutize, so `./t`, `t` and `/cwd/t` key the same mark and a
+    * re-spelled path never resets it. */
+  private[graft] def canonicalDir(dir: String): String =
+    if (dir.contains("://"))
+      new org.apache.hadoop.fs.Path(dir).toString
+    else java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+
+  /** The source commits a [[syncFeed]] has not folded yet, the `txn`
+    * that marks them folded, and their change feed — [[readChanges]]
+    * bounded to exactly those commits, read only when called. */
+  private[graft] final case class Unseen(commits: Seq[Commit],
+      txn: (String, Long), feed: () => DataFrame)
+
+  /** The change-feed sync every derived table runs: reads `sourceDir`'s
+    * log once, finds the commits above `targetDir`'s high water for
+    * `appId`, and hands them to `fold`, which writes `targetDir` under
+    * the given txn. Returns the number of source commits folded (0 =
+    * the target is fresh). */
+  private[graft] def syncFeed(spark: SparkSession, sourceDir: String,
+      targetDir: String, appId: String)(fold: Unseen => Unit): Int = {
+    val commits = log(sourceDir)
+    require(commits.nonEmpty, s"no CdcTable at $sourceDir")
+    val hw = highWater(log(targetDir), appId)
+    val unseen = commits.filter(_.commit > hw)
+    if (unseen.isEmpty) return 0
+    val upTo = unseen.last.commit
+    fold(Unseen(unseen, (appId, upTo),
+      () => readChanges(spark, sourceDir, hw, Some(upTo))))
+    unseen.length
+  }
 
   /** Data files with their per-file manifest entries — the unit the
     * write paths stage, carry and commit. */
@@ -1207,6 +1262,18 @@ object CdcTable {
       bloomCols: Seq[String] = Nil): Long = {
     val commits = log(dir)
     if (replayed(commits, txn)) return commits.last.schemaVersion
+    appendOnto(commits, batch, dir, partitionBy, txn, mode,
+      maxStructFields, bloomCols).schemaVersion
+  }
+
+  /** [[append]]'s stage-and-commit onto the log `commits`; `validate`
+    * is the tail check of a table-creating [[replaceWith]] or
+    * [[merge]]. Returns the committed manifest. */
+  private def appendOnto(commits: Seq[Commit], batch: DataFrame,
+      dir: String, partitionBy: Seq[String], txn: Option[(String, Long)],
+      mode: MergeMode = SchemaMerge.Auto,
+      maxStructFields: Int = Int.MaxValue, bloomCols: Seq[String] = Nil,
+      validate: Seq[Commit] => Unit = _ => ()): Commit = {
     val existing = commits.lastOption.map(_.schema)
     // incoming metadata never reaches the manifest (stripFieldMeta):
     // only the ADD GENERATED DDL may install engine markers
@@ -1232,8 +1299,7 @@ object CdcTable {
     val blooms = collectBlooms(out.sparkSession, dir, staged.files,
       bloomCols, merged, partCols)
     commit(dir, n => manifest(n, sv, "append", txn, merged,
-      staged.copy(blooms = blooms)))
-    sv
+      staged.copy(blooms = blooms)), validate)
   }
 
   /** Build the per-file Bloom filters an append requested: one
@@ -2005,7 +2071,9 @@ object CdcTable {
     * only files holding matched keys rewrite (their unmatched rows
     * survive, matched rows drop via LEFT ANTI) and the whole source
     * lands as fresh files. Source keys must be unique per key tuple (duplicates would all
-    * insert). */
+    * insert). A missing table merges as empty: the source becomes its
+    * first commit, exactly [[append]]'s manifest, and a racing creator
+    * fails with ConcurrentModificationException. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String],
       partitionBy: Seq[String] = Seq("_ingestion_date"),
@@ -2278,7 +2346,8 @@ object CdcTable {
     * incremental maintainers (e.g. [[graft.ext.Dedup.syncComponents]])
     * use to remember which upstream commit a keyed upsert has folded
     * in. Matching nothing still compacts stale generations and
-    * layouts. */
+    * layouts. A MERGE into a missing table appends the source as the
+    * table's first commit. */
   private def keyedRewrite(spark: SparkSession, dir: String,
       source: DataFrame, keys: Seq[String], partitionBy: Seq[String],
       evolveSchema: Boolean, insert: Boolean, op: String,
@@ -2286,6 +2355,13 @@ object CdcTable {
     import org.apache.spark.sql.functions.{col, lit}
     require(keys.nonEmpty, s"$op needs at least one key column")
     val commits = log(dir)
+    if (commits.isEmpty && insert) {
+      keys.foreach(k => require(source.schema.fieldNames.contains(k),
+        s"$op key $k not in the source schema"))
+      val c = appendOnto(commits, source, dir, partitionBy, txn,
+        validate = atTail(op, dir, 0L))
+      return DeleteResult(0L, c.files.size, 0L, c.commit)
+    }
     require(commits.nonEmpty, s"no CdcTable at $dir")
     if (replayed(commits, txn)) return unchanged(commits)
     val tableSchema = commits.last.schema
@@ -2512,13 +2588,19 @@ object CdcTable {
     * per-generation scan would mix partitioned and flat files.
     * `expectedLastCommit` is the snapshot `df` was computed from
     * (default: the current tail); `txn` makes the rewrite idempotent,
-    * like [[append]]. */
+    * like [[append]]. A missing table rewrites as empty: `df` becomes
+    * its first commit, exactly [[append]]'s manifest, validated
+    * against an empty tail — a racing creator, or an
+    * `expectedLastCommit` the missing table never had, fails with
+    * ConcurrentModificationException. */
   def replaceWith(dir: String, df: DataFrame,
       partitionBy: Seq[String] = Seq("_ingestion_date"),
       expectedLastCommit: Option[Long] = None,
       txn: Option[(String, Long)] = None): Long = {
     val commits = log(dir)
-    require(commits.nonEmpty, s"no CdcTable at $dir")
+    if (commits.isEmpty) return appendOnto(commits, df, dir, partitionBy,
+      txn, validate = atTail("replace", dir,
+        expectedLastCommit.getOrElse(0L))).schemaVersion
     if (replayed(commits, txn)) return commits.last.schemaVersion
     val schema = commits.last.schema
     val nv = commits.last.schemaVersion + 1

@@ -187,6 +187,35 @@ class ProfileSpec extends SparkSpec {
     assert(n == 100L, s"double-folded: n_rows = $n")
   }
 
+  test("a sync reads the feed only up to the commit it marks — a " +
+      "commit landing mid-sync folds once, in the next sync") {
+    import graft.sink.CdcTable
+    val tbl = tmpDir("profmid")
+    val idx = tmpDir("profmididx")
+    def batch(lo: Int, hi: Int) =
+      (lo until hi).map(i => (i.toLong, s"v$i")).toDF("id", "s")
+    CdcTable.append(batch(0, 10), tbl, partitionBy = Nil)
+    val appId = s"profile@${CdcTable.canonicalDir(tbl)}"
+    var marked = ("", 0L)
+    var fed = Seq.empty[Long]
+    val folded = CdcTable.syncFeed(spark, tbl, idx, appId) { u =>
+      // a writer lands commit 2 between the log read and the feed read
+      CdcTable.append(batch(10, 15), tbl, partitionBy = Nil)
+      val feed = u.feed().drop("_commit", "_commit_ts", "_change_type")
+      fed = feed.select($"id").as[Long].collect().toSeq.sorted
+      marked = u.txn
+      Profile.profileAppend(feed, idx, Seq("id", "s"), txn = Some(u.txn))
+    }
+    assert(folded == 1 && marked == ((appId, 1L)))
+    assert(fed == (0L until 10L), s"the feed read past its mark: $fed")
+    assert(Profile.profileSync(spark, tbl, idx, Seq("id", "s")) == 1,
+      "the next sync folds the mid-sync commit")
+    assert(Profile.profileSync(spark, tbl, idx, Seq("id", "s")) == 0)
+    val n = Profile.profileRead(spark, idx)
+      .filter($"column" === "id").select($"n_rows").as[Long].head()
+    assert(n == CdcTable.read(spark, tbl).count(), s"n_rows = $n")
+  }
+
   test("file-keyed profile: DML delete + sync ≡ recreate from current " +
       "state, time travel serves past snapshots, stale reads are loud") {
     import graft.sink.CdcTable
